@@ -39,7 +39,7 @@ from lumbermill_spark.data.synth import synth_tokens  # noqa: E402
 from lumbermill_spark.operators import field_actions  # noqa: E402
 from lumbermill_spark.operators.regex_parser import RegexParser  # noqa: E402
 from lumbermill_spark.pipelines_builtin import ACCESS_RULES, HTTP_STATUS_MAP  # noqa: E402
-from lumbermill_spark.router import SinkSpec, route_tag  # noqa: E402
+from lumbermill_spark.router import SinkSpec, route_and_write, route_tag  # noqa: E402
 from lumbermill_spark.session import get_spark  # noqa: E402
 
 TOKEN_PATH = "/tmp/lms_bench/tokens"
@@ -115,10 +115,11 @@ def flagship_once(spark) -> dict:
 
 
 def write_pipeline_once(spark) -> dict:
-    """Full write path: parse → enrich → 3-way routed parquet sinks with
-    per-sink observe metrics + checkpoint commit rows (router.py). The
-    persisted-parent fan-out variant — complements the aggregate-only
-    flagship number."""
+    """Full write path: parse → enrich → 3-way routed parquet write with
+    observe metrics, lineage and a checkpoint commit row (router.py).
+    The single-pass form: route_tag, then one partitionBy(sink) sink
+    through route_and_write — complements the aggregate-only flagship
+    number."""
     import shutil
 
     base = "/tmp/lms_bench/sinks"
@@ -135,13 +136,11 @@ def write_pipeline_once(spark) -> dict:
         SinkSpec("firewall", F.col("event_type") == "iptables_log"),
         SinkSpec("unmatched", None),
     ]
-    from lumbermill_spark.router import route_and_write_tagged
-
-    res = route_and_write_tagged(enriched, sinks, base, run_id="bench")
+    res = route_and_write(route_tag(enriched, sinks),
+                          [SinkSpec("routed", partition_by=["sink"])],
+                          base, run_id="bench")["routed"]
     secs = time.time() - t0
-    n_seq = sum(v.get("rows", 0) for k, v in res.items() if k != "_secs")
-    n_tok = sum((v.get("tokens") or 0) for k, v in res.items() if k != "_secs")
-    return {"secs": secs, "n_seq": n_seq, "n_tok": n_tok}
+    return {"secs": secs, "n_seq": res["rows"], "n_tok": res["tokens"] or 0}
 
 
 def main() -> None:

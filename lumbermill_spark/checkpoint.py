@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lumbermill_spark.functions.fsutil import fs_exists
+
 CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
     T.StructField("stage", T.StringType()),
@@ -82,11 +84,18 @@ def commit(spark: SparkSession, base: str, run_id: str, stage: str, sink: str,
         .write.mode("append").parquet(_ckpt_path(base)))
 
 
+def has_checkpoints(spark: SparkSession, base: str) -> bool:
+    """Whether the checkpoint table exists. Readers treat ONLY its
+    absence as "nothing committed"; every other read error propagates,
+    so a damaged table can never make a resume redo (and duplicate) work
+    or a merge drop the sink's history."""
+    return fs_exists(spark, _ckpt_path(base))
+
+
 def committed_sinks(spark: SparkSession, base: str, run_id: str) -> set[str]:
-    try:
-        df = spark.read.parquet(_ckpt_path(base))
-    except Exception:
+    if not has_checkpoints(spark, base):
         return set()
+    df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(_ckpt_path(base))
     return {
         r["sink"] for r in
         df.filter(F.col("run_id") == run_id).select("sink").distinct().collect()
@@ -94,4 +103,4 @@ def committed_sinks(spark: SparkSession, base: str, run_id: str) -> set[str]:
 
 
 def read_checkpoints(spark: SparkSession, base: str) -> DataFrame:
-    return spark.read.parquet(_ckpt_path(base))
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(_ckpt_path(base))

@@ -1,8 +1,8 @@
 """Filesystem-agnostic small-file helpers over the Hadoop FS API —
 one shared implementation of the Path/getFileSystem dance (works for
 file://, hdfs://, s3a:// — wherever sinks and checkpoints live), used
-by the router's snapshot probe and the streaming checkpoint-namespace
-marker."""
+by the checkpoint-table and router snapshot probes and the streaming
+checkpoint-namespace marker."""
 
 from __future__ import annotations
 

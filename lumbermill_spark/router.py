@@ -7,15 +7,17 @@ counts events per event_type per interval (misc/SimpleStats.py:213-220).
 
 Spark design decisions (SURVEY.md §4):
 
-- the routed parent is persisted ONCE before branching so overlapping
-  sink filters don't recompute the parse stage per sink (the reference
-  equivalent: events are routed, not cloned, unless two receivers both
-  match — BaseModule.py:244-253 clones; we never need to);
+- one writer, ``route_and_write``, serves batch runs, the compiled
+  pipeline and every streaming micro-batch;
+- the routed parent is persisted ONCE whenever more than one sink
+  writes, so the sinks don't recompute the parse stage per sink (the
+  reference equivalent: events are routed, not cloned, unless two
+  receivers both match — BaseModule.py:244-253 clones; we never need to);
 - per-sink counts and sum(n_tok) are collected with ``df.observe`` on
   the SAME pass that writes the sink — zero extra scans for metrics;
 - per-partition lineage is a small extra agg over the persisted parent;
-- sink writes are idempotent overwrites; a checkpoint commit row per
-  sink makes a killed run resumable (see checkpoint.py);
+- a checkpoint commit row per sink makes a killed run resumable (see
+  checkpoint.py);
 - dynamic sink paths ("index-%Y.%m.%d-$(event_type)" in the reference,
   output/ElasticSearch.py:172) become partition columns — the scalable
   equivalent of per-value file paths.
@@ -33,6 +35,7 @@ from pyspark.sql import functions as F
 
 from lumbermill_spark import checkpoint as ckpt
 from lumbermill_spark.functions.filters import filter_to_column
+from lumbermill_spark.functions.fsutil import fs_exists
 
 
 @dataclass
@@ -42,7 +45,8 @@ class SinkSpec:
 
     name: str
     filter: str | Column | None = None
-    path: str | None = None              # None -> DevNull (metrics only)
+    path: str | None = None              # None -> {base}/{name}
+    # format="noop" is output.DevNull: run the plan, keep nothing
     format: str = "parquet"
     partition_by: list[str] = dfield(default_factory=list)
     columns: list[str] | None = None     # projection before write
@@ -96,7 +100,12 @@ def route_tag(df: DataFrame, sinks: list[SinkSpec],
     projections/aggregates by substitution — re-inlining every rule
     regex of a RegexParser upstream into the pushed filter, evaluated
     per ROW (measured ~6 rlikes/row on the 3-rule flagship; the
-    catch-all form keeps each rlike at exactly one evaluation)."""
+    catch-all form keeps each rlike at exactly one evaluation).
+
+    Single-pass routed WRITE: ``route_and_write(route_tag(df, sinks),
+    [SinkSpec("routed", partition_by=["sink"])], base)`` scans and
+    writes the data once whatever the sink count; each sink's rows land
+    under ``{base}/routed/sink=<name>``."""
     chain = None
     exhaustive = False
     for s in sinks:
@@ -113,13 +122,6 @@ def route_tag(df: DataFrame, sinks: list[SinkSpec],
     return out
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence probe (shared Hadoop FS helper)."""
-    from lumbermill_spark.functions.fsutil import fs_exists
-
-    return fs_exists(spark, path)
-
-
 def merge_snapshot_path(spark: SparkSession, base: str, sink: str,
                         sink_path: str | None = None) -> str | None:
     """Latest COMMITTED merge snapshot dir for ``sink`` (None before the
@@ -130,16 +132,18 @@ def merge_snapshot_path(spark: SparkSession, base: str, sink: str,
     snapshot pointer; with the Iceberg runtime the table's own current
     snapshot plays this role and the merge becomes MERGE INTO)."""
     root = sink_path or f"{base.rstrip('/')}/{sink}"
-    try:
-        ck = ckpt.read_checkpoints(spark, base)
-    except Exception:
+    # only an ABSENT checkpoint table means "nothing committed": a
+    # damaged one must raise, or a merge would commit a snapshot without
+    # the sink's history
+    if not ckpt.has_checkpoints(spark, base):
         return None
-    rows = (ck.filter(F.col("sink") == sink)
+    rows = (ckpt.read_checkpoints(spark, base)
+            .filter(F.col("sink") == sink)
             .orderBy(F.col("committed_at").desc())
             .select("run_id").collect())
     for r in rows:
         p = f"{root}/snap={r['run_id']}"
-        if _fs_exists(spark, p):
+        if fs_exists(spark, p):
             return p
     return None
 
@@ -162,204 +166,129 @@ def route_and_write(
     stage: str = "route",
     token_col: str | None = "n_tok",
     resume: bool = False,
-    with_lineage: bool = True,
-    persist_level: StorageLevel | None = StorageLevel.DISK_ONLY,
 ) -> dict:
     """Write every sink branch, collect per-sink metrics in-pass, commit
     checkpoint rows. Returns {sink: {rows, tokens, skipped, path, secs}}.
 
     resume=True skips sinks already committed for this run_id.
-    The multi-sink parent persist defaults to DISK_ONLY: at corpus
-    scale a MEMORY_AND_DISK cache of the full routed parent is a spill
-    storm (executors evict under memory pressure mid-write), while
-    DISK_ONLY is a predictable sequential spill. Pass
-    ``persist_level=None`` to skip caching entirely and let each sink
-    recompute with filter/column pushdown — the right call when sink
-    predicates are selective enough that N pushdown scans are cheaper
-    than one full materialization (or use route_and_write_tagged for
-    the disjoint single-pass form).
+    Whenever more than one sink writes, the parent is persisted once
+    (DISK_ONLY) so neither the sink writes nor their lineage passes
+    recompute the upstream plan: at corpus scale a MEMORY_AND_DISK
+    cache of the full routed parent is a spill storm (executors evict
+    under memory pressure mid-write), while DISK_ONLY is a predictable
+    sequential spill. For disjoint sinks, the single-pass form is
+    route_tag plus one partition_by=["sink"] spec (see route_tag).
     """
     spark = df.sparkSession
     if run_id is None:
         run_id = uuid.uuid4().hex[:12]
     done = ckpt.committed_sinks(spark, base, run_id) if resume else set()
 
-    multi = len([s for s in sinks if s.path]) > 1 and persist_level is not None
-    if multi:
-        df = df.persist(persist_level)
-
+    shared = len([s for s in sinks if s.name not in done]) > 1
+    if shared:
+        df = df.persist(StorageLevel.DISK_ONLY)
     results: dict[str, dict] = {}
-    for spec in sinks:
-        path = f"{base.rstrip('/')}/{spec.name}" if spec.path is None else spec.path
-        if spec.name in done:
-            results[spec.name] = {"skipped": True, "path": path}
-            continue
-        branch = df if spec.predicate() is None else df.filter(spec.predicate())
-        if spec.columns:
-            keep = [c for c in spec.columns if c in branch.columns]
-            branch = branch.select(*keep)
-        if spec.line_format:
-            from lumbermill_spark.functions.dynamic import dynamic_value_col
-
-            keep_parts = spec.partition_by or []
-            branch = branch.select(
-                dynamic_value_col(spec.line_format, branch.columns)
-                .alias("value"),
-                *[F.col(c) for c in keep_parts],
-            )
-
-        if spec.mode == "merge":
-            # SCD-1 merge into the sink's latest committed snapshot
-            # (ES 'update' action analog). The merged result is written
-            # to a NEW snapshot dir keyed by run_id — rewriting the dir
-            # being read is never safe, and the commit row below is
-            # what makes the new snapshot current. Idempotent on retry
-            # (same run_id -> same dir, mode=overwrite); resume skips
-            # via the committed-sinks check above.
-            if not spec.merge_key or not spec.merge_version:
-                raise ValueError(
-                    f"sink {spec.name!r}: mode='merge' requires "
-                    "merge_key and merge_version")
-            if spec.format == "noop":
-                raise ValueError(
-                    f"sink {spec.name!r}: mode='merge' needs a "
-                    "persistent snapshot (format='noop' writes nothing "
-                    "for the next increment to merge onto)")
-            from lumbermill_spark.operators.stateful import upsert_latest
-
-            prev = merge_snapshot_path(spark, base, spec.name, spec.path)
-            existing = (spark.read.format(spec.format).load(prev)
-                        if prev is not None
-                        else spark.createDataFrame([], branch.schema))
-            branch = upsert_latest(existing, branch,
-                                   spec.merge_key, spec.merge_version)
-            # persist around write+lineage: the merged frame feeds BOTH
-            # (the prev-snapshot read + upsert shuffle must not run
-            # twice), and lineage stays write-side partitioned (a
-            # read-back of the snapshot would report reader-conf-
-            # dependent split counts instead of the written layout)
-            branch = branch.persist(StorageLevel.DISK_ONLY)
-            merge_persisted = branch
-            path = f"{path}/snap={run_id}"
-        else:
-            merge_persisted = None
-
-        has_tok = token_col and token_col in branch.columns
-        obs = Observation(f"{run_id}-{spec.name}")
-        metrics_exprs = [F.count(F.lit(1)).alias("rows")]
-        if has_tok:
-            metrics_exprs.append(F.sum(token_col).cast("long").alias("tokens"))
-        observed = branch.observe(obs, *metrics_exprs)
-
-        t0 = time.time()
-        if spec.path is None and spec.format == "noop":
-            # DevNull (output/DevNull.py:19-20): run the plan, keep nothing
-            observed.write.format("noop").mode("overwrite").save()
-        else:
-            write_mode = "overwrite" if spec.mode == "merge" else spec.mode
-            writer = observed.write.mode(write_mode)
-            if spec.compression:
-                writer = writer.option("compression", spec.compression)
-            if spec.partition_by:
-                writer = writer.partitionBy(*spec.partition_by)
-            writer.format(spec.format).save(path)
-        secs = time.time() - t0
-
-        got = obs.get
-        rows = int(got.get("rows", 0))
-        tokens = int(got["tokens"]) if has_tok and got.get("tokens") is not None else None
-        lineage = (ckpt.partition_lineage(branch, token_col)
-                   if with_lineage and rows > 0 else [])
-        if merge_persisted is not None:
-            merge_persisted.unpersist()
-        ckpt.commit(spark, base, run_id, stage, spec.name, rows, tokens, lineage)
-        results[spec.name] = {
-            "skipped": False, "path": path, "rows": rows,
-            "tokens": tokens, "secs": round(secs, 3),
-            "n_partitions": len(lineage),
-        }
-    if multi:
-        df.unpersist()
+    try:
+        for spec in sinks:
+            path = spec.path or f"{base.rstrip('/')}/{spec.name}"
+            results[spec.name] = (
+                {"skipped": True, "path": path} if spec.name in done
+                else _write_sink(df, spec, path, base, run_id, stage,
+                                 token_col))
+    finally:
+        if shared:
+            df.unpersist()
     return results
 
 
-def route_and_write_tagged(
-    df: DataFrame,
-    sinks: list[SinkSpec],
-    base: str,
-    run_id: str | None = None,
-    stage: str = "route",
-    token_col: str | None = "n_tok",
-) -> dict:
-    """Single-pass routed write for DISJOINT sinks: tag rows with their
-    sink (first-match) and write ONCE with partitionBy(sink) — the data
-    is scanned and written exactly once regardless of sink count,
-    versus one filtered pass per sink in route_and_write (which remains
-    the general form for overlapping predicates / per-sink formats).
-
-    Per-sink counts/tokens come from a follow-up aggregate over the
-    written table — a column-pruned scan of one small int column, not a
-    recompute of the pipeline. Checkpoint commit rows are written per
-    sink, so resume/stats interop matches route_and_write.
-    Returns {sink: {rows, tokens, path}, "_secs": ...}.
-
-    The single-pass writer honors only name+filter: every sink lands as
-    parquet under {base}/routed/sink=<name>. Specs carrying per-sink
-    path/format/columns/line_format/compression settings are REJECTED
-    (ValueError) rather than silently ignored — callers with configured
-    sinks belong on route_and_write.
-    """
-    for s in sinks:
-        custom = {
-            "path": s.path, "columns": s.columns,
-            "line_format": s.line_format, "compression": s.compression,
-            "format": None if s.format == "parquet" else s.format,
-            "partition_by": s.partition_by or None,
-            "mode": None if s.mode == "overwrite" else s.mode,
-            "merge_key": s.merge_key, "merge_version": s.merge_version,
-        }
-        set_opts = [k for k, v in custom.items() if v is not None]
-        if set_opts:
-            raise ValueError(
-                f"route_and_write_tagged cannot honor per-sink settings "
-                f"{set_opts} on sink {s.name!r}; use route_and_write for "
-                "configured sinks"
-            )
+def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
+                run_id: str, stage: str, token_col: str | None) -> dict:
+    """One sink of route_and_write: filter, write with in-pass metrics,
+    lineage, commit row."""
     spark = df.sparkSession
-    if run_id is None:
-        run_id = uuid.uuid4().hex[:12]
-    path = f"{base.rstrip('/')}/routed"
+    branch = df if spec.predicate() is None else df.filter(spec.predicate())
+    if spec.columns:
+        keep = [c for c in spec.columns if c in branch.columns]
+        branch = branch.select(*keep)
+    if spec.line_format:
+        from lumbermill_spark.functions.dynamic import dynamic_value_col
+
+        keep_parts = spec.partition_by or []
+        branch = branch.select(
+            dynamic_value_col(spec.line_format, branch.columns)
+            .alias("value"),
+            *[F.col(c) for c in keep_parts],
+        )
+
+    if spec.mode == "merge":
+        # SCD-1 merge into the sink's latest committed snapshot
+        # (ES 'update' action analog). The merged result is written
+        # to a NEW snapshot dir keyed by run_id — rewriting the dir
+        # being read is never safe, and the commit row below is
+        # what makes the new snapshot current. Idempotent on retry
+        # (same run_id -> same dir, mode=overwrite); resume skips
+        # via the committed-sinks check in route_and_write.
+        if not spec.merge_key or not spec.merge_version:
+            raise ValueError(
+                f"sink {spec.name!r}: mode='merge' requires "
+                "merge_key and merge_version")
+        if spec.format == "noop":
+            raise ValueError(
+                f"sink {spec.name!r}: mode='merge' needs a "
+                "persistent snapshot (format='noop' writes nothing "
+                "for the next increment to merge onto)")
+        from lumbermill_spark.operators.stateful import upsert_latest
+
+        prev = merge_snapshot_path(spark, base, spec.name, spec.path)
+        existing = (spark.read.format(spec.format).load(prev)
+                    if prev is not None
+                    else spark.createDataFrame([], branch.schema))
+        branch = upsert_latest(existing, branch,
+                               spec.merge_key, spec.merge_version)
+        # persist around write+lineage: the merged frame feeds BOTH
+        # (the prev-snapshot read + upsert shuffle must not run
+        # twice), and lineage stays write-side partitioned (a
+        # read-back of the snapshot would report reader-conf-
+        # dependent split counts instead of the written layout)
+        branch = branch.persist(StorageLevel.DISK_ONLY)
+        merge_persisted = branch
+        path = f"{path}/snap={run_id}"
+    else:
+        merge_persisted = None
+
+    has_tok = token_col and token_col in branch.columns
+    obs = Observation(f"{run_id}-{spec.name}")
+    metrics_exprs = [F.count(F.lit(1)).alias("rows")]
+    if has_tok:
+        metrics_exprs.append(F.sum(token_col).cast("long").alias("tokens"))
+    observed = branch.observe(obs, *metrics_exprs)
+
     t0 = time.time()
-    tagged = route_tag(df, sinks)
-    # per-sink counts/tokens ride the write itself via observe with
-    # conditional aggregates (one pair of metrics per sink — sinks are
-    # few by construction): zero extra passes. Round 2 re-read the
-    # written table for a groupBy — column-pruned, but still a full
-    # post-write scan at corpus scale.
-    has_tok = token_col and token_col in tagged.columns
-    metrics = []
-    for spec in sinks:
-        hit = F.col("sink") == spec.name
-        metrics.append(F.count(F.when(hit, 1)).alias(f"rows_{spec.name}"))
-        if has_tok:
-            metrics.append(F.sum(F.when(hit, F.col(token_col)))
-                           .cast("long").alias(f"tok_{spec.name}"))
-    obs = Observation(f"{run_id}-tagged")
-    observed = tagged.observe(obs, *metrics)
-    observed.write.mode("overwrite").partitionBy("sink").parquet(path)
-    got = obs.get
+    if spec.format == "noop":
+        # DevNull (output/DevNull.py:19-20): run the plan, keep nothing
+        observed.write.format("noop").mode("overwrite").save()
+    else:
+        write_mode = "overwrite" if spec.mode == "merge" else spec.mode
+        writer = observed.write.mode(write_mode)
+        if spec.compression:
+            writer = writer.option("compression", spec.compression)
+        if spec.partition_by:
+            writer = writer.partitionBy(*spec.partition_by)
+        writer.format(spec.format).save(path)
     secs = time.time() - t0
-    results: dict = {}
-    for spec in sinks:
-        rows = int(got.get(f"rows_{spec.name}", 0) or 0)
-        tokens = (int(got[f"tok_{spec.name}"])
-                  if has_tok and got.get(f"tok_{spec.name}") is not None
-                  else None)
-        ckpt.commit(spark, base, run_id, stage, spec.name, rows, tokens, None)
-        results[spec.name] = {"rows": rows, "tokens": tokens,
-                              "path": f"{path}/sink={spec.name}"}
-    results["_secs"] = round(secs, 3)
-    return results
+
+    got = obs.get
+    rows = int(got.get("rows", 0))
+    tokens = int(got["tokens"]) if has_tok and got.get("tokens") is not None else None
+    lineage = ckpt.partition_lineage(branch, token_col) if rows > 0 else []
+    if merge_persisted is not None:
+        merge_persisted.unpersist()
+    ckpt.commit(spark, base, run_id, stage, spec.name, rows, tokens, lineage)
+    return {
+        "skipped": False, "path": path, "rows": rows,
+        "tokens": tokens, "secs": round(secs, 3),
+        "n_partitions": len(lineage),
+    }
 
 
 def sink_stats(spark: SparkSession, base: str, run_id: str | None = None) -> DataFrame:

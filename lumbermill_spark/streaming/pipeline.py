@@ -278,34 +278,6 @@ def run_to_parquet(
     return q
 
 
-def run_routed(
-    df: DataFrame,
-    sinks,
-    base: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """Streaming fan-out: foreachBatch applies the batch router to each
-    micro-batch (per-sink filters + writes + per-sink metrics), with
-    exactly-once via the stream checkpoint + idempotent batch-id paths.
-    """
-    from lumbermill_spark.router import route
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        for name, branch in route(batch_df, sinks).items():
-            branch.write.mode("append").parquet(f"{base}/{name}")
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
 def _checkpoint_namespace(spark, checkpoint: str) -> str:
     """Stable namespace for one LIFETIME of a stream checkpoint: a
     marker file inside the checkpoint dir, created on first use and
@@ -314,7 +286,7 @@ def _checkpoint_namespace(spark, checkpoint: str) -> str:
     so its batch ids restarting at 0 cannot collide with sink commit
     rows from the previous checkpoint's life — without it, a rebuilt
     stream's batches 0..N would all be resume-SKIPPED as already
-    committed and the reprocess would silently merge nothing."""
+    committed and the reprocess would silently write nothing."""
     import uuid as _uuid
 
     from lumbermill_spark.functions.fsutil import read_marker, write_marker
@@ -328,39 +300,39 @@ def _checkpoint_namespace(spark, checkpoint: str) -> str:
     return ns
 
 
-def run_merged(
+def run_routed(
     df: DataFrame,
-    sink,
+    sinks,
     base: str,
     checkpoint: str,
     available_now: bool = True,
 ):
-    """Streaming SCD-1 ingestion into a merge-mode sink: each
-    micro-batch merges into the sink's latest committed snapshot
-    (router merge mode — the streaming form of the ES 'update' bulk
-    action). Exactly-once without transactions: the stream checkpoint
-    dedups source replays, and the batch run_id IS the batch_id, so a
-    replayed foreachBatch (possible after a crash between the sink
-    commit and the stream commit) is skipped by the router's
-    committed-sinks check instead of double-merging. Restarting the
-    query against the same checkpoint processes only new source files
-    and merges them on top of the surviving snapshot;
-    deleting the checkpoint to reprocess starts a fresh
-    namespaced run_id series (see _checkpoint_namespace)
-    instead of being skipped by the previous life's commits.
+    """Streaming fan-out: foreachBatch hands each micro-batch to the
+    batch router (per-sink filters + writes + per-sink metrics + commit
+    rows). Exactly-once without transactions: the stream checkpoint
+    dedups source replays, and each batch's run_id is derived from its
+    batch_id, so a replayed foreachBatch (possible after a crash between
+    the sink commits and the stream commit) is skipped by the router's
+    committed-sinks check instead of writing twice. Deleting the
+    checkpoint to reprocess starts a fresh namespaced run_id series
+    (see _checkpoint_namespace) instead of being skipped by the previous
+    life's commits. The one gap: a crash between an append sink's write
+    and its commit row re-appends that sink's batch on replay.
+
+    Sinks must be mode='append' or 'merge': an overwrite sink would
+    replace the previous micro-batch's output on every trigger.
     """
     from lumbermill_spark.router import route_and_write
 
-    if sink.mode != "merge":
-        raise ValueError("run_merged requires a mode='merge' SinkSpec")
-    # namespace per checkpoint LIFETIME: a deleted/rebuilt checkpoint
-    # restarts batch ids at 0 — without the namespace those would
-    # collide with the previous life's committed run_ids and every
-    # reprocess batch would be resume-SKIPPED (silently merging nothing)
+    overwrite = [s.name for s in sinks if s.mode == "overwrite"]
+    if overwrite:
+        raise ValueError(
+            f"streaming sinks {overwrite} have mode='overwrite': each "
+            "micro-batch would replace the last; use 'append' or 'merge'")
     ns = _checkpoint_namespace(df.sparkSession, checkpoint)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        route_and_write(batch_df, [sink], base,
+        route_and_write(batch_df, sinks, base,
                         run_id=f"{ns}-b{batch_id:012d}", resume=True)
 
     q = (
@@ -372,3 +344,19 @@ def run_merged(
     if available_now:
         q.awaitTermination()
     return q
+
+
+def run_merged(
+    df: DataFrame,
+    sink,
+    base: str,
+    checkpoint: str,
+    available_now: bool = True,
+):
+    """Streaming SCD-1 ingestion into a merge-mode sink: each
+    micro-batch merges into the sink's latest committed snapshot
+    (router merge mode — the streaming form of the ES 'update' bulk
+    action), with run_routed's exactly-once and restart semantics."""
+    if sink.mode != "merge":
+        raise ValueError("run_merged requires a mode='merge' SinkSpec")
+    return run_routed(df, [sink], base, checkpoint, available_now)

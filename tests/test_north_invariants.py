@@ -5,8 +5,9 @@
 3. exact token-array equality per doc_id through the whole pipeline.
 
 Run over the full pipeline (synth -> parse -> enrich -> route -> write)
-both in the per-sink-branch form and the single-pass tagged form, plus
-kill/resume idempotence on the branch form.
+both in the per-sink-branch form and the single-pass form (route_tag +
+one partitionBy(sink) sink), plus kill/resume idempotence on the branch
+form.
 """
 
 import pytest
@@ -16,7 +17,7 @@ from lumbermill_spark.data.synth import synth_tokens
 from lumbermill_spark.operators import field_actions
 from lumbermill_spark.operators.regex_parser import RegexParser
 from lumbermill_spark.pipelines_builtin import ACCESS_RULES, HTTP_STATUS_MAP
-from lumbermill_spark.router import SinkSpec, route_and_write, route_and_write_tagged
+from lumbermill_spark.router import SinkSpec, route_and_write, route_tag
 
 N_ROWS = 4000
 
@@ -63,40 +64,40 @@ def _expected(spark, pipeline_out):
 def test_branch_writer_invariants(spark, pipeline_out, tmp_path):
     base = str(tmp_path / "branch")
     res = route_and_write(pipeline_out, _sinks(), base, run_id="north1")
+    # the single-pass form of the same routing
+    tagged = str(tmp_path / "tagged")
+    one = route_and_write(route_tag(pipeline_out, _sinks()),
+                          [SinkSpec("routed", partition_by=["sink"])],
+                          tagged, run_id="north2")["routed"]
     exp = _expected(spark, pipeline_out)
-    # 1. per-sink aggregate counts (router metrics AND written data)
-    for name in exp:
-        assert res[name]["rows"] == exp[name]["n"]
-        assert res[name]["tokens"] == exp[name]["tok"]
-        written = spark.read.parquet(f"{base}/{name}")
-        assert written.count() == exp[name]["n"]
-        # 2. routed-row set equality
-        got_ids = {r["doc_id"] for r in written.select("doc_id").collect()}
-        assert got_ids == exp[name]["ids"]
-    # 3. token-array equality per doc_id (byte-exact through the pipeline)
+    assert one["rows"] == sum(e["n"] for e in exp.values())
+    assert one["tokens"] == sum(e["tok"] for e in exp.values())
+    outputs = {
+        "branch": lambda name: spark.read.parquet(f"{base}/{name}"),
+        "tagged": lambda name: spark.read.parquet(f"{tagged}/routed")
+        .filter(F.col("sink") == name),
+    }
     source = synth_tokens(spark, N_ROWS).select("doc_id", "tokens")
     for name in exp:
-        written = spark.read.parquet(f"{base}/{name}") \
-            .select("doc_id", F.col("tokens").alias("tokens_out"))
-        diff = (
-            written.join(source, "doc_id")
-            .filter(F.col("tokens_out") != F.col("tokens"))
-            .count()
-        )
-        assert diff == 0
-
-
-def test_tagged_writer_matches_branch_writer(spark, pipeline_out, tmp_path):
-    base = str(tmp_path / "tagged")
-    res = route_and_write_tagged(pipeline_out, _sinks(), base, run_id="north2")
-    exp = _expected(spark, pipeline_out)
-    for name in exp:
+        # 1. per-sink aggregate counts (router metrics AND written data)
         assert res[name]["rows"] == exp[name]["n"]
         assert res[name]["tokens"] == exp[name]["tok"]
-        written = spark.read.parquet(f"{base}/routed") \
-            .filter(F.col("sink") == name)
-        assert {r["doc_id"] for r in written.select("doc_id").collect()} \
-            == exp[name]["ids"]
+        for read in outputs.values():
+            written = read(name)
+            assert written.count() == exp[name]["n"]
+            assert written.agg(F.sum("n_tok")).first()[0] == exp[name]["tok"]
+            # 2. routed-row set equality
+            got_ids = {r["doc_id"] for r in written.select("doc_id").collect()}
+            assert got_ids == exp[name]["ids"]
+            # 3. token-array equality per doc_id (byte-exact through the
+            # pipeline)
+            diff = (
+                written.select("doc_id", F.col("tokens").alias("tokens_out"))
+                .join(source, "doc_id")
+                .filter(F.col("tokens_out") != F.col("tokens"))
+                .count()
+            )
+            assert diff == 0
 
 
 def test_resume_reproduces_identical_outputs(spark, pipeline_out, tmp_path):

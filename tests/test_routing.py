@@ -204,8 +204,10 @@ def test_file_sink_line_format(spark, tmp_path):
     assert got == ["e1|click|3", "e2|error|5"]
 
 
-def test_route_and_write_tagged(spark, tmp_path):
-    from lumbermill_spark.router import SinkSpec, route_and_write_tagged
+def test_route_tag_single_pass_write(spark, tmp_path):
+    # route_tag + one partitionBy(sink) spec: one scan and one write for
+    # all disjoint sinks, first matching sink wins
+    from lumbermill_spark.router import route_tag
 
     df = spark.createDataFrame(
         [("d1", "click", 3), ("d2", "error", 5), ("d3", "click", 2)],
@@ -216,35 +218,20 @@ def test_route_and_write_tagged(spark, tmp_path):
         SinkSpec("rest", None),
     ]
     base = str(tmp_path / "tagged")
-    res = route_and_write_tagged(df, sinks, base, run_id="t1")
-    assert res["errs"]["rows"] == 1 and res["errs"]["tokens"] == 5
-    assert res["rest"]["rows"] == 2 and res["rest"]["tokens"] == 5
+    res = route_and_write(route_tag(df, sinks),
+                          [SinkSpec("routed", partition_by=["sink"])],
+                          base, run_id="t1")
+    assert res["routed"]["rows"] == 3 and res["routed"]["tokens"] == 10
     # data lands under sink= partitions and is readable per sink
-    errs = spark.read.parquet(f"{base}/routed").filter("sink = 'errs'")
-    assert [r["doc_id"] for r in errs.collect()] == ["d2"]
-    # checkpoint rows committed per sink
-    from lumbermill_spark.checkpoint import read_checkpoints
-    ck = read_checkpoints(spark, base)
-    assert ck.filter("run_id = 't1'").count() == 2
-
-
-def test_route_and_write_tagged_rejects_configured_sinks(spark, tmp_path):
-    import pytest
-
-    from lumbermill_spark.router import SinkSpec, route_and_write_tagged
-
-    df = spark.createDataFrame([("d1", "click", 3)],
-                               "doc_id string, event_type string, n_tok int")
-    # the single-pass writer can't honor a per-sink path/format/
-    # line_format — it must refuse, not silently write parquet elsewhere
-    for spec in [
-        SinkSpec("s", None, path=str(tmp_path / "elsewhere")),
-        SinkSpec("s", None, format="json"),
-        SinkSpec("s", None, line_format="$(doc_id)"),
-        SinkSpec("s", None, columns=["doc_id"]),
-    ]:
-        with pytest.raises(ValueError, match="cannot honor"):
-            route_and_write_tagged(df, [spec], str(tmp_path / "t"))
+    back = spark.read.parquet(f"{base}/routed")
+    per_sink = {r["sink"]: (r["n"], r["tok"]) for r in back.groupBy("sink")
+                .agg(F.count("*").alias("n"), F.sum("n_tok").alias("tok"))
+                .collect()}
+    assert per_sink == {"errs": (1, 5), "rest": (2, 5)}
+    assert [r["doc_id"] for r in back.filter("sink = 'errs'").collect()] == ["d2"]
+    # one commit row, with lineage
+    cp = ckpt.read_checkpoints(spark, base).filter("run_id = 't1'").collect()
+    assert len(cp) == 1 and sum(x["rows"] for x in cp[0]["lineage"]) == 3
 
 
 def test_filter_struct_field_access(spark):
@@ -281,11 +268,8 @@ def test_pipeline_enricher_modules(spark, tmp_path):
     assert out["geo_info"]["country"] == "DE"
 
 
-def test_route_and_write_no_persist(spark, tmp_path):
-    # persist_level=None: each sink recomputes with filter pushdown
-    # instead of caching the routed parent — results must be identical
-    from lumbermill_spark.router import SinkSpec, route_and_write
-
+def test_route_and_write_explicit_paths(spark, tmp_path):
+    # a sink with an explicit path writes there, not under {base}/{name}
     df = spark.createDataFrame(
         [("d%d" % i, "error" if i % 3 == 0 else "click", i)
          for i in range(60)],
@@ -297,10 +281,57 @@ def test_route_and_write_no_persist(spark, tmp_path):
         SinkSpec("rest", "$(event_type) != 'error'",
                  path=str(tmp_path / "rest")),
     ]
-    res = route_and_write(df, sinks, str(tmp_path), run_id="np",
-                          persist_level=None)
+    base = tmp_path / "base"
+    res = route_and_write(df, sinks, str(base), run_id="np")
     assert res["errs"]["rows"] == 20 and res["rest"]["rows"] == 40
     assert spark.read.parquet(str(tmp_path / "errs")).count() == 20
+    assert spark.read.parquet(str(tmp_path / "rest")).count() == 40
+    assert not (base / "errs").exists() and not (base / "rest").exists()
+
+
+def test_route_and_write_runs_upstream_once(spark, tmp_path):
+    # several sinks share one persisted parent: the upstream plan runs
+    # once for all sink writes and lineage passes, not once per pass
+    n = 300
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(x):
+        seen.add(1)
+        return x
+
+    counted = F.udf(count_row, "int")
+    df = spark.range(n).select(
+        F.col("id").cast("string").alias("doc_id"),
+        counted(F.col("id").cast("int")).alias("n_tok"))
+    sinks = [SinkSpec(name) for name in ("a", "b", "c")]
+    res = route_and_write(df, sinks, str(tmp_path / "once"), run_id="once")
+    assert [res[s.name]["rows"] for s in sinks] == [n, n, n]
+    assert seen.value == n
+
+
+def test_damaged_checkpoint_fails_closed(spark, tmp_path):
+    # only an ABSENT checkpoint table means "nothing committed": a
+    # truncated commit file must make a resume and a merge raise, not
+    # redo the run or merge onto an empty history
+    import glob
+    import os
+
+    base = str(tmp_path / "ck")
+    merge = [SinkSpec("docs", None, mode="merge",
+                      merge_key="doc_id", merge_version="version")]
+    b1 = spark.createDataFrame([(1, 1, 3), (2, 1, 4)],
+                               "doc_id long, version long, n_tok long")
+    route_and_write(b1, merge, base, run_id="c1")
+    part, = glob.glob(f"{base}/_checkpoint/part-*.parquet")
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        route_and_write(b1, [SinkSpec("plain")], base, run_id="c1",
+                        resume=True)
+    assert not os.path.exists(f"{base}/plain")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        route_and_write(b1, merge, base, run_id="c2")
+    assert not os.path.exists(f"{base}/docs/snap=c2")
 
 
 def test_merge_mode_sink(spark, tmp_path):

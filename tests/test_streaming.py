@@ -128,15 +128,59 @@ def test_stream_routed_fanout(spark, token_dir, tmp_path):
         src, tokens_col="tokens", drop_tokens=True)
     sinks = [
         SinkSpec("matched", F.col("event_type") != "Unknown",
-                 columns=["doc_id", "event_type", "n_tok"]),
+                 columns=["doc_id", "event_type", "n_tok"], mode="append"),
         SinkSpec("unmatched", F.col("event_type") == "Unknown",
-                 columns=["doc_id", "n_tok"]),
+                 columns=["doc_id", "n_tok"], mode="append"),
     ]
     base = str(tmp_path / "routed")
     sp.run_routed(parsed, sinks, base, str(tmp_path / "ckpt5"))
     m = spark.read.parquet(f"{base}/matched").count()
     u = spark.read.parquet(f"{base}/unmatched").count()
     assert m + u == 2000 and u > 0
+    # an overwrite sink would replace each micro-batch with the next
+    with pytest.raises(ValueError, match="overwrite"):
+        sp.run_routed(parsed, [SinkSpec("all", None)], base,
+                      str(tmp_path / "ckpt5b"))
+
+
+def test_stream_routed_replay_writes_once(spark, tmp_path):
+    # a micro-batch replayed after a crash between the sink commits and
+    # the stream commit is skipped by the router, not appended twice
+    import glob
+    import os
+
+    from lumbermill_spark import checkpoint as ckpt
+
+    src = str(tmp_path / "src")
+    schema = "doc_id string, event_type string, n_tok int"
+    for i in range(3):
+        spark.createDataFrame(
+            [(f"d{i}-{j}", "error" if j % 3 == 0 else "click", j)
+             for j in range(30)], schema,
+        ).coalesce(1).write.mode("append").parquet(src)
+    sinks = [SinkSpec("errs", "$(event_type) == 'error'", mode="append"),
+             SinkSpec("rest", "$(event_type) != 'error'", mode="append")]
+    base, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+
+    def run():
+        stream = sp.stream_source(spark, src, schema=schema,
+                                  max_files_per_trigger=1)
+        sp.run_routed(stream, sinks, base, ck)
+        return {s.name: spark.read.parquet(f"{base}/{s.name}").count()
+                for s in sinks}
+
+    first = run()
+    assert first == {"errs": 30, "rest": 60}
+    last = max(glob.glob(f"{ck}/commits/[0-9]*"),
+               key=lambda p: int(os.path.basename(p)))
+    for p in (last, os.path.join(os.path.dirname(last),
+                                 f".{os.path.basename(last)}.crc")):
+        if os.path.exists(p):
+            os.remove(p)
+    assert run() == first
+    # one commit row per (batch, sink)
+    rows = ckpt.read_checkpoints(spark, base).select("run_id", "sink")
+    assert rows.count() == rows.distinct().count() == 3 * len(sinks)
 
 
 def test_stream_merge_sessions(spark, tmp_path):
