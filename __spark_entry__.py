@@ -101,9 +101,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parse (regex over decoded token view) → enrich (status map) →
     route (matched/unmatched) → per-sink aggregates."""
     tok = _events_token_table(spark, sf_dir)
-    parser = RegexParser(
-        [{"httpd_access_log": _HTTPD_LINE_RE}], engine="expr",
-    )
+    parser = RegexParser([{"httpd_access_log": _HTTPD_LINE_RE}])
     parsed = parser.apply(tok, tokens_col="tokens", drop_tokens=True)
     # pre-aggregate on parsed keys, then enrich the tiny aggregate:
     # status_class is a function of http_status, so mapping it after the
@@ -180,7 +178,7 @@ def _q02_regex_parse(spark, sf):
             {"k_high": r'"k": (?P<kval>[5-9][0-9])\}'},
             {"k_any": r'"k": (?P<kval>[0-9]+)\}'},
         ],
-        source_field="props", engine="expr",
+        source_field="props",
     )
     parsed = parser.apply(ev)
     return parsed.groupBy("event_type").agg(
@@ -514,7 +512,7 @@ _GROK_LINE = (
 
 def _q32_grok_parse(spark, sf):
     tok = _events_token_table(spark, sf)
-    parser = RegexParser([{"apache": _GROK_LINE}], engine="expr")
+    parser = RegexParser([{"apache": _GROK_LINE}])
     parsed = parser.apply(tok, tokens_col="tokens", drop_tokens=True)
     return parsed.groupBy("event_type", "response").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -523,7 +521,7 @@ def _q32_grok_parse(spark, sf):
 
 
 def _oracle_grok() -> str:
-    rule = RegexParser([{"apache": _GROK_LINE}], engine="expr").rules[0]
+    rule = RegexParser([{"apache": _GROK_LINE}]).rules[0]
     pat = rule.java_pattern.replace("'", "''")
     gi = rule.group_index
     return f"""
@@ -937,7 +935,7 @@ _UA_CHOICES = ["Mozilla/5.0 (X11; Linux x86_64)", "curl/8.4.0",
 def _q53_grok_combined(spark, sf):
     """Full grok vocabulary: ``%{COMBINEDAPACHELOG}`` (the composite a
     reference user actually configs — nested COMMONAPACHELOG plus
-    referrer/agent) parsed by the expr engine over lines synthesized
+    referrer/agent) parsed on the Catalyst path over lines synthesized
     in-query from events columns. The DuckDB twin derives every
     expected field structurally from the same base columns (q41/q50
     recipe — the composite regex itself uses lookaheads RE2 lacks), so
@@ -959,7 +957,7 @@ def _q53_grok_combined(spark, sf):
         ip, user, status, nbytes, referrer, agent))
     df = ev.select(line.alias("line"))
     parser = RegexParser([{"apache": "%{COMBINEDAPACHELOG}"}],
-                         engine="expr", source_field="line")
+                         source_field="line")
     parsed = parser.apply(df)
     return parsed.groupBy("event_type", "response", "agent").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -10,9 +10,9 @@ Two decode paths:
 - ``decode_tokens`` — pure JVM expression (``transform`` + ``char`` +
   ``array_join``): zero Python, whole-stage-codegen'd. Correct for ASCII
   payloads (our synthetic corpus is ASCII by construction).
-- pandas-UDF consumers (the Arrow regex engine) decode
-  ``bytes(arr).decode('utf-8')`` per Arrow batch, which is correct for
-  arbitrary UTF-8. Both agree on ASCII.
+- ``decode_tokens_arrow`` — one ``mapInArrow`` stage that reinterprets
+  each batch's token list as a UTF-8 string array (no per-row work),
+  correct for arbitrary UTF-8. Both agree on ASCII.
 
 Nothing here mutates ``tokens``: the BASELINE invariant is exact
 token-array pass-through per doc_id.
@@ -44,7 +44,6 @@ def decode_tokens_arrow(df, tokens_col: str = "tokens",
     forwarding).
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     in_schema = df.schema
@@ -55,25 +54,8 @@ def decode_tokens_arrow(df, tokens_col: str = "tokens",
 
     def run(batches):
         for batch in batches:
-            lst = batch.column(batch.schema.get_field_index(tokens_col))
-            if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-                lst = lst.combine_chunks()
-            if lst.values.offset == 0:
-                # physical child values, cast to bytes; offsets buffer
-                # indexes that same physical child
-                data = pc.cast(lst.values, pa.uint8(), safe=False)
-                str_arr = pa.Array.from_buffers(
-                    pa.utf8(),
-                    len(lst),
-                    [lst.buffers()[0], lst.buffers()[1], data.buffers()[1]],
-                    offset=lst.offset,
-                )
-            else:  # pragma: no cover - sliced child: safe scalar path
-                str_arr = pa.array(
-                    (None if x is None else bytes(v & 0xFF for v in x).decode(
-                        "utf-8", "replace"))
-                    for x in lst.to_pylist()
-                )
+            str_arr = _tokens_to_utf8(
+                batch.column(batch.schema.get_field_index(tokens_col)))
             cols = [batch.column(batch.schema.get_field_index(n))
                     for n in keep_names]
             yield pa.RecordBatch.from_arrays(
@@ -81,6 +63,21 @@ def decode_tokens_arrow(df, tokens_col: str = "tokens",
             )
 
     return df.mapInArrow(run, out_schema)
+
+
+def _tokens_to_utf8(lst):
+    """ListArray<int32> of byte values -> StringArray over the list's own
+    validity and offsets buffers, the values cast to uint8. The cast
+    starts at the child's logical start, so the offsets stay valid for
+    a sliced list and for a sliced child alike."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    data = pc.cast(lst.values, pa.uint8(), safe=False)
+    return pa.Array.from_buffers(
+        pa.utf8(), len(lst),
+        [lst.buffers()[0], lst.buffers()[1], data.buffers()[1]],
+        offset=lst.offset)
 
 
 def encode_line(line: Column | str) -> Column:

@@ -15,10 +15,9 @@ memo caches):
 Spark shape (SURVEY.md §4): LRU cache → dedupe-distinct → compute once
 per distinct value → broadcast join back (operators/lookup.py), or a
 straight broadcast join against a lookup *table* (geo). Parsing
-heuristics below are hand-written from public format knowledge; the
-heavyweight libs aren't in this runtime and are gated behind
-import-try — when present they take over inside the same dedupe+join
-plan, so the physical shape never changes.
+heuristics below are hand-written from public format knowledge and
+run in Catalyst on every platform; none of the heavyweight libs is
+used, so the plan never depends on what is installed.
 """
 
 from __future__ import annotations
@@ -131,33 +130,12 @@ def parse_user_agent(
 ) -> DataFrame:
     """UA string → struct{browser, os, is_bot} via dedupe-distinct →
     parse once per distinct UA → broadcast join back (the exact LRU
-    replacement; UA cardinality ≪ row count).
-
-    If the real `ua_parser` package is importable it is used for the
-    per-distinct parse; otherwise the ordered regex heuristics above.
+    replacement; UA cardinality ≪ row count). The per-distinct parse
+    is the ordered regex heuristics above, in Catalyst on every
+    platform.
     """
-    try:  # pragma: no cover - not in this runtime
-        from ua_parser import user_agent_parser  # noqa: F401
-        use_lib = True
-    except ImportError:
-        use_lib = False
 
     def compute(distinct_df: DataFrame) -> DataFrame:
-        if use_lib:  # pragma: no cover
-            import pandas as pd
-
-            @F.pandas_udf("browser string, os string, is_bot boolean")
-            def _parse(s: pd.Series) -> pd.DataFrame:
-                from ua_parser import user_agent_parser as uap
-                rows = []
-                for ua in s:
-                    r = uap.Parse(ua or "")
-                    fam = r["user_agent"]["family"]
-                    rows.append((fam, r["os"]["family"],
-                                 "bot" in (fam or "").lower()))
-                return pd.DataFrame(rows, columns=["browser", "os", "is_bot"])
-
-            return distinct_df.withColumn(target_field, _parse(F.col(source_field)))
         ua = F.col(source_field)
         browser: Column = F.lit("Other")
         for name, pat in reversed(_UA_RULES):

@@ -15,26 +15,27 @@ Reference semantics (/root/reference/lumbermill/parser/Regex.py:147-184):
 - grok ``%{NAME:field}`` macros are expanded before compile
   (Regex.py:128-145) — we do this at plan build, see functions/grok.py.
 - ``hot_rules_first`` reorders rules by observed hit count every 10s
-  (Regex.py:104-111); our Arrow engine reorders per batch, which is the
-  micro-batch analog. The expression engine leaves rule order alone
-  (Catalyst WHEN chains already short-circuit).
+  (Regex.py:104-111); the Python-``re`` fallback reorders per batch,
+  which is the micro-batch analog. The Catalyst path leaves rule order
+  alone (WHEN chains already short-circuit); ``optimize_rule_order``
+  is its sample-measured analog.
 
-Two engines:
+One engine per rule set, and the patterns pick it:
 
-- ``engine='expr'`` (default when possible): pure Catalyst. Each rule
-  becomes an ``rlike`` predicate in a WHEN chain selecting ``_rule_idx``;
-  each named group becomes ``regexp_extract`` (search) /
-  ``regexp_extract_all`` (findall) guarded by ``_rule_idx``. Zero Python
-  at runtime, whole-stage codegen, predicate pushdown all apply.
-- ``engine='arrow'``: one vectorized pandas UDF applying the compiled
-  Python rule list per Arrow batch and returning a struct. Needed for
-  regex constructs Java lacks, exotic flags, and hot-rule reordering;
-  also decodes ``tokens`` (array<int> UTF-8 bytes) without a separate
-  string materialization.
+- Catalyst, whenever Java's regex runs every pattern. Each rule
+  becomes an ``rlike`` predicate in a WHEN chain selecting
+  ``_rule_idx``; each named group becomes ``regexp_extract`` (search) /
+  ``regexp_extract_all`` (findall) guarded by ``_rule_idx``. Zero
+  Python at runtime, whole-stage codegen, predicate pushdown all apply.
+- Python ``re``, the semantic fallback for rule sets with a construct
+  Java lacks or reads differently (``(?P=name)`` backrefs,
+  ``(?(id)yes|no)`` conditionals, ``\\Z``; see ``_JAVA_UNSAFE``): one
+  vectorized pandas UDF applying the compiled rule list per Arrow
+  batch and returning a struct.
 
-``engine='auto'`` picks 'expr' unless a pattern fails Java compilation
-checks (conservative syntactic screen) — the two engines are
-semantics-equivalent on the supported grammar (tested).
+Both read the line from ``source_field``, or with ``tokens_col`` from
+the one vectorized Arrow decode of the token arrays. The two are
+semantics-equivalent on the grammar they share (tested case by case).
 """
 
 from __future__ import annotations
@@ -61,6 +62,12 @@ _FLAG_MAP = {
 _PY_FLAG_MAP = {
     "i": re.IGNORECASE, "m": re.MULTILINE, "s": re.DOTALL, "x": re.VERBOSE,
 }
+
+
+# optimize_rule_order's probe: seeded Bernoulli sample fraction, and
+# the row count at which it stops reading
+_SAMPLE_FRACTION = 0.1
+_SAMPLE_ROWS = 10_000
 
 
 def _parse_flags(flags: str | int | None) -> str:
@@ -170,7 +177,6 @@ class RegexParser:
         mark_unmatched_as: str = "Unknown",
         break_on_match: bool = True,
         hot_rules_first: bool = True,
-        engine: str = "auto",
         grok_patterns: dict[str, str] | None = None,
     ):
         if field_extraction_patterns and isinstance(field_extraction_patterns[0], dict):
@@ -183,9 +189,6 @@ class RegexParser:
         self.break_on_match = break_on_match
         self.hot_rules_first = hot_rules_first
         self.field_kinds = _field_types(self.rules)
-        if engine == "auto":
-            engine = "expr" if self._expr_capable() else "arrow"
-        self.engine = engine
 
     # Java regex screen: python-only constructs that would compile under
     # java.util.regex with different meaning or fail at runtime.
@@ -194,13 +197,23 @@ class RegexParser:
     def _expr_capable(self) -> bool:
         return not any(self._JAVA_UNSAFE.search(r.py_pattern) for r in self.rules)
 
+    def _source(self, df: DataFrame, tokens_col: str | None,
+                drop_tokens: bool = False) -> tuple[DataFrame, Column]:
+        """(frame, line column): the vectorized Arrow batch decode of
+        ``tokens_col`` (one buffer reinterpret per batch; the
+        per-character JVM expression is ~20x slower and gets inlined
+        into every regex expression by CollapseProject), else
+        ``source_field``."""
+        if not tokens_col:
+            return df, F.col(self.source_field)
+        decoded = decode_tokens_arrow(df, tokens_col, out_col="_lms_line",
+                                      drop_tokens=drop_tokens)
+        return decoded, F.col("_lms_line")
+
     # ------------------------------------------------------------------ #
     def optimize_rule_order(self, df: DataFrame,
-                            source: Column | None = None,
-                            tokens_col: str | None = None,
-                            sample_rows: int = 10_000,
-                            sample_fraction: float = 0.1) -> "RegexParser":
-        """Expr-engine analog of ``hot_rules_first`` (Regex.py:98-111):
+                            tokens_col: str | None = None) -> "RegexParser":
+        """Catalyst-path analog of ``hot_rules_first`` (Regex.py:98-111):
         the reference re-sorts rules by observed hit count every 10 s at
         runtime; a WHEN chain is fixed at plan build, so instead we
         measure per-rule selectivity on a sample ONCE and reorder the
@@ -213,33 +226,28 @@ class RegexParser:
         co-matches IN THE SAMPLE keeps its original relative order
         (greedy hot-first topological order under those constraints).
         The constraint is SAMPLE-DERIVED, not a guarantee: the probe is
-        a seeded Bernoulli sample (``sample_fraction``, early-stopped
-        at ``sample_rows`` — reads ~rows/fraction input rows, spread
+        a seeded Bernoulli sample (``_SAMPLE_FRACTION``, early-stopped
+        at ``_SAMPLE_ROWS`` — reads ~rows/fraction input rows, spread
         ~1/fraction× wider than a bare prefix limit), so an overlapping
         pair that never co-occurs in the sampled rows can still be
         reordered; keep the original rule order (skip this optimizer)
         when strict first-match precedence between overlapping rules
         must hold on every row. Rule sets containing Java-unsafe
-        (arrow-engine-only) patterns are left untouched — ``rlike``
-        would throw on them. Returns self (mutated).
+        (Python-``re``-only) patterns are left untouched — ``rlike``
+        would throw on them. The line comes from ``tokens_col`` or
+        ``source_field``, as in :meth:`apply`. Returns self (mutated).
         """
         if not self.break_on_match or len(self.rules) < 2:
             return self
         if not self._expr_capable():
             return self  # can't probe Java-unsafe patterns with rlike
-        if source is None:
-            src_df = decode_tokens_arrow(
-                df, tokens_col or self.source_field, out_col="_lms_line"
-            ) if tokens_col else df
-            src = F.col("_lms_line") if tokens_col else F.col(self.source_field)
-        else:
-            src_df, src = df, source
+        src_df, src = self._source(df, tokens_col)
         n = len(self.rules)
         # seeded Bernoulli sample + early-stop limit, NOT a bare prefix
         # limit: covers ~1/fraction× more of the input while still only
-        # reading ~sample_rows/fraction rows (limit stops the scan)
-        sampled = src_df.sample(fraction=sample_fraction, seed=42) \
-            .limit(sample_rows)
+        # reading ~rows/fraction rows (limit stops the scan)
+        sampled = src_df.sample(fraction=_SAMPLE_FRACTION, seed=42) \
+            .limit(_SAMPLE_ROWS)
         flags = sampled.select(*[
             src.rlike(r.java_pattern).cast("int").alias(f"m{i}")
             for i, r in enumerate(self.rules)
@@ -268,48 +276,19 @@ class RegexParser:
         self.rules = [self.rules[i] for i in order]
         return self
 
-    def apply(self, df: DataFrame, source: Column | None = None,
-              tokens_col: str | None = None,
+    def apply(self, df: DataFrame, tokens_col: str | None = None,
               drop_tokens: bool = False) -> DataFrame:
-        """source: explicit string Column; tokens_col: decode this
-        array<int> column instead (vectorized Arrow batch decode for
-        BOTH engines; mutually exclusive with source). drop_tokens=True
-        skips shipping the token arrays back out of the decode stage —
-        use it when downstream only needs the parsed fields + n_tok
-        (2-4x less Arrow traffic)."""
-        if source is not None and tokens_col is not None:
-            # ambiguous: which column is the line? Historically this fell
-            # through to a per-row bytes() decode inside the parse UDF —
-            # the one code path that dodged the vectorized Arrow decode.
-            raise ValueError("pass either source or tokens_col, not both")
-        if self.engine == "expr":
-            if source is None and tokens_col:
-                # hot path: vectorized Arrow batch decode (one buffer
-                # reinterpret per batch) — the per-character JVM
-                # expression is ~20x slower and gets inlined into every
-                # regex expression by CollapseProject
-                decoded = decode_tokens_arrow(df, tokens_col,
-                                              out_col="_lms_line",
-                                              drop_tokens=drop_tokens)
-                out = self._apply_expr(decoded, F.col("_lms_line"))
-                return out.drop("_lms_line")
-            if source is None:
-                source = F.col(self.source_field)
-            return self._apply_expr(df, source)
-        if tokens_col is not None:
-            # same fast decode for the arrow engine: the batch buffer
-            # reinterpret beats per-row bytes().decode() inside the
-            # parse UDF by an order of magnitude
-            decoded = decode_tokens_arrow(df, tokens_col,
-                                          out_col="_lms_line",
-                                          drop_tokens=drop_tokens)
-            out = self._apply_arrow(decoded, F.col("_lms_line"))
-            return out.drop("_lms_line")
-        if source is None:
-            source = F.col(self.source_field)
-        return self._apply_arrow(df, source)
+        """tokens_col: decode this array<int> column (vectorized Arrow
+        batch decode) and parse it instead of ``source_field``.
+        drop_tokens=True skips shipping the token arrays back out of the
+        decode stage — use it when downstream only needs the parsed
+        fields + n_tok (2-4x less Arrow traffic)."""
+        src_df, src = self._source(df, tokens_col, drop_tokens)
+        parse = self._apply_expr if self._expr_capable() else self._apply_arrow
+        out = parse(src_df, src)
+        return out.drop("_lms_line") if tokens_col else out
 
-    # ---------------------------- expr engine ------------------------- #
+    # ----------------------------- Catalyst ----------------------------- #
     def _apply_expr(self, df: DataFrame, source: Column) -> DataFrame:
         # Materialize the source expression ONCE behind a projection:
         # every rule contributes ~1 rlike + 1 regexp_extract per group,
@@ -368,8 +347,8 @@ class RegexParser:
         # few groups are consumed, because Catalyst column-prunes unused
         # per-group extracts to zero cost while the rewrite's cost is
         # fixed. Per-group extracts + column pruning is the fast plan;
-        # the arrow engine already does true single-pass extraction for
-        # Python-only patterns.
+        # the Python-re fallback already does true single-pass extraction
+        # for Python-only patterns.
         cols = {"event_type": etype}
         for fname, kind in self.field_kinds.items():
             expr: Column = F.lit(None).cast(
@@ -397,7 +376,7 @@ class RegexParser:
         out = out.withColumns(cols)
         return out.drop("_rule_idx", "_lms_src", "_lms_prior_et")
 
-    # ---------------------------- arrow engine ------------------------ #
+    # ------------------------- Python re fallback ----------------------- #
     def _apply_arrow(self, df: DataFrame, source: Column) -> DataFrame:
         rules_spec = [
             (r.event_type, r.py_pattern, r.py_flags(), r.match_type,
@@ -465,7 +444,7 @@ class RegexParser:
                         if break_on_match:
                             break
                 if not matches:
-                    # last-evaluated-rule quirk, same as expr engine
+                    # last-evaluated-rule quirk, same as the Catalyst path
                     row_et = mark_unmatched
                 etypes.append(row_et if row_et is not None else mark_unmatched)
                 for f in fnames:

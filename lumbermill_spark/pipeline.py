@@ -71,11 +71,10 @@ def _m_regex(df: DataFrame, cfg: dict) -> DataFrame:
         mark_unmatched_as=cfg.get("mark_unmatched_as", "Unknown"),
         break_on_match=cfg.get("break_on_match", True),
         hot_rules_first=cfg.get("hot_rules_first", True),
-        engine=cfg.get("engine", "auto"),
     )
     tokens_col = cfg.get("tokens_col")
     if cfg.get("optimize_rule_order"):
-        # expr-engine hot_rules_first analog: sample-measured selectivity
+        # Catalyst-path hot_rules_first analog: sample-measured selectivity
         parser.optimize_rule_order(df, tokens_col=tokens_col)
     return parser.apply(df, tokens_col=tokens_col,
                         drop_tokens=cfg.get("drop_tokens", False))
@@ -161,7 +160,7 @@ TRANSFORMS = {
 _EXPLICIT_KEYS: dict[str, set[str] | None] = {
     "parser.Regex": {"field_extraction_patterns", "source_field",
                      "mark_unmatched_as", "break_on_match",
-                     "hot_rules_first", "engine", "tokens_col",
+                     "hot_rules_first", "tokens_col",
                      "optimize_rule_order", "drop_tokens"},
     "modifier.AddGeoInfo": {"geo_table_path", "source_fields",
                             "prefix_len", "target_field"},

@@ -83,14 +83,13 @@ def route(df: DataFrame, sinks: list[SinkSpec]) -> dict[str, DataFrame]:
     }
 
 
-def route_tag(df: DataFrame, sinks: list[SinkSpec],
-              tag_col: str = "sink", default: str | None = None) -> DataFrame:
+def route_tag(df: DataFrame, sinks: list[SinkSpec]) -> DataFrame:
     """Single-pass routing for DISJOINT sinks: adds a ``sink`` column
     (first matching sink wins — the reference's ordered receiver-filter
     check, BaseModule.py:184-203). One scan tags every row; downstream
     groupBy(sink)/partitionBy(sink) replaces N filtered branches — at
     scale this is the difference between 1 and N passes over the data.
-    Rows matching no sink get ``default`` (None = dropped).
+    Rows matching no sink are dropped.
 
     PREFER an exhaustive sink list (a final catch-all spec with
     predicate None — the reference's default receiver chaining) over
@@ -115,10 +114,10 @@ def route_tag(df: DataFrame, sinks: list[SinkSpec],
             pred = F.lit(True)
         chain = (F.when(pred, F.lit(s.name)) if chain is None
                  else chain.when(pred, F.lit(s.name)))
-    tag = chain.otherwise(F.lit(default)) if chain is not None else F.lit(default)
-    out = df.withColumn(tag_col, tag)
-    if default is None and not exhaustive:
-        return out.filter(F.col(tag_col).isNotNull())
+    tag = chain.otherwise(F.lit(None)) if chain is not None else F.lit(None)
+    out = df.withColumn("sink", tag)
+    if not exhaustive:
+        return out.filter(F.col("sink").isNotNull())
     return out
 
 
@@ -163,7 +162,6 @@ def route_and_write(
     sinks: list[SinkSpec],
     base: str,
     run_id: str | None = None,
-    stage: str = "route",
     token_col: str | None = "n_tok",
     resume: bool = False,
 ) -> dict:
@@ -193,8 +191,7 @@ def route_and_write(
             path = spec.path or f"{base.rstrip('/')}/{spec.name}"
             results[spec.name] = (
                 {"skipped": True, "path": path} if spec.name in done
-                else _write_sink(df, spec, path, base, run_id, stage,
-                                 token_col))
+                else _write_sink(df, spec, path, base, run_id, token_col))
     finally:
         if shared:
             df.unpersist()
@@ -202,7 +199,7 @@ def route_and_write(
 
 
 def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
-                run_id: str, stage: str, token_col: str | None) -> dict:
+                run_id: str, token_col: str | None) -> dict:
     """One sink of route_and_write: filter, write with in-pass metrics,
     lineage, commit row."""
     spark = df.sparkSession
@@ -283,7 +280,8 @@ def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
     lineage = ckpt.partition_lineage(branch, token_col) if rows > 0 else []
     if merge_persisted is not None:
         merge_persisted.unpersist()
-    ckpt.commit(spark, base, run_id, stage, spec.name, rows, tokens, lineage)
+    ckpt.commit(spark, base, run_id, "route", spec.name, rows, tokens,
+                lineage)
     return {
         "skipped": False, "path": path, "rows": rows,
         "tokens": tokens, "secs": round(secs, 3),

@@ -228,21 +228,28 @@ def run_throttled_batches(
 ):
     """Throttle with per-micro-batch timeframes via foreachBatch: each
     micro-batch is one throttle window (the reference's `timeframe`
-    maps to the trigger interval), reusing the batch operator.
+    maps to the trigger interval), reusing the batch operator. Passed
+    rows append to ``base`` through the batch router with a run_id
+    derived from the batch id, so a foreachBatch replayed after a
+    crash is skipped instead of appended twice (same contract as
+    :func:`run_routed`).
 
-    This is the portable fallback: in this sandbox BOTH custom-state
-    APIs (applyInPandasWithState and transformWithStateInPandas)
-    crash their Python state workers on stock examples — a pyspark
-    4.1.2-in-container defect, reproduced outside this codebase — so
-    cross-batch running counts (throttle_stream above) can't execute
-    here, while per-window counts can.
+    This is the portable fallback: throttle_stream's cross-batch
+    running counts need transformWithStateInPandas, whose Python
+    state worker imports the protobuf package and fails to start
+    without it; per-window counts need neither.
     """
     from lumbermill_spark.operators.stats import throttle
+    from lumbermill_spark.router import SinkSpec, route_and_write
+
+    sinks = [SinkSpec("throttled", path=base, mode="append")]
+    ns = _checkpoint_namespace(df.sparkSession, checkpoint)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         passed = throttle(batch_df, key, min_count=min_count,
                           max_count=max_count)
-        passed.write.mode("append").parquet(base)
+        route_and_write(passed, sinks, base,
+                        run_id=f"{ns}-b{batch_id:012d}", resume=True)
 
     q = (
         df.writeStream.foreachBatch(write_batch)

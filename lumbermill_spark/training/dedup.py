@@ -457,7 +457,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
-    compress: bool | str = "auto",
     driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(id, component) for every id appearing in ``pairs``, where
@@ -486,10 +485,9 @@ def connected_components(
     O(diameter) — at 10^12-node scale a pathological chain converges in
     ~40 rounds where plain propagation needs 10^12 (and round-2's plain
     loop silently returned UNCONVERGED labels past max_iterations;
-    now it raises). ``compress='auto'`` (default) runs the first three
-    rounds plain — dense near-dup clusters converge there and skip the
-    doubling join entirely — and turns doubling on only if the graph
-    proves deep; True/False force it.
+    now it raises). The first three rounds run plain — dense near-dup
+    clusters converge there and skip the doubling join entirely — and
+    doubling turns on only if the graph proves deep.
 
     Round cost: two shuffles for the hop + one slim self-join for the
     doubling; exactly ONE action per round (the convergence probe reads
@@ -517,10 +515,6 @@ def connected_components(
     """
     from pyspark import StorageLevel
 
-    # validate BEFORE any session state is touched (conf override,
-    # persists) so a bad argument can't leak either
-    if compress not in (True, False, "auto"):
-        raise ValueError("compress must be True, False or 'auto'")
     checkpoint_interval = 5
     spark = pairs.sparkSession
     edges_raw = pairs.select(F.col(a_col).alias("src"),
@@ -528,7 +522,7 @@ def connected_components(
     edges_raw = edges_raw.unionByName(
         edges_raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    auto_after = 3  # 'auto': plain rounds first, doubling once deep
+    plain_rounds = 3  # plain rounds first, doubling once deep
     converged = False
     cached: list[DataFrame] = []  # everything persisted, for finally
     edges = None
@@ -567,8 +561,6 @@ def connected_components(
         cached.append(labels)
         prev_frame: DataFrame | None = labels  # released per round
         for it in range(max_iterations):
-            do_compress = (compress is True
-                           or (compress == "auto" and it >= auto_after))
             neigh = (
                 edges.join(labels.withColumnRenamed("node", "dst"), on="dst")
                 .groupBy("src").agg(F.min("label").alias("nlabel"))
@@ -580,7 +572,7 @@ def connected_components(
                         F.least(F.col("label"), F.coalesce("nlabel", "label"))
                         .alias("step"))
             )
-            if do_compress:
+            if it >= plain_rounds:
                 # label <- prev_label(label): every label IS a node id,
                 # so the mapping join always hits; least() is belt-and-
                 # braces (label(x) <= x keeps labels monotone). The map
@@ -627,8 +619,7 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components did not converge in "
                 f"{max_iterations} rounds (graph diameter too large); "
-                "raise max_iterations"
-                + ("" if compress else " or use compress=True"))
+                "raise max_iterations")
         # materialize the result before releasing loop-state caches so
         # callers never re-trigger the iteration lineage
         labels = labels.localCheckpoint(eager=True)
@@ -1284,6 +1275,11 @@ def gram_novelty(
     join back on gram → tiny groupBy(batch). Everything is keyed on
     the gram — linear in gram volume, no pairwise work; a gram shared
     by every batch contributes |batches| rows, never |docs|.
+
+    A batch whose rows yield no n-gram at all (every text shorter than
+    ``n`` words, empty or null) yields NO output row: explode emits
+    nothing for it. The DuckDB twin drops it the same way; left-join
+    the batch list onto the output when a zero-gram row is wanted.
 
     Output: (batch, n_grams, n_new, novelty) — novelty floor-rounded
     to 6 decimals from an exact int64 ratio.

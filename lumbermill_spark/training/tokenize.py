@@ -274,18 +274,6 @@ def token_ngrams(tokens, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _token_ngram_hashes(tokens, n: int):
-    """array<int> -> array<bigint> of xxhash64 over each n-token slice
-    — the hashed fast path: no per-gram string build, 8-byte join keys
-    (same engine duality as ngram_jaccard_pairs' hashed=True)."""
-    size = F.size(tokens)
-    return F.when(
-        size >= n,
-        F.transform(F.sequence(F.lit(1), size - n + 1),
-                    lambda i: F.xxhash64(F.slice(tokens, i, n))),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
 _GRAM_P = 0x9E3779B97F4A7C15  # odd 64-bit multiplier (golden ratio)
 
 
@@ -386,7 +374,6 @@ def token_contamination(
     n: int = 8,
     round_to: int = 6,
     hashed: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
     """TOKEN-level benchmark decontamination (the q59 text pass run
     directly on pre-tokenized sequences — no detokenize round-trip):
@@ -394,47 +381,42 @@ def token_contamination(
     anywhere in the eval set's n-gram inventory (both numerator and
     denominator are distinct-gram counts, q59's semantics).
 
-    Plan: one pass over the train side — distinct token n-grams (pure
-    JVM sequence/slice; the token arrays never ride a shuffle) are
-    computed ONCE per row inside the Generate, probed against the
-    distinct'd eval inventory with a broadcast left join (eval sets
-    are small — AQE broadcasts at runtime), and partial-aggregated
-    back to one row per sequence (explode preserves co-location, so
-    the map-side combine collapses each doc's grams before the
-    exchange: the shuffle carries ~1 row per sequence, not per gram).
-    ``n_grams`` is derived AT the aggregation as ``count(_g)`` — the
-    exploded grams are already distinct — rather than as a
-    ``size(...)`` column beside the explode: a projection above a
-    Generate re-evaluates per OUTPUT row, so carrying the arithmetic
-    count would recompute the whole gram-hash array per gram (O(G²)
-    per doc; measured 10x slower at sf0.1). Zero-hit and empty
-    sequences survive via the outer explode (count ignores the null
-    row) — no second train scan, no post-join re-join.
-    ``hashed=True`` (default) keys grams with 8-byte hashes — via the
-    vectorized Arrow stage of :func:`_gram_rows_arrow`
-    (``engine="arrow"``, default: one numpy rolling-hash pass, ~2x the
-    JVM expression path at the 2M-sequence scale) or via
-    ``transform(sequence, xxhash64(slice))`` (``engine="expr"``: zero
-    Python, but Catalyst runs higher-order-function lambdas
-    interpreted). ``hashed=False`` keeps comma-joined string keys for
-    cross-engine checks (the DuckDB twin's basis; always expr).
-    Gram-count semantics are engine-independent — parity rests on gram
+    Plan: one pass over the train side — each row's DISTINCT token
+    n-grams are computed ONCE (the token arrays never ride a shuffle),
+    probed against the distinct'd eval inventory with a broadcast left
+    join (eval sets are small — AQE broadcasts at runtime), and
+    partial-aggregated back to one row per sequence (the gram rows stay
+    co-located with their doc, so the map-side combine collapses each
+    doc's grams before the exchange: the shuffle carries ~1 row per
+    sequence, not per gram). ``n_grams`` is derived AT the aggregation
+    as ``count(_g)`` — the gram rows are already distinct — never as a
+    ``size(...)`` column beside an explode (a projection above a
+    Generate re-evaluates per OUTPUT row: O(G²) per doc, measured 10x
+    slower at sf0.1, PLANS.md §13). Zero-hit and empty sequences
+    survive as one null-gram row (count ignores it) — no second train
+    scan, no post-join re-join.
+
+    ``hashed=True`` (default) keys grams with 8-byte rolling hashes from
+    the one vectorized Arrow stage of :func:`_gram_rows_arrow` per side
+    (numpy over each batch's flat token buffer; it beat the Catalyst
+    ``transform(sequence, xxhash64(slice))`` lambda, which runs
+    interpreted, in every A/B recorded in PLANS.md §13).
+    ``hashed=False`` keeps comma-joined string keys from
+    :func:`token_ngrams` (pure JVM ``explode_outer``): the exact basis
+    for the DuckDB twin and the tests. Gram counts do not depend on the key — parity rests on gram
     SET identity, not hash values.
     Output: (id, source?, n_grams, n_contaminated, contaminated_frac).
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
     keep = [c for c in ("source",) if c in train.columns]
-    if hashed and engine == "arrow":
+    if hashed:
         rows = _gram_rows_arrow(train, tokens_col, id_col, keep, n)
         eg = (_gram_rows_arrow(eval_df, tokens_col, id_col, [], n)
               .where(F.col("_g").isNotNull()).select("_g").distinct()
               .withColumn("_hit", F.lit(1)))
     else:
-        gram_fn = _token_ngram_hashes if hashed else token_ngrams
-        dg = F.array_distinct(gram_fn(F.col(tokens_col), n))
+        dg = F.array_distinct(token_ngrams(F.col(tokens_col), n))
         eg = (eval_df.select(F.explode(
-                  gram_fn(F.col(tokens_col), n)).alias("_g")).distinct()
+                  token_ngrams(F.col(tokens_col), n)).alias("_g")).distinct()
               .withColumn("_hit", F.lit(1)))
         rows = train.select(
             F.col(id_col), *[F.col(c) for c in keep],
@@ -518,6 +500,12 @@ def vocab_coverage(
     rows — fine at any corpus scale), and a broadcast semi-join back.
     No per-row Python anywhere; the ratio divides two int64 sums
     (exact) and floor-rounds.
+
+    A group whose rows hold no token at all (every array empty or
+    null) yields NO output row: explode emits nothing for it, so it
+    never reaches the aggregate. The DuckDB twin's ``unnest`` drops it
+    the same way; left-join the group list onto the output when a
+    zero-token row is wanted.
 
     Output: (group, n_tok, n_topk_tok, n_ids, coverage).
     """

@@ -25,7 +25,7 @@ N_ROWS = 4000
 @pytest.fixture(scope="module")
 def pipeline_out(spark):
     tok = synth_tokens(spark, N_ROWS)
-    parsed = RegexParser(ACCESS_RULES, engine="expr").apply(
+    parsed = RegexParser(ACCESS_RULES).apply(
         tok, tokens_col="tokens")
     return field_actions.map_(parsed, "http_status", HTTP_STATUS_MAP,
                               target_field="status_class")

@@ -43,6 +43,16 @@ def test_unknown_option_suggests(spark):
         ])
 
 
+def test_regex_engine_is_not_an_option(spark):
+    # the patterns pick the regex engine; there is no key to set it
+    with pytest.raises(ValueError,
+                       match="unknown option 'engine'.*parser.Regex"):
+        compile_pipeline(spark, [
+            {"parser.Regex": {"field_extraction_patterns": [{"a": "(?P<x>a)"}],
+                              "engine": "expr"}},
+        ])
+
+
 def test_unknown_field_action_fails(spark):
     with pytest.raises(ValueError, match="unknown field action 'uper'"):
         compile_pipeline(spark, [{"modifier.Field": {"action": "uper"}}])

@@ -40,7 +40,7 @@ def test_column_pruning_reaches_scan(spark, tok_path):
 
 def test_parse_plan_is_codegen_and_single_python_stage(spark, tok_path):
     df = spark.read.parquet(tok_path)
-    parsed = RegexParser(ACCESS_RULES, engine="expr").apply(
+    parsed = RegexParser(ACCESS_RULES).apply(
         df, tokens_col="tokens", drop_tokens=True)
     agg = parsed.groupBy("event_type").count()
     agg.collect()  # AQE reveals the final (codegen-annotated) plan only after execution
@@ -79,12 +79,12 @@ def test_optimize_rule_order_promotes_hot_rule(spark, tok_path):
     # iptables (10%) deliberately first; the optimizer must promote the
     # httpd rule (60%) to the front
     rules = [ACCESS_RULES[2], ACCESS_RULES[0], ACCESS_RULES[1]]
-    parser = RegexParser(rules, engine="expr")
+    parser = RegexParser(rules)
     assert parser.rules[0].event_type == "iptables_log"
     parser.optimize_rule_order(df, tokens_col="tokens")
     assert parser.rules[0].event_type == "httpd_access_log"
     # reordering must not change results (first-match over disjoint rules)
-    base = RegexParser(ACCESS_RULES, engine="expr").apply(
+    base = RegexParser(ACCESS_RULES).apply(
         df, tokens_col="tokens", drop_tokens=True)
     opt = parser.apply(df, tokens_col="tokens", drop_tokens=True)
     a = {r["event_type"]: r["count"]
@@ -103,9 +103,9 @@ def test_optimize_rule_order_keeps_overlapping_rules_ordered(spark):
     parser = RegexParser(
         [{"k_high": r'"k": (?P<kval>[5-9][0-9])\}'},
          {"k_any": r'"k": (?P<kval>[0-9]+)\}'}],
-        source_field="props", engine="expr",
+        source_field="props",
     )
-    parser.optimize_rule_order(df, source=df["props"])
+    parser.optimize_rule_order(df)
     assert [r.event_type for r in parser.rules] == ["k_high", "k_any"]
     out = parser.apply(df)
     counts = {r["event_type"]: r["count"]
@@ -114,15 +114,15 @@ def test_optimize_rule_order_keeps_overlapping_rules_ordered(spark):
 
 
 def test_optimize_rule_order_skips_java_unsafe(spark):
-    # backreference (?P=…) is arrow-engine-only; rlike would throw, so
-    # the optimizer must leave the rule order untouched
+    # backreference (?P=…) runs only on the Python-re fallback; rlike
+    # would throw, so the optimizer must leave the rule order untouched
     df = spark.createDataFrame([("aa",), ("ab",)], "line string")
     parser = RegexParser(
         [{"doubled": r"(?P<c>\w)(?P=c)"}, {"any": r"(?P<c2>\w+)"}],
     )
-    assert parser.engine == "arrow"
+    assert not parser._expr_capable()
     order_before = [r.event_type for r in parser.rules]
-    parser.optimize_rule_order(df, source=df["line"])
+    parser.optimize_rule_order(df)
     assert [r.event_type for r in parser.rules] == order_before
 
 
@@ -136,7 +136,7 @@ def test_route_tag_catchall_keeps_regexes_out_of_filters(spark, tok_path):
     from lumbermill_spark.router import SinkSpec, route_tag
 
     df = spark.read.parquet(tok_path)
-    rp = RegexParser(ACCESS_RULES, engine="expr")
+    rp = RegexParser(ACCESS_RULES)
     parsed = rp.apply(df, tokens_col="tokens", drop_tokens=True)
     pre = parsed.groupBy("event_type", "http_status").agg(
         F.count(F.lit(1)).alias("n_rows"))
@@ -277,3 +277,59 @@ def test_filter_cascade_single_corpus_scan(spark, tmp_path):
         ("c", F.col("id") % 2 == 0)])
     plan = _plan(out)
     assert plan.count("Scan parquet") == 1
+
+
+def _final_plan_lines(df) -> list[str]:
+    df.collect()  # AQE fixes the final plan only after execution
+    return _plan(df).split("== Initial Plan ==")[0].splitlines()
+
+
+def _exchanges_only_above_map_side_aggs(lines: list[str]) -> bool:
+    """Every shuffle carries map-side-combined aggregate state: the
+    operator right below each hash Exchange is the partial (map-side)
+    HashAggregate."""
+    idx = [i for i, ln in enumerate(lines)
+           if "Exchange hashpartitioning" in ln and "Reused" not in ln]
+    return bool(idx) and all("HashAggregate" in lines[i + 1] for i in idx)
+
+
+def test_token_contamination_one_gram_stage_per_side(spark, tok_path,
+                                                     tmp_path):
+    """q112 (PLANS.md §13): one Arrow gram stage per side, train
+    scanned once, the eval inventory broadcast, and no gram row
+    shuffled raw — the train side shuffles ~1 row per sequence."""
+    from lumbermill_spark.training.tokenize import token_contamination
+
+    ev_path = str(tmp_path / "eval")
+    synth_tokens(spark, 300, 7).select("doc_id", "tokens") \
+        .write.parquet(ev_path)
+    out = token_contamination(spark.read.parquet(tok_path),
+                              spark.read.parquet(ev_path), n=8)
+    lines = _final_plan_lines(out)
+    final = "\n".join(lines)
+    assert final.count("MapInArrow") == 2
+    assert "Generate" not in final
+    scans = [ln for ln in lines if "FileScan parquet" in ln]
+    assert len(scans) == 2
+    assert sum("source:string" in ln for ln in scans) == 1  # train once
+    assert "BroadcastHashJoin" in final and "LeftOuter" in final
+    assert "BroadcastExchange" in final and "SortMergeJoin" not in final
+    assert _exchanges_only_above_map_side_aggs(lines), final
+
+
+def test_vocab_coverage_shuffles_vocabulary_not_tokens(spark, tok_path):
+    """q121 (PLANS.md §15): one scan, one explode, and the first
+    Exchange above it sits on a partial HashAggregate, so raw token
+    rows never shuffle; the id-totals branch reuses that exchange."""
+    from lumbermill_spark.training.tokenize import vocab_coverage
+
+    out = vocab_coverage(spark.read.parquet(tok_path), "tokens", "source",
+                         top_k=20)
+    lines = _final_plan_lines(out)
+    final = "\n".join(lines)
+    assert final.count("FileScan parquet") == 1
+    assert final.count("Generate explode") == 1
+    g = next(i for i, ln in enumerate(lines) if "Generate explode" in ln)
+    assert "partial_count" in lines[g - 1], final
+    assert "Exchange hashpartitioning" in lines[g - 2], final
+    assert _exchanges_only_above_map_side_aggs(lines), final

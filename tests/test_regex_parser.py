@@ -29,6 +29,18 @@ ACCESS_PATTERN = (
 ENGINES = ["expr", "arrow"]
 
 
+def _run(parser, df, engine, tokens_col=None):
+    """Parse on the Catalyst path ('expr', what ``apply`` picks for
+    every Java-safe rule set) or force the Python-re fallback ('arrow',
+    what ``apply`` picks only for Java-unsafe patterns), so each
+    semantic case checks both."""
+    if engine == "arrow":
+        src_df, src = parser._source(df, tokens_col)
+        return parser._apply_arrow(src_df, src).drop("_lms_line")
+    assert parser._expr_capable()
+    return parser.apply(df, tokens_col=tokens_col)
+
+
 @pytest.fixture(params=ENGINES)
 def engine(request):
     return request.param
@@ -40,9 +52,8 @@ def _one_row(spark, line):
 
 def test_access_log_fields(spark, engine):
     # TestRegex.testDefaultValues (/root/reference/tests/parser/TestRegex.py:23-30)
-    p = RegexParser([{"http_access_log": ACCESS_PATTERN}], source_field="data",
-                    engine=engine)
-    row = p.apply(_one_row(spark, RAW)).collect()[0]
+    p = RegexParser([{"http_access_log": ACCESS_PATTERN}], source_field="data")
+    row = _run(p, _one_row(spark, RAW), engine).collect()[0]
     assert row["bytes_send"] == "3395"
     assert row["remote_ip"] == "192.168.2.20"
     assert row["http_status"] == "200"
@@ -52,9 +63,8 @@ def test_access_log_fields(spark, engine):
 
 def test_unmatched_marked_unknown(spark, engine):
     # Regex.py:182-183 default mark_unmatched_as
-    p = RegexParser([{"http_access_log": ACCESS_PATTERN}], source_field="data",
-                    engine=engine)
-    row = p.apply(_one_row(spark, "?? corrupt ??")).collect()[0]
+    p = RegexParser([{"http_access_log": ACCESS_PATTERN}], source_field="data")
+    row = _run(p, _one_row(spark, "?? corrupt ??"), engine).collect()[0]
     assert row["event_type"] == "Unknown"
     assert row["bytes_send"] is None
 
@@ -62,9 +72,8 @@ def test_unmatched_marked_unknown(spark, engine):
 def test_multiline_without_options(spark, engine):
     # TestRegex.testMultilineWithoutRegexOptions: '.*' without DOTALL only
     # captures the first line
-    p = RegexParser([{"dame_irene": "(?P<poem>.*)"}], source_field="data",
-                    engine=engine)
-    row = p.apply(_one_row(spark, MULTILINE)).collect()[0]
+    p = RegexParser([{"dame_irene": "(?P<poem>.*)"}], source_field="data")
+    row = _run(p, _one_row(spark, MULTILINE), engine).collect()[0]
     assert row["poem"] == MULTILINE.split("\n")[0]
     assert row["event_type"] == "dame_irene"
 
@@ -72,8 +81,8 @@ def test_multiline_without_options(spark, engine):
 def test_multiline_with_options(spark, engine):
     p = RegexParser(
         [{"dame_irene": ["(?P<poem>.*)", "re.MULTILINE | re.DOTALL"]}],
-        source_field="data", engine=engine)
-    row = p.apply(_one_row(spark, MULTILINE)).collect()[0]
+        source_field="data")
+    row = _run(p, _one_row(spark, MULTILINE), engine).collect()[0]
     assert row["poem"] == MULTILINE
     assert row["event_type"] == "dame_irene"
 
@@ -82,8 +91,8 @@ def test_findall(spark, engine):
     # TestRegex.testFindAllRegexOption: expect ['When','When','When']
     p = RegexParser(
         [{"dame_irene": ["(?P<date>When)", "re.MULTILINE | re.DOTALL", "findall"]}],
-        source_field="data", engine=engine)
-    row = p.apply(_one_row(spark, MULTILINE)).collect()[0]
+        source_field="data")
+    row = _run(p, _one_row(spark, MULTILINE), engine).collect()[0]
     assert list(row["date"]) == ["When", "When", "When"]
     assert row["event_type"] == "dame_irene"
 
@@ -103,8 +112,9 @@ def test_grok_expansion():
 def test_grok_in_rule(spark, engine):
     p = RegexParser(
         [{"host_ip": "(?P<host>%{HOSTNAME}) (?P<ip>%{IPV4})"}],
-        source_field="data", engine=engine)
-    row = p.apply(_one_row(spark, "web01.example.com 10.1.2.3")).collect()[0]
+        source_field="data")
+    row = _run(p, _one_row(spark, "web01.example.com 10.1.2.3"),
+               engine).collect()[0]
     assert row["host"] == "web01.example.com"
     assert row["ip"] == "10.1.2.3"
 
@@ -114,10 +124,10 @@ def test_first_match_wins(spark, engine):
         {"numeric": r"^(?P<num>\d+)$"},
         {"anything": r"(?P<all>.+)"},
     ]
-    p = RegexParser(rules, source_field="data", engine=engine,
+    p = RegexParser(rules, source_field="data",
                     hot_rules_first=False)
     df = spark.createDataFrame([("123",), ("abc",)], "data string")
-    rows = {r["data"]: r for r in p.apply(df).collect()}
+    rows = {r["data"]: r for r in _run(p, df, engine).collect()}
     assert rows["123"]["event_type"] == "numeric"
     assert rows["123"]["num"] == "123"
     assert rows["abc"]["event_type"] == "anything"
@@ -131,19 +141,19 @@ def test_no_break_last_rule_quirk(spark, engine):
         {"numeric": r"^(?P<num>\d+)$"},
         {"alpha": r"^(?P<alpha>[a-z]+)$"},
     ]
-    p = RegexParser(rules, source_field="data", engine=engine,
+    p = RegexParser(rules, source_field="data",
                     break_on_match=False, hot_rules_first=False)
     df = spark.createDataFrame([("123",), ("abc",)], "data string")
     rows = {r for r in []}
-    rows = {r["data"]: r for r in p.apply(df).collect()}
+    rows = {r["data"]: r for r in _run(p, df, engine).collect()}
     assert rows["123"]["event_type"] == "Unknown"  # last rule missed
     assert rows["123"]["num"] == "123"             # but fields were set
     assert rows["abc"]["event_type"] == "alpha"
 
 
 def test_null_source(spark, engine):
-    p = RegexParser([{"t": r"(?P<x>\d+)"}], source_field="data", engine=engine)
-    row = p.apply(_one_row(spark, None)).collect()[0]
+    p = RegexParser([{"t": r"(?P<x>\d+)"}], source_field="data")
+    row = _run(p, _one_row(spark, None), engine).collect()[0]
     assert row["event_type"] == "Unknown"
 
 
@@ -152,12 +162,9 @@ def test_engines_agree_on_corpus(spark):
     from lumbermill_spark.pipelines_builtin import ACCESS_RULES
 
     df = synth_tokens(spark, 300).cache()
-    a = RegexParser(ACCESS_RULES, engine="expr").apply(
-        df, tokens_col="tokens").select("doc_id", "event_type", "remote_ip",
-                                        "http_status")
-    b = RegexParser(ACCESS_RULES, engine="arrow").apply(
-        df, tokens_col="tokens").select("doc_id", "event_type", "remote_ip",
-                                        "http_status")
+    cols = ("doc_id", "event_type", "remote_ip", "http_status")
+    a, b = (_run(RegexParser(ACCESS_RULES), df, engine, tokens_col="tokens")
+            .select(*cols) for engine in ENGINES)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -173,17 +180,17 @@ def test_null_source_preserves_prior_event_type(spark):
         "id string, data string, event_type string",
     )
     rules = [{"kv": r"x=(?P<xval>\d+)"}]
-    for engine in ("expr", "arrow"):
+    for engine in ENGINES:
         out = {r["id"]: r["event_type"]
-               for r in RegexParser(rules, source_field="data",
-                                    engine=engine).apply(df).collect()}
+               for r in _run(RegexParser(rules, source_field="data"), df,
+                             engine).collect()}
         assert out["a"] == "kv", engine
         assert out["b"] == "earlier_type", engine
     # without a prior event_type column, null source -> mark_unmatched_as
     df2 = spark.createDataFrame([("b", None)], "id string, data string")
-    for engine in ("expr", "arrow"):
-        out2 = RegexParser(rules, source_field="data",
-                           engine=engine).apply(df2).first()
+    for engine in ENGINES:
+        out2 = _run(RegexParser(rules, source_field="data"), df2,
+                    engine).first()
         assert out2["event_type"] == "Unknown", engine
 
 
@@ -284,7 +291,7 @@ def test_grok_combined_apachelog_fields():
 
 
 def test_grok_composites_java_safe(spark):
-    # the expr engine runs these through Java's regex (rlike /
+    # the Catalyst path runs these through Java's regex (rlike /
     # regexp_extract) — the expansion must be Java-compatible too
     from pyspark.sql import functions as F
 
@@ -294,22 +301,21 @@ def test_grok_composites_java_safe(spark):
                  "CISCOFW106023", "HTTPD24_ERRORLOG"):
         df = spark.createDataFrame([(GROK_FIXTURES[name],)], "line string")
         parser = RegexParser([{name.lower(): "%%{%s}" % name}],
-                             engine="expr", source_field="line")
+                             source_field="line")
+        assert parser._expr_capable(), name
         row = parser.apply(df).first()
         assert row["event_type"] == name.lower(), name
 
 
-def test_source_and_tokens_col_mutually_exclusive(spark):
-    # both at once used to silently fall back to a per-row bytes()
-    # decode inside the parse UDF (the one non-vectorized decode path);
-    # it is now an explicit error for both engines
-    from pyspark.sql import functions as F
-
-    from lumbermill_spark.operators.regex_parser import RegexParser
-
-    df = spark.createDataFrame([("x", [120])],
-                               "line string, tokens array<int>")
-    for engine in ("expr", "arrow"):
-        parser = RegexParser([{"t": r"(?P<v>x)"}], engine=engine)
-        with pytest.raises(ValueError, match="not both"):
-            parser.apply(df, source=F.col("line"), tokens_col="tokens")
+def test_java_unsafe_patterns_take_python_fallback(spark):
+    # a backreference has no Java meaning: apply() must pick the
+    # Python-re fallback from the patterns alone and still parse right
+    parser = RegexParser([{"doubled": r"(?P<c>\w)(?P=c)"}],
+                         source_field="line")
+    assert not parser._expr_capable()
+    df = spark.createDataFrame([("xaay",), ("ab",)], "line string")
+    out = parser.apply(df)
+    got = {r["line"]: (r["event_type"], r["c"]) for r in out.collect()}
+    assert got == {"xaay": ("doubled", "a"), "ab": ("Unknown", None)}
+    assert "ArrowEvalPython" in out._jdf.queryExecution() \
+        .executedPlan().toString()

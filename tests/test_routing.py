@@ -28,7 +28,7 @@ def test_filter_translation():
 def parsed(spark):
     from lumbermill_spark.operators.regex_parser import RegexParser
     df = synth_tokens(spark, 2000)
-    return RegexParser(ACCESS_RULES, engine="expr").apply(
+    return RegexParser(ACCESS_RULES).apply(
         df, tokens_col="tokens").cache()
 
 
@@ -113,7 +113,7 @@ def test_pipeline_compiler_end_to_end(spark, tmp_path):
     spec = [
         {"input.Synthetic": {"rows": 1000}},
         {"parser.Regex": {"field_extraction_patterns": ACCESS_RULES,
-                          "tokens_col": "tokens", "engine": "expr"}},
+                          "tokens_col": "tokens"}},
         {"modifier.Field": {"action": "map", "source_field": "http_status",
                             "map": {"200": "OK", "301": "Moved", "304": "Not Modified",
                                     "400": "Bad Request", "404": "Not Found",

@@ -21,7 +21,7 @@ def token_dir(spark, tmp_path_factory):
 def test_stream_parse_to_parquet(spark, token_dir, tmp_path):
     src = sp.stream_source(spark, token_dir)
     assert src.isStreaming
-    parsed = RegexParser(ACCESS_RULES, engine="expr").apply(
+    parsed = RegexParser(ACCESS_RULES).apply(
         src, tokens_col="tokens", drop_tokens=True)
     out = str(tmp_path / "out")
     sp.run_to_parquet(parsed.select("doc_id", "event_type", "n_tok"),
@@ -32,7 +32,7 @@ def test_stream_parse_to_parquet(spark, token_dir, tmp_path):
     assert "httpd_access_log" in types and "Unknown" in types
     # equivalence with the batch plan on the same table (streaming and
     # batch must route identically)
-    batch = RegexParser(ACCESS_RULES, engine="expr").apply(
+    batch = RegexParser(ACCESS_RULES).apply(
         spark.read.parquet(token_dir), tokens_col="tokens", drop_tokens=True)
     bcounts = {r["event_type"]: r["count"]
                for r in batch.groupBy("event_type").count().collect()}
@@ -88,11 +88,11 @@ def test_stream_facet(spark, tmp_path):
 
 
 @pytest.mark.xfail(
-    reason="pyspark 4.1.2 in this container crashes the Python state "
-    "worker for BOTH applyInPandasWithState and "
-    "transformWithStateInPandas on stock examples "
-    "(TransformWithStateInPySpark driver worker exited unexpectedly); "
-    "API usage is correct for a real cluster",
+    reason="transformWithStateInPandas needs the protobuf package: "
+    "without it its Python worker fails STREAMING_PYTHON_RUNNER_"
+    "INITIALIZATION_FAILURE (\"cannot import name 'descriptor' from "
+    "'google.protobuf'\") and the query stops with "
+    "'TransformWithStateInPySpark driver worker exited unexpectedly'",
     strict=False,
 )
 def test_stream_throttle_state(spark, tmp_path):
@@ -122,9 +122,42 @@ def test_stream_throttle_foreach_batch(spark, tmp_path):
     assert got == {"k0": 4}
 
 
+def test_stream_throttle_replay_writes_once(spark, tmp_path):
+    # a throttled micro-batch replayed after a crash between the sink
+    # commit and the stream commit is skipped, not appended twice
+    import glob
+    import os
+
+    src = str(tmp_path / "src")
+    schema = "k string, i long"
+    for b in range(3):
+        spark.createDataFrame(
+            [("k0", b * 10 + i) for i in range(3)] + [("k1", b)], schema,
+        ).coalesce(1).write.mode("append").parquet(src)
+    base, ck = str(tmp_path / "tout"), str(tmp_path / "ck")
+
+    def run():
+        stream = sp.stream_source(spark, src, schema=schema,
+                                  max_files_per_trigger=1)
+        sp.run_throttled_batches(stream, "k", base, ck,
+                                 min_count=2, max_count=5)
+        return {r["k"]: r["count"] for r in
+                spark.read.parquet(base).groupBy("k").count().collect()}
+
+    first = run()
+    assert first == {"k0": 9}  # k1 is under min_count in every window
+    last = max(glob.glob(f"{ck}/commits/[0-9]*"),
+               key=lambda p: int(os.path.basename(p)))
+    for p in (last, os.path.join(os.path.dirname(last),
+                                 f".{os.path.basename(last)}.crc")):
+        if os.path.exists(p):
+            os.remove(p)
+    assert run() == first
+
+
 def test_stream_routed_fanout(spark, token_dir, tmp_path):
     src = sp.stream_source(spark, token_dir)
-    parsed = RegexParser(ACCESS_RULES, engine="expr").apply(
+    parsed = RegexParser(ACCESS_RULES).apply(
         src, tokens_col="tokens", drop_tokens=True)
     sinks = [
         SinkSpec("matched", F.col("event_type") != "Unknown",

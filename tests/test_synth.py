@@ -43,3 +43,18 @@ def test_roundtrip_decode(spark):
     # lines are printable ASCII
     row = df.select("line").first()
     assert row["line"].isascii() and len(row["line"]) > 10
+
+
+def test_arrow_decode_sliced_list_and_child():
+    # decode_tokens_arrow's per-batch conversion: offsets stay valid
+    # whether the list, its child, or both are sliced
+    import pyarrow as pa
+
+    from lumbermill_spark.functions.tokens import _tokens_to_utf8
+
+    child = pa.array([0, 0] + list(b"helloworld"), pa.int32()).slice(2)
+    lst = pa.ListArray.from_arrays(pa.array([0, 5, None, 10], pa.int32()),
+                                   child)
+    assert lst.values.offset == 2
+    assert _tokens_to_utf8(lst).to_pylist() == ["hello", "world", None]
+    assert _tokens_to_utf8(lst.slice(1)).to_pylist() == ["world", None]

@@ -208,9 +208,9 @@ def test_token_contamination(spark):
 
 
 def test_token_contamination_engine_parity(spark):
-    """All three gram engines (arrow / expr / string keys) agree on the
-    counts, including null and empty sequences and a doc whose every
-    gram is a duplicate; unknown engine raises."""
+    """Hashed Arrow grams and exact string keys agree on the counts,
+    including null and empty sequences and a doc whose every gram is a
+    duplicate."""
     from lumbermill_spark.training.tokenize import token_contamination
 
     train = spark.createDataFrame(
@@ -224,13 +224,10 @@ def test_token_contamination_engine_parity(spark):
         return {r["doc_id"]: (r["n_grams"], r["n_contaminated"])
                 for r in token_contamination(train, ev, n=3, **kw).collect()}
 
-    arrow = run(engine="arrow")
-    assert arrow == run(engine="expr")
+    arrow = run()
     assert arrow == run(hashed=False)
     assert arrow[5] == (0, 0) and arrow[6] == (0, 0)
     assert arrow[7] == (3, 1)  # distinct {234,342,423}; only 234 hits
-    with pytest.raises(ValueError, match="engine"):
-        token_contamination(train, ev, n=3, engine="numpy")
 
 
 def test_gram_rows_arrow_null_elements(spark):
@@ -307,6 +304,18 @@ def test_vocab_coverage_tie_breaks_by_id(spark):
            tokenize.vocab_coverage(df, "tokens", "source",
                                    top_k=1).collect()}
     assert out["a"]["n_topk_tok"] == 1 and out["a"]["coverage"] == 0.5
+
+
+def test_vocab_coverage_drops_groups_without_tokens(spark):
+    # documented contract: a group whose rows hold no token (empty or
+    # null arrays) has no output row, as in the DuckDB twin
+    df = spark.createDataFrame(
+        [("a", [1, 2]), ("b", []), ("c", None)],
+        "source string, tokens array<int>")
+    out = {r["source"]: r["n_tok"] for r in
+           tokenize.vocab_coverage(df, "tokens", "source",
+                                   top_k=1).collect()}
+    assert out == {"a": 2}
 
 
 def test_token_entropy(spark):

@@ -376,8 +376,10 @@ def test_connected_components_long_chain_converges(spark):
             for r in dedup.connected_components(
                 pairs, driver_max_edges=0).collect()}
     assert comp == {i: 0 for i in range(64)}
+    # five rounds (three plain, two doubling) reach node 63 only down
+    # to label 44: the loop must raise, not return those labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, compress=False, max_iterations=5,
+        dedup.connected_components(pairs, max_iterations=5,
                                    driver_max_edges=0)
     # the driver union-find fast path (default for small graphs) must
     # produce identical labels to the distributed loop
@@ -1308,3 +1310,16 @@ def test_gram_novelty(spark):
     assert out[1]["n_grams"] == 8
     assert out[1]["n_new"] == 6          # abc + bcd already seen
     assert out[1]["novelty"] == 0.75
+
+
+def test_gram_novelty_drops_batches_without_grams(spark):
+    # documented contract: a batch whose rows yield no n-gram (too
+    # short, empty, null) has no output row, as in the DuckDB twin
+    from lumbermill_spark.training import dedup
+
+    df = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b"), (1, ""), (2, None)],
+        "batch long, text string")
+    out = {r["batch"]: r["n_grams"] for r in
+           dedup.gram_novelty(df, "text", "batch", n=3).collect()}
+    assert out == {0: 2}

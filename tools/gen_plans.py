@@ -17,7 +17,7 @@ def fmt(d):
         d.explain("formatted")
     return buf.getvalue()
 
-parsed = RegexParser(ACCESS_RULES, engine="expr").apply(df, tokens_col="tokens", drop_tokens=True)
+parsed = RegexParser(ACCESS_RULES).apply(df, tokens_col="tokens", drop_tokens=True)
 pre = parsed.groupBy("event_type", "http_status").agg(
     F.count(F.lit(1)).alias("n_rows"), F.sum("n_tok").cast("long").alias("sum_tok"))
 enriched = field_actions.map_(pre, "http_status", HTTP_STATUS_MAP, target_field="status_class")

@@ -60,7 +60,7 @@ def main() -> None:
     for i in range(args.runs):
         t0 = time.time()
         df = spark.read.parquet(path)
-        parsed = RegexParser(ACCESS_RULES, engine="expr").apply(
+        parsed = RegexParser(ACCESS_RULES).apply(
             df, tokens_col="tokens", drop_tokens=True)
         rows = parsed.groupBy("event_type", "http_status").agg(
             F.count(F.lit(1)).alias("n_rows"),
