@@ -13,29 +13,39 @@ the table snapshot itself):
 
 1. sink writes go to ``{base}/{sink}`` with mode=overwrite — idempotent,
    so a crash mid-write is healed by rewriting;
-2. AFTER a sink write completes, one commit row is appended to
+2. AFTER a sink write completes, one commit row is added to
    ``{base}/_checkpoint`` recording (run_id, stage, sink, rows, tokens,
    n_partitions, committed_at) plus a per-partition lineage array
-   (partition_id, rows, tokens);
+   (partition_id, rows, tokens). The row is its own one-row parquet file
+   ``part-<uuid>.parquet``, built in the calling process and written
+   with ``fsutil.write_atomic`` (hidden temp name, close, rename): no
+   Spark job runs, and a crash mid-commit leaves only a hidden temp file
+   that readers skip, so the sink reads as not committed;
 3. on restart with the same run_id, sinks that have a commit row are
    skipped entirely (their data is already consistent: the marker is
    written only after the data).
 
-The commit row is written as a single-task append; like the reference,
-the protocol tolerates duplicates on re-run because doc_ids are stable
-(EventBuffer.py:29-31 makes the same argument) and sink writes are
-idempotent overwrites.
+Readers list every visible parquet file in ``_checkpoint``, so tables
+holding rows written by Spark's own parquet writer (``part-*-c000``
+files plus ``_SUCCESS``) read together with the single-file rows. Like
+the reference, the protocol tolerates duplicates on re-run because
+doc_ids are stable (EventBuffer.py:29-31 makes the same argument) and
+sink writes are idempotent overwrites.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from lumbermill_spark.functions.fsutil import fs_exists
+from lumbermill_spark.functions.fsutil import fs_exists, write_atomic
 
 CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
@@ -51,6 +61,7 @@ CHECKPOINT_SCHEMA = T.StructType([
         T.StructField("tokens", T.LongType()),
     ]))),
 ])
+_ARROW_SCHEMA = to_arrow_schema(CHECKPOINT_SCHEMA)
 
 
 def _ckpt_path(base: str) -> str:
@@ -64,24 +75,29 @@ def partition_lineage(df: DataFrame, token_col: str | None = "n_tok") -> list[di
     rows = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count("*").alias("rows"), tok.alias("tokens"))
-        .orderBy("partition_id")
         .collect()
     )
-    return [r.asDict() for r in rows]
+    # at most one row per partition: sorted here, not by a range-sort job
+    return sorted((r.asDict() for r in rows), key=lambda d: d["partition_id"])
 
 
 def commit(spark: SparkSession, base: str, run_id: str, stage: str, sink: str,
            rows: int, tokens: int | None, lineage: list[dict] | None) -> None:
-    rec = [(
-        run_id, stage, sink, int(rows),
-        int(tokens) if tokens is not None else None,
-        len(lineage) if lineage else None,
-        time.time(),
-        [(d["partition_id"], d["rows"], d["tokens"]) for d in (lineage or [])] or None,
-    )]
-    (spark.createDataFrame(rec, CHECKPOINT_SCHEMA)
-        .coalesce(1)
-        .write.mode("append").parquet(_ckpt_path(base)))
+    """Add one commit row to the checkpoint table as its own one-row
+    parquet file, built in this process and written crash-safely (no
+    Spark job)."""
+    rec = {
+        "run_id": [run_id], "stage": [stage], "sink": [sink],
+        "rows": [int(rows)],
+        "tokens": [int(tokens) if tokens is not None else None],
+        "n_partitions": [len(lineage) if lineage else None],
+        "committed_at": [time.time()],
+        "lineage": [lineage or None],
+    }
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pydict(rec, schema=_ARROW_SCHEMA), buf)
+    write_atomic(spark, f"{_ckpt_path(base)}/part-{uuid.uuid4().hex}.parquet",
+                 buf.getvalue().to_pybytes())
 
 
 def has_checkpoints(spark: SparkSession, base: str) -> bool:
@@ -96,10 +112,8 @@ def committed_sinks(spark: SparkSession, base: str, run_id: str) -> set[str]:
     if not has_checkpoints(spark, base):
         return set()
     df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(_ckpt_path(base))
-    return {
-        r["sink"] for r in
-        df.filter(F.col("run_id") == run_id).select("sink").distinct().collect()
-    }
+    return {r["sink"] for r in
+            df.filter(F.col("run_id") == run_id).select("sink").collect()}
 
 
 def read_checkpoints(spark: SparkSession, base: str) -> DataFrame:

@@ -1,8 +1,8 @@
 """Filesystem-agnostic small-file helpers over the Hadoop FS API —
 one shared implementation of the Path/getFileSystem dance (works for
 file://, hdfs://, s3a:// — wherever sinks and checkpoints live), used
-by the checkpoint-table and router snapshot probes and the streaming
-checkpoint-namespace marker."""
+by the checkpoint-table commits and probes, the router snapshot probes
+and the streaming checkpoint-namespace marker."""
 
 from __future__ import annotations
 
@@ -32,10 +32,26 @@ def read_marker(spark, path: str) -> str | None:
         stream.close()
 
 
-def write_marker(spark, path: str, text: str) -> None:
-    _jvm, fs, p = _fs(spark, path)
-    out = fs.create(p, True)
+def write_atomic(spark, path: str, data: bytes) -> None:
+    """Crash-safe small-file write: ``data`` goes to the hidden sibling
+    ``.<name>.tmp`` (Spark's file listing skips names starting with '.'
+    or '_'), which is renamed to ``path`` only after it is closed. A
+    reader sees the whole file or none of it; a crash leaves at most the
+    hidden temp file. Replaces an existing ``path``; raises OSError when
+    the rename fails."""
+    jvm, fs, p = _fs(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(p.getParent(), f".{p.getName()}.tmp")
+    out = fs.create(tmp, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+    # HDFS-style rename refuses an existing target
+    if fs.exists(p):
+        fs.delete(p, False)
+    if not fs.rename(tmp, p):
+        raise OSError(f"could not rename {tmp.toString()} to {path}")
+
+
+def write_marker(spark, path: str, text: str) -> None:
+    write_atomic(spark, path, text.encode("utf-8"))

@@ -17,7 +17,10 @@ Spark design decisions (SURVEY.md §4):
   the SAME pass that writes the sink — zero extra scans for metrics;
 - per-partition lineage is a small extra agg over the persisted parent;
 - a checkpoint commit row per sink makes a killed run resumable (see
-  checkpoint.py);
+  checkpoint.py); it is one small crash-safe file written by the
+  calling process, so the per-sink bookkeeping runs no Spark job besides
+  the lineage aggregation, and the checkpoint reads (resume, merge
+  snapshot lookup) collect their few rows without a shuffle or sort job;
 - dynamic sink paths ("index-%Y.%m.%d-$(event_type)" in the reference,
   output/ElasticSearch.py:172) become partition columns — the scalable
   equivalent of per-value file paths.
@@ -138,9 +141,8 @@ def merge_snapshot_path(spark: SparkSession, base: str, sink: str,
         return None
     rows = (ckpt.read_checkpoints(spark, base)
             .filter(F.col("sink") == sink)
-            .orderBy(F.col("committed_at").desc())
-            .select("run_id").collect())
-    for r in rows:
+            .select("run_id", "committed_at").collect())
+    for r in sorted(rows, key=lambda r: r["committed_at"], reverse=True):
         p = f"{root}/snap={r['run_id']}"
         if fs_exists(spark, p):
             return p

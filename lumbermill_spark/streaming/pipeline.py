@@ -293,7 +293,10 @@ def _checkpoint_namespace(spark, checkpoint: str) -> str:
     so its batch ids restarting at 0 cannot collide with sink commit
     rows from the previous checkpoint's life — without it, a rebuilt
     stream's batches 0..N would all be resume-SKIPPED as already
-    committed and the reprocess would silently write nothing."""
+    committed and the reprocess would silently write nothing. The marker
+    is written crash-safely (``write_atomic``), so a crash mid-write
+    cannot leave a truncated id that reads back as another namespace;
+    an empty marker gets a new namespace."""
     import uuid as _uuid
 
     from lumbermill_spark.functions.fsutil import read_marker, write_marker

@@ -334,6 +334,170 @@ def test_damaged_checkpoint_fails_closed(spark, tmp_path):
     assert not os.path.exists(f"{base}/docs/snap=c2")
 
 
+def test_commit_runs_no_job_and_round_trips(spark, tmp_path):
+    # a commit is one small file written by this process: no Spark job
+    # runs, and the row reads back equal, including the tokens=None /
+    # lineage=None shape a line_format text sink commits
+    import glob
+
+    base = str(tmp_path / "nojob")
+    sc = spark.sparkContext
+    lineage = [{"partition_id": 1, "rows": 2, "tokens": 7},
+               {"partition_id": 0, "rows": 3, "tokens": None}]
+    sc.setJobGroup("ckpt-commit", "commit")
+    try:
+        ckpt.commit(spark, base, "r1", "route", "parsed", 5, 7, lineage)
+        ckpt.commit(spark, base, "r1", "route", "lines", 2, None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup("ckpt-commit")) == []
+        # the tracker does see this thread's jobs: the read-back runs one
+        sc.setJobGroup("ckpt-read", "read")
+        back = ckpt.read_checkpoints(spark, base).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup("ckpt-read"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {r["sink"]: r.asDict(recursive=True) for r in back}
+    assert all(isinstance(g.pop("committed_at"), float) for g in got.values())
+    assert got == {
+        "parsed": {"run_id": "r1", "stage": "route", "sink": "parsed",
+                   "rows": 5, "tokens": 7, "n_partitions": 2,
+                   "lineage": lineage},
+        "lines": {"run_id": "r1", "stage": "route", "sink": "lines",
+                  "rows": 2, "tokens": None, "n_partitions": None,
+                  "lineage": None},
+    }
+    assert len(glob.glob(f"{base}/_checkpoint/part-*.parquet")) == 2
+    assert not glob.glob(f"{base}/_checkpoint/.*.tmp")
+
+
+def test_mixed_format_and_half_written_checkpoint(spark, tmp_path):
+    # Spark-written and single-file commit rows read as one table; a
+    # hidden temp file left by a crash mid-commit is ignored, so its sink
+    # reads as not committed and a resume rewrites it
+    import os
+    import time
+
+    from lumbermill_spark.router import merge_snapshot_path
+
+    base = str(tmp_path / "mixed")
+    # a row as Spark's own parquet writer stores it (part-*-c000 file
+    # plus _SUCCESS), the layout of existing tables
+    old = [("old", "route", "docs", 2, 5, 1, time.time() - 60, [(0, 2, 5)])]
+    (spark.createDataFrame(old, ckpt.CHECKPOINT_SCHEMA).coalesce(1)
+        .write.mode("append").parquet(f"{base}/_checkpoint"))
+    ckpt.commit(spark, base, "new", "route", "docs", 3, 9,
+                [{"partition_id": 0, "rows": 3, "tokens": 9}])
+    assert os.path.exists(f"{base}/_checkpoint/_SUCCESS")
+    got = sorted((r["run_id"], r["sink"], r["rows"], r["lineage"][0]["tokens"])
+                 for r in ckpt.read_checkpoints(spark, base).collect())
+    assert got == [("new", "docs", 3, 9), ("old", "docs", 2, 5)]
+    assert ckpt.committed_sinks(spark, base, "old") == {"docs"}
+    assert ckpt.committed_sinks(spark, base, "new") == {"docs"}
+    # newest committed snapshot first, across both formats
+    for run in ("old", "new"):
+        os.makedirs(f"{base}/docs/snap={run}")
+    assert merge_snapshot_path(spark, base, "docs").endswith("snap=new")
+    os.rmdir(f"{base}/docs/snap=new")
+    assert merge_snapshot_path(spark, base, "docs").endswith("snap=old")
+
+    # crash mid-commit of sink "plain": half a commit file under the
+    # hidden temp name, in a table with rows and in one without
+    scratch = str(tmp_path / "scratch")
+    ckpt.commit(spark, scratch, "new", "route", "plain", 2, 7, None)
+    part, = [f for f in os.listdir(f"{scratch}/_checkpoint")
+             if f.startswith("part-")]
+    with open(f"{scratch}/_checkpoint/{part}", "rb") as f:
+        half = f.read()[:100]
+    df = spark.createDataFrame([("d1", 3), ("d2", 4)],
+                               "doc_id string, n_tok long")
+    empty = str(tmp_path / "first-commit-crashed")
+    for b, before in ((base, 2), (empty, 0)):
+        os.makedirs(f"{b}/_checkpoint", exist_ok=True)
+        with open(f"{b}/_checkpoint/.{part}.tmp", "wb") as f:
+            f.write(half)
+        assert ckpt.read_checkpoints(spark, b).count() == before
+        assert "plain" not in ckpt.committed_sinks(spark, b, "new")
+        res = route_and_write(df, [SinkSpec("plain")], b, run_id="new",
+                              resume=True)
+        assert res["plain"]["skipped"] is False and res["plain"]["rows"] == 2
+        assert "plain" in ckpt.committed_sinks(spark, b, "new")
+        assert ckpt.read_checkpoints(spark, b).count() == before + 1
+
+
+def _sink_contents(spark, base, spec):
+    from lumbermill_spark.router import read_merged
+
+    df = (read_merged(spark, base, spec.name) if spec.mode == "merge"
+          else spark.read.parquet(f"{base}/{spec.name}"))
+    return sorted(tuple(r) for r in
+                  df.select("doc_id", "version", "event_type", "n_tok")
+                  .collect())
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+# Crash points in run r1 (two sinks, after a clean run r0), resumed with
+# the same run_id: "before_commit" fails sink b's commit after its write,
+# "before_write" fails sink b after sink a's commit. ("append",
+# "before_commit") is left out: it is the documented re-append gap (see
+# streaming run_routed) — an append sink written but not committed is
+# appended again on resume.
+@pytest.mark.parametrize("mode,point", [
+    ("overwrite", "before_write"), ("overwrite", "before_commit"),
+    ("append", "before_write"),
+    ("merge", "before_write"), ("merge", "before_commit"),
+])
+def test_crash_point_resume_matches_uninterrupted(spark, tmp_path,
+                                                  monkeypatch, mode, point):
+    from lumbermill_spark import router
+
+    schema = "doc_id long, version long, event_type string, n_tok long"
+    batches = [
+        spark.createDataFrame([(1, 1, "click", 3), (2, 1, "error", 4),
+                               (3, 1, "click", 5)], schema),
+        spark.createDataFrame([(1, 2, "click", 6), (2, 0, "error", 9),
+                               (4, 1, "error", 2)], schema),
+    ]
+    merge = ({"merge_key": "doc_id", "merge_version": "version"}
+             if mode == "merge" else {})
+    sinks = [SinkSpec("a", "$(event_type) == 'click'", mode=mode, **merge),
+             SinkSpec("b", "$(event_type) != 'click'", mode=mode, **merge)]
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for i, b in enumerate(batches):
+        route_and_write(b, sinks, clean, run_id=f"r{i}")
+    route_and_write(batches[0], sinks, crashed, run_id="r0")
+
+    if point == "before_commit":
+        commit = ckpt.commit
+
+        def failing(spark, base, run_id, stage, sink, *rest):
+            if sink == "b":
+                raise _Crash
+            commit(spark, base, run_id, stage, sink, *rest)
+
+        monkeypatch.setattr(ckpt, "commit", failing)
+    else:
+        write_sink = router._write_sink
+
+        def failing(df, spec, *rest):
+            if spec.name == "b":
+                raise _Crash
+            return write_sink(df, spec, *rest)
+
+        monkeypatch.setattr(router, "_write_sink", failing)
+    with pytest.raises(_Crash):
+        route_and_write(batches[1], sinks, crashed, run_id="r1", resume=True)
+    monkeypatch.undo()
+
+    res = route_and_write(batches[1], sinks, crashed, run_id="r1",
+                          resume=True)
+    assert res["a"]["skipped"] is True and res["b"]["skipped"] is False
+    for s in sinks:
+        assert _sink_contents(spark, crashed, s) == _sink_contents(
+            spark, clean, s)
+
+
 def test_merge_mode_sink(spark, tmp_path):
     # ES 'update' bulk-action analog (ElasticSearch.py:166-194): two
     # batches with overlapping doc_ids route into a merge-mode sink;

@@ -216,6 +216,51 @@ def test_stream_routed_replay_writes_once(spark, tmp_path):
     assert rows.count() == rows.distinct().count() == 3 * len(sinks)
 
 
+def test_namespace_marker_is_crash_safe(spark, tmp_path, monkeypatch):
+    # the namespace marker is written through write_atomic: an empty
+    # marker gets a fresh namespace that then sticks, a hidden temp file
+    # left by a crash mid-write is not read as a namespace, and a failed
+    # rename raises instead of leaving a marker behind
+    from lumbermill_spark.functions import fsutil
+
+    cp = tmp_path / "cp"
+    cp.mkdir()
+    (cp / "__lms_ns").write_text("")
+    ns = sp._checkpoint_namespace(spark, str(cp))
+    assert ns and (cp / "__lms_ns").read_text() == ns
+    assert sp._checkpoint_namespace(spark, str(cp)) == ns
+
+    cp2 = tmp_path / "cp2"
+    cp2.mkdir()
+    (cp2 / ".__lms_ns.tmp").write_text(ns[:5])
+    ns2 = sp._checkpoint_namespace(spark, str(cp2))
+    assert len(ns2) == len(ns) and ns2 not in (ns, ns[:5])
+    assert (cp2 / "__lms_ns").read_text() == ns2
+    assert not (cp2 / ".__lms_ns.tmp").exists()
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            return False
+
+    real_fs = fsutil._fs
+
+    def no_rename_fs(spark, path):
+        jvm, fs, p = real_fs(spark, path)
+        return jvm, NoRename(fs), p
+
+    monkeypatch.setattr(fsutil, "_fs", no_rename_fs)
+    with pytest.raises(OSError, match="could not rename"):
+        sp._checkpoint_namespace(spark, str(tmp_path / "cp3"))
+    monkeypatch.undo()
+    assert not (tmp_path / "cp3" / "__lms_ns").exists()
+
+
 def test_stream_merge_sessions(spark, tmp_path):
     # two sessions for u1 (gap > 1 minute between 00:00:40 and 00:10:00),
     # one for u2; the last session stays open past the watermark and is
