@@ -17,12 +17,14 @@ order-insensitive value hash matches.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lumbermill_spark.functions.grok import expand_grok
 from lumbermill_spark.functions.tokens import decode_tokens, encode_line
 from lumbermill_spark.operators import field_actions, parsers, stateful, stats
 from lumbermill_spark.operators.lookup import asof_join, enrich
@@ -521,9 +523,11 @@ def _q32_grok_parse(spark, sf):
 
 
 def _oracle_grok() -> str:
-    rule = RegexParser([{"apache": _GROK_LINE}]).rules[0]
-    pat = rule.java_pattern.replace("'", "''")
-    gi = rule.group_index
+    # DuckDB extracts by group index: expand with plain groups, strip
+    # any explicit names, and take the indices from the Python compile
+    plain = re.sub(r"\(\?P<\w+>", "(", expand_grok(_GROK_LINE, None, "plain"))
+    pat = plain.replace("'", "''")
+    gi = re.compile(expand_grok(_GROK_LINE)).groupindex
     return f"""
     WITH tok AS (
       SELECT {_SQL_TOK_LINE} AS line

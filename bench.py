@@ -18,7 +18,7 @@ humans reading the log top-down).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR     (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS       (default 32)
+  SPARK_GRAFT_CPUS       (default: nproc, via local[*])
   LMS_BENCH_ROWS         token-table rows (default 2_000_000)
   LMS_BENCH_SKIP_QUERIES set to skip the per-query section
 """

@@ -4,8 +4,9 @@ A from-scratch re-expression of the LumberMill (dstore-dbap/LumberMill)
 parse -> modify -> route -> output dataflow model as idiomatic PySpark:
 
 - events are DataFrame rows (not mutable dicts),
-- parsers/modifiers are Catalyst column expressions or Arrow-vectorized
-  pandas UDFs (never per-row Python),
+- parsers/modifiers are Catalyst column expressions or Arrow-batched
+  Python stages (vectorized kernels such as RE2 per batch; a per-row
+  loop only where no vectorized engine runs the pattern),
 - routing is filter-based DataFrame fan-out to per-sink parquet writes,
 - enrichment is broadcast joins,
 - interval aggregations (Facet/Metrics/Throttle/SimpleStats) are

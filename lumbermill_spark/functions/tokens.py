@@ -12,7 +12,10 @@ Two decode paths:
   payloads (our synthetic corpus is ASCII by construction).
 - ``decode_tokens_arrow`` — one ``mapInArrow`` stage that reinterprets
   each batch's token list as a UTF-8 string array (no per-row work),
-  correct for arbitrary UTF-8. Both agree on ASCII.
+  correct for arbitrary UTF-8. Both agree on ASCII. On the parser path
+  (``RegexParser.apply(tokens_col=...)``) the same stage also parses:
+  decode is fused with the regex kernel, and the line never goes back
+  to the JVM.
 
 Nothing here mutates ``tokens``: the BASELINE invariant is exact
 token-array pass-through per doc_id.
@@ -31,7 +34,8 @@ def decode_tokens(tokens: Column | str) -> Column:
 
 
 def decode_tokens_arrow(df, tokens_col: str = "tokens",
-                        out_col: str = "line", drop_tokens: bool = False):
+                        out_col: str = "line", drop_tokens: bool = False,
+                        parse=None):
     """Vectorized batch decode via mapInArrow: the token list column IS
     the UTF-8 byte stream, so a ListArray<int32> reinterprets as a
     StringArray with the same offsets and the values cast to uint8 —
@@ -42,27 +46,34 @@ def decode_tokens_arrow(df, tokens_col: str = "tokens",
     expression form inside other column expressions. Handles nulls
     (validity buffer is carried over) and sliced batches (offset
     forwarding).
+
+    ``parse=(fields, fn)`` fuses a parse into the same stage:
+    ``fn(line, batch)`` returns one array per StructField in ``fields``,
+    and those columns take the place of ``out_col``, so the line never
+    leaves the stage. New columns overwrite input columns of the same
+    name.
     """
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    in_schema = df.schema
-    out_fields = [f for f in in_schema.fields
-                  if not (drop_tokens and f.name == tokens_col)]
-    out_schema = T.StructType(out_fields + [T.StructField(out_col, T.StringType())])
+    new_fields = parse[0] if parse else [T.StructField(out_col, T.StringType())]
+    new_names = [f.name for f in new_fields]
+    out_fields = [f for f in df.schema.fields
+                  if not (drop_tokens and f.name == tokens_col)
+                  and f.name not in new_names]
     keep_names = [f.name for f in out_fields]
 
     def run(batches):
         for batch in batches:
-            str_arr = _tokens_to_utf8(
+            line = _tokens_to_utf8(
                 batch.column(batch.schema.get_field_index(tokens_col)))
+            new = parse[1](line, batch) if parse else [line]
             cols = [batch.column(batch.schema.get_field_index(n))
                     for n in keep_names]
-            yield pa.RecordBatch.from_arrays(
-                cols + [str_arr], names=keep_names + [out_col]
-            )
+            yield pa.RecordBatch.from_arrays(cols + new,
+                                             names=keep_names + new_names)
 
-    return df.mapInArrow(run, out_schema)
+    return df.mapInArrow(run, T.StructType(out_fields + new_fields))
 
 
 def _tokens_to_utf8(lst):

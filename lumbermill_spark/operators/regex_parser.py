@@ -14,28 +14,22 @@ Reference semantics (/root/reference/lumbermill/parser/Regex.py:147-184):
   (Regex.py:160-183 — matches_dict holds only the last iteration).
 - grok ``%{NAME:field}`` macros are expanded before compile
   (Regex.py:128-145) — we do this at plan build, see functions/grok.py.
-- ``hot_rules_first`` reorders rules by observed hit count every 10s
-  (Regex.py:104-111); the Python-``re`` fallback reorders per batch,
-  which is the micro-batch analog. The Catalyst path leaves rule order
-  alone (WHEN chains already short-circuit); ``optimize_rule_order``
-  is its sample-measured analog.
+- ``hot_rules_first`` re-sorts rules by hit count every 10s
+  (Regex.py:104-111). Here every row sees the declared order, whatever
+  batch it lands in; ``optimize_rule_order`` is the sample-measured
+  analog, fixed at plan build.
 
-One engine per rule set, and the patterns pick it:
+One kernel, ``RegexParser._parse_lines``, parses an Arrow batch of
+lines. The dialect is RE2, the engine the DuckDB oracles run: a rule
+RE2 compiles runs as ``pyarrow.compute.extract_regex``. The patterns
+pick the leg per rule, with no option: a rule RE2 rejects (backrefs,
+lookaround, conditionals, ``\\Z``, ``(?x)``) and every ``findall`` rule
+runs as Python ``re`` over the rows of the same batch no earlier rule
+matched.
 
-- Catalyst, whenever Java's regex runs every pattern. Each rule
-  becomes an ``rlike`` predicate in a WHEN chain selecting
-  ``_rule_idx``; each named group becomes ``regexp_extract`` (search) /
-  ``regexp_extract_all`` (findall) guarded by ``_rule_idx``. Zero
-  Python at runtime, whole-stage codegen, predicate pushdown all apply.
-- Python ``re``, the semantic fallback for rule sets with a construct
-  Java lacks or reads differently (``(?P=name)`` backrefs,
-  ``(?(id)yes|no)`` conditionals, ``\\Z``; see ``_JAVA_UNSAFE``): one
-  vectorized pandas UDF applying the compiled rule list per Arrow
-  batch and returning a struct.
-
-Both read the line from ``source_field``, or with ``tokens_col`` from
-the one vectorized Arrow decode of the token arrays. The two are
-semantics-equivalent on the grammar they share (tested case by case).
+The kernel is one Python stage. With ``tokens_col`` it runs inside the
+Arrow decode ``mapInArrow``, so the line never goes back to the JVM;
+with ``source_field`` it is a scalar Arrow UDF over that one column.
 """
 
 from __future__ import annotations
@@ -43,25 +37,32 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lumbermill_spark.functions.grok import expand_grok
-from lumbermill_spark.functions.tokens import decode_tokens_arrow
+from lumbermill_spark.functions.tokens import _tokens_to_utf8, decode_tokens_arrow
 
 _FLAG_MAP = {
     "re.IGNORECASE": "i", "re.I": "i",
     "re.MULTILINE": "m", "re.M": "m",
     "re.DOTALL": "s", "re.S": "s",
     "re.VERBOSE": "x", "re.X": "x",
-    "re.UNICODE": "", "re.U": "",  # default in py3 / irrelevant in Java
+    "re.UNICODE": "", "re.U": "",  # default in py3
 }
 
 _PY_FLAG_MAP = {
     "i": re.IGNORECASE, "m": re.MULTILINE, "s": re.DOTALL, "x": re.VERBOSE,
 }
+
+# RE2 reads these inline flags as Python does
+_RE2_FLAGS = set("ims")
+
+# an escape, a character class, or an unnamed group's '('
+_UNNAMED_GROUP = re.compile(r"\\.|\[\^?\]?(?:\\.|[^\]\\])*\]|\((?!\?)")
 
 
 # optimize_rule_order's probe: seeded Bernoulli sample fraction, and
@@ -103,14 +104,8 @@ class RegexRule:
     match_type: str = "search"        # 'search' | 'findall'
     # filled by compile_rules:
     py_pattern: str = field(default="", repr=False)
-    java_pattern: str = field(default="", repr=False)
+    re2_pattern: str | None = field(default=None, repr=False)  # None: re leg
     group_index: dict[str, int] = field(default_factory=dict, repr=False)
-
-    def py_flags(self) -> int:
-        out = 0
-        for ch in self.flags:
-            out |= _PY_FLAG_MAP[ch]
-        return out
 
 
 def rules_from_config(field_extraction_patterns: list[dict]) -> list[RegexRule]:
@@ -135,18 +130,60 @@ def compile_rules(rules: list[RegexRule],
                   grok_patterns: dict[str, str] | None = None) -> list[RegexRule]:
     for r in rules:
         r.py_pattern = expand_grok(r.pattern, grok_patterns, "python")
-        # Java side extracts groups by index, so named groups become plain
-        # groups (Java's group-name grammar rejects '_', and names are
-        # unnecessary when indices line up with the Python compile below).
-        r.java_pattern = re.sub(
-            r"\(\?P<\w+>", "(", expand_grok(r.pattern, grok_patterns, "plain")
-        )
         if r.flags:
-            prefix = f"(?{r.flags})"
-            r.py_pattern = prefix + r.py_pattern
-            r.java_pattern = prefix + r.java_pattern
-        r.group_index = dict(re.compile(r.py_pattern, 0).groupindex)
+            r.py_pattern = f"(?{r.flags})" + r.py_pattern
+        r.group_index = dict(re.compile(r.py_pattern).groupindex)
+        r.re2_pattern = _re2_pattern(r)
     return rules
+
+
+def _re2_pattern(rule: RegexRule) -> str | None:
+    """The rule as RE2 runs it, or None for the Python ``re`` leg: a
+    findall rule, a flag RE2 lacks, or a pattern RE2 does not compile.
+    ``extract_regex`` wants every group named, so unnamed ``(`` groups
+    become ``(?:`` (the fields come from the named ones alone)."""
+    if rule.match_type != "search" or set(rule.flags) - _RE2_FLAGS:
+        return None
+    pat = _UNNAMED_GROUP.sub(
+        lambda m: "(?:" if m.group() == "(" else m.group(), rule.py_pattern)
+    try:
+        _match_re2(pat, bool(rule.group_index), pa.array([""]))
+    except pa.ArrowInvalid:
+        return None
+    return pat
+
+
+def _match_re2(pat: str, named: bool, lines: pa.Array):
+    if not named:
+        hit = pc.match_substring_regex(lines, pattern=pat)
+        return pc.fill_null(hit, False), {}
+    got = pc.extract_regex(lines, pattern=pat)
+    return got.is_valid(), {f.name: a for f, a in zip(got.type, got.flatten())}
+
+
+def _match(rule: RegexRule, lines: pa.Array):
+    """(hit, {field: values}) of one rule over ``lines``: null lines never
+    hit, values are null where the rule missed, and a group that took no
+    part in a match reads ``""``."""
+    if rule.re2_pattern is not None:
+        return _match_re2(rule.re2_pattern, bool(rule.group_index), lines)
+    rx = re.compile(rule.py_pattern)
+    findall = rule.match_type == "findall"
+    n = len(lines)
+    hit = [False] * n
+    vals: dict[str, list] = {f: [None] * n for f in rule.group_index}
+    rows = pc.indices_nonzero(lines.is_valid())
+    for i, s in zip(rows.to_pylist(), lines.take(rows).to_pylist()):
+        ms = list(rx.finditer(s)) if findall else [rx.search(s)]
+        if not ms or ms[0] is None:
+            continue
+        hit[i] = True
+        for f, g in rule.group_index.items():
+            got = [m.group(g) or "" for m in ms]
+            vals[f][i] = got if findall else got[0]
+    kind = pa.list_(lines.type) if findall else lines.type
+    return (pa.array(hit, pa.bool_()),
+            {f: pa.array(v, kind) for f, v in vals.items()})
 
 
 def _field_types(rules: list[RegexRule]) -> dict[str, str]:
@@ -176,7 +213,6 @@ class RegexParser:
         source_field: str = "line",
         mark_unmatched_as: str = "Unknown",
         break_on_match: bool = True,
-        hot_rules_first: bool = True,
         grok_patterns: dict[str, str] | None = None,
     ):
         if field_extraction_patterns and isinstance(field_extraction_patterns[0], dict):
@@ -187,43 +223,22 @@ class RegexParser:
         self.source_field = source_field
         self.mark_unmatched_as = mark_unmatched_as
         self.break_on_match = break_on_match
-        self.hot_rules_first = hot_rules_first
         self.field_kinds = _field_types(self.rules)
-
-    # Java regex screen: python-only constructs that would compile under
-    # java.util.regex with different meaning or fail at runtime.
-    _JAVA_UNSAFE = re.compile(r"\(\?P=|\(\?\(|\\Z")
-
-    def _expr_capable(self) -> bool:
-        return not any(self._JAVA_UNSAFE.search(r.py_pattern) for r in self.rules)
-
-    def _source(self, df: DataFrame, tokens_col: str | None,
-                drop_tokens: bool = False) -> tuple[DataFrame, Column]:
-        """(frame, line column): the vectorized Arrow batch decode of
-        ``tokens_col`` (one buffer reinterpret per batch; the
-        per-character JVM expression is ~20x slower and gets inlined
-        into every regex expression by CollapseProject), else
-        ``source_field``."""
-        if not tokens_col:
-            return df, F.col(self.source_field)
-        decoded = decode_tokens_arrow(df, tokens_col, out_col="_lms_line",
-                                      drop_tokens=drop_tokens)
-        return decoded, F.col("_lms_line")
 
     # ------------------------------------------------------------------ #
     def optimize_rule_order(self, df: DataFrame,
                             tokens_col: str | None = None) -> "RegexParser":
-        """Catalyst-path analog of ``hot_rules_first`` (Regex.py:98-111):
+        """Plan-build analog of ``hot_rules_first`` (Regex.py:98-111):
         the reference re-sorts rules by observed hit count every 10 s at
-        runtime; a WHEN chain is fixed at plan build, so instead we
+        runtime; here the order is fixed at plan build, so instead we
         measure per-rule selectivity on a sample ONCE and reorder the
-        chain before building it. With break_on_match, putting the
-        hottest rule first means most rows evaluate exactly one regex.
-        Reordering first-match-wins rules is only safe for rules that
-        never match the same row — a general rule promoted above a more
-        specific subset rule would silently steal its matches. So the
-        sample measures pairwise CO-match counts too, and any pair that
-        co-matches IN THE SAMPLE keeps its original relative order
+        rules before building the stage. With break_on_match, putting
+        the hottest rule first means most rows evaluate exactly one
+        regex. Reordering first-match-wins rules is only safe for rules
+        that never match the same row — a general rule promoted above a
+        more specific subset rule would silently steal its matches. So
+        the sample measures pairwise CO-match counts too, and any pair
+        that co-matches IN THE SAMPLE keeps its original relative order
         (greedy hot-first topological order under those constraints).
         The constraint is SAMPLE-DERIVED, not a guarantee: the probe is
         a seeded Bernoulli sample (``_SAMPLE_FRACTION``, early-stopped
@@ -232,38 +247,28 @@ class RegexParser:
         pair that never co-occurs in the sampled rows can still be
         reordered; keep the original rule order (skip this optimizer)
         when strict first-match precedence between overlapping rules
-        must hold on every row. Rule sets containing Java-unsafe
-        (Python-``re``-only) patterns are left untouched — ``rlike``
-        would throw on them. The line comes from ``tokens_col`` or
-        ``source_field``, as in :meth:`apply`. Returns self (mutated).
+        must hold on every row. The sample is collected to the driver
+        with ``toArrow()`` and each rule runs there with the kernel's
+        own matcher, whichever leg it takes. The line comes from
+        ``tokens_col`` or ``source_field``, as in :meth:`apply`.
+        Returns self (mutated).
         """
         if not self.break_on_match or len(self.rules) < 2:
             return self
-        if not self._expr_capable():
-            return self  # can't probe Java-unsafe patterns with rlike
-        src_df, src = self._source(df, tokens_col)
+        col = tokens_col or self.source_field
+        sample = (df.select(col).sample(fraction=_SAMPLE_FRACTION, seed=42)
+                  .limit(_SAMPLE_ROWS).toArrow().column(0).combine_chunks())
+        if len(sample) == 0:
+            return self
+        lines = _tokens_to_utf8(sample) if tokens_col else sample
         n = len(self.rules)
-        # seeded Bernoulli sample + early-stop limit, NOT a bare prefix
-        # limit: covers ~1/fraction× more of the input while still only
-        # reading ~rows/fraction rows (limit stops the scan)
-        sampled = src_df.sample(fraction=_SAMPLE_FRACTION, seed=42) \
-            .limit(_SAMPLE_ROWS)
-        flags = sampled.select(*[
-            src.rlike(r.java_pattern).cast("int").alias(f"m{i}")
-            for i, r in enumerate(self.rules)
-        ])
-        aggs = [F.sum(F.col(f"m{i}")).alias(f"h{i}") for i in range(n)]
-        aggs += [
-            F.sum(F.col(f"m{i}") * F.col(f"m{j}")).alias(f"o{i}_{j}")
-            for i in range(n) for j in range(i + 1, n)
-        ]
-        counts = flags.agg(*aggs).first()
-        hits = [counts[f"h{i}"] or 0 for i in range(n)]
+        matched = [_match(r, lines)[0] for r in self.rules]
+        hits = [pc.sum(m).as_py() or 0 for m in matched]
         # precedence: overlapping pair (i, j), i<j, must stay i-before-j
         preds: dict[int, set[int]] = {i: set() for i in range(n)}
         for i in range(n):
             for j in range(i + 1, n):
-                if (counts[f"o{i}_{j}"] or 0) > 0:
+                if pc.any(pc.and_(matched[i], matched[j])).as_py():
                     preds[j].add(i)
         order: list[int] = []
         emitted: set[int] = set()
@@ -276,196 +281,74 @@ class RegexParser:
         self.rules = [self.rules[i] for i in order]
         return self
 
+    def _out_fields(self) -> list[T.StructField]:
+        return [T.StructField("event_type", T.StringType())] + [
+            T.StructField(f, T.ArrayType(T.StringType()) if kind == "findall"
+                          else T.StringType())
+            for f, kind in self.field_kinds.items()]
+
     def apply(self, df: DataFrame, tokens_col: str | None = None,
               drop_tokens: bool = False) -> DataFrame:
-        """tokens_col: decode this array<int> column (vectorized Arrow
-        batch decode) and parse it instead of ``source_field``.
-        drop_tokens=True skips shipping the token arrays back out of the
-        decode stage — use it when downstream only needs the parsed
-        fields + n_tok (2-4x less Arrow traffic)."""
-        src_df, src = self._source(df, tokens_col, drop_tokens)
-        parse = self._apply_expr if self._expr_capable() else self._apply_arrow
-        out = parse(src_df, src)
-        return out.drop("_lms_line") if tokens_col else out
+        """tokens_col: decode this array<int> column and parse it in the
+        same Arrow stage, instead of ``source_field``.
+        drop_tokens=True skips shipping the token arrays back out of that
+        stage — use it when downstream only needs the parsed fields +
+        n_tok (2-4x less Arrow traffic)."""
+        fields = self._out_fields()
+        if tokens_col:
+            return decode_tokens_arrow(df, tokens_col, drop_tokens=drop_tokens,
+                                       parse=(fields, self._parse_batch))
+        names = [f.name for f in fields]
 
-    # ----------------------------- Catalyst ----------------------------- #
-    def _apply_expr(self, df: DataFrame, source: Column) -> DataFrame:
-        # Materialize the source expression ONCE behind a projection:
-        # every rule contributes ~1 rlike + 1 regexp_extract per group,
-        # and without this barrier Catalyst inlines the (potentially
-        # expensive — token decode!) source expression into each of
-        # them. One decode per row instead of ~(rules × groups).
-        df = df.withColumn("_lms_src", source)
-        src = F.col("_lms_src")
+        def parse(line, *prior):
+            return pa.StructArray.from_arrays(self._parse_lines(line, *prior),
+                                              names=names)
+
+        prior = [F.col("event_type")] if "event_type" in df.columns else []
+        parsed = F.arrow_udf(parse, T.StructType(fields))(
+            F.col(self.source_field), *prior)
+        out = df.withColumn("_lms_parsed", parsed)
+        out = out.drop(*[c for c in names if c in df.columns])
+        return out.withColumns(
+            {c: F.col("_lms_parsed")[c] for c in names}).drop("_lms_parsed")
+
+    def _parse_batch(self, lines: pa.Array, batch: pa.RecordBatch) -> list:
+        names = batch.schema.names
+        prior = (batch.column(names.index("event_type"))
+                 if "event_type" in names else None)
+        return self._parse_lines(lines, prior)
+
+    def _parse_lines(self, lines: pa.Array, prior: pa.Array | None = None
+                     ) -> list[pa.Array]:
+        """The kernel: one batch of lines -> ``[event_type, *fields]`` in
+        ``_out_fields`` order. Rules run in declared order. With
+        break_on_match each rule sees only the rows no earlier rule hit,
+        so first match wins; without it every rule sees every row, the
+        tag follows the last rule, and each field comes from the last
+        rule that hit and provides it. A null line hits nothing and
+        keeps ``prior`` (the incoming event_type) when given."""
         n = len(self.rules)
-        # _rule_idx: index of the winning rule under break-on-first-match,
-        # or -1. For break_on_match=False the winner for event_type is the
-        # LAST matching rule (fields come from the last matching rule that
-        # defines each group).
-        order = range(n) if self.break_on_match else range(n - 1, -1, -1)
-        idx_expr: Column = F.lit(-1)
-        chain = None
-        for i in order:
-            cond = src.rlike(self.rules[i].java_pattern)
-            chain = F.when(cond, F.lit(i)) if chain is None else chain.when(cond, F.lit(i))
-        if chain is not None:
-            idx_expr = chain.otherwise(F.lit(-1))
-        out = df.withColumn("_rule_idx", idx_expr)
-
-        names = F.array(*[F.lit(r.event_type) for r in self.rules])
-        etype = F.when(
-            F.col("_rule_idx") >= 0, F.element_at(names, F.col("_rule_idx") + 1)
-        ).otherwise(F.lit(self.mark_unmatched_as))
-        if not self.break_on_match and n > 0:
-            # reference quirk: the tag tracks the LAST evaluated rule —
-            # if the final rule missed, the event is marked unmatched even
-            # when an earlier rule hit (Regex.py:160-183).
-            etype = F.when(
-                src.rlike(self.rules[-1].java_pattern),
-                F.lit(self.rules[-1].event_type),
-            ).otherwise(F.lit(self.mark_unmatched_as))
-        # null source: the reference yields the event UNCHANGED
-        # (Regex.py:152-159 KeyError/non-str guard), so a pre-existing
-        # event_type survives; absent one, the unmatched tag applies.
-        # Stash the prior value: the original column is dropped before
-        # the new projection resolves.
-        if "event_type" in df.columns:
-            out = out.withColumn("_lms_prior_et", F.col("event_type"))
-            prior = F.col("_lms_prior_et")
-        else:
-            prior = F.lit(self.mark_unmatched_as)
-        etype = F.when(src.isNull(), prior).otherwise(etype)
-
-        # NOTE on "one regexp_extract per group runs the regex G times":
-        # measured alternatives lose. A single-pass rewrite
-        # (regexp_replace(line, '^[\s\S]*?(?:P)[\s\S]*$', '$1\x1f$2…')
-        # + split + element_at) was benchmarked at sf0.1 on the 9-group
-        # grok rule: ~20% SLOWER even when all 9 groups are consumed
-        # (physical subexpression elimination does not share the
-        # replace+split subtree across CaseWhen branch values, and the
-        # full-line wrapper adds backtracking), and strictly worse when
-        # few groups are consumed, because Catalyst column-prunes unused
-        # per-group extracts to zero cost while the rewrite's cost is
-        # fixed. Per-group extracts + column pruning is the fast plan;
-        # the Python-re fallback already does true single-pass extraction
-        # for Python-only patterns.
-        cols = {"event_type": etype}
-        for fname, kind in self.field_kinds.items():
-            expr: Column = F.lit(None).cast(
-                "array<string>" if kind == "findall" else "string"
-            )
-            providers = [
-                (i, r) for i, r in enumerate(self.rules) if fname in r.group_index
-            ]
-            fchain = None
-            it = providers if self.break_on_match else list(reversed(providers))
-            for i, r in it:
-                gi = r.group_index[fname]
-                if kind == "findall":
-                    val = F.regexp_extract_all(src, F.lit(r.java_pattern), gi)
-                else:
-                    val = F.regexp_extract(src, r.java_pattern, gi)
-                cond = F.col("_rule_idx") == i if self.break_on_match else src.rlike(
-                    r.java_pattern
-                )
-                fchain = F.when(cond, val) if fchain is None else fchain.when(cond, val)
-            if fchain is not None:
-                expr = fchain.otherwise(expr)
-            cols[fname] = expr
-        out = out.drop(*[c for c in cols if c in out.columns])
-        out = out.withColumns(cols)
-        return out.drop("_rule_idx", "_lms_src", "_lms_prior_et")
-
-    # ------------------------- Python re fallback ----------------------- #
-    def _apply_arrow(self, df: DataFrame, source: Column) -> DataFrame:
-        rules_spec = [
-            (r.event_type, r.py_pattern, r.py_flags(), r.match_type,
-             list(r.group_index))
-            for r in self.rules
-        ]
-        field_kinds = dict(self.field_kinds)
-        mark_unmatched = self.mark_unmatched_as
-        break_on_match = self.break_on_match
-        hot_first = self.hot_rules_first
-
-        out_fields = [T.StructField("event_type", T.StringType())]
-        for fname, kind in field_kinds.items():
-            dtype = (T.ArrayType(T.StringType()) if kind == "findall"
-                     else T.StringType())
-            out_fields.append(T.StructField(fname, dtype))
-        out_type = T.StructType(out_fields)
-        fnames = list(field_kinds)
-
-        # per-python-worker state: compiled rules + hit counters persist
-        # across Arrow batches (the closure is unpickled once per worker),
-        # so hot_rules_first reorders per batch like the reference's 10s
-        # timer reorders per interval (Regex.py:104-111).
-        state: dict = {}
-
-        @F.pandas_udf(out_type)
-        def parse_batch(col: pd.Series) -> pd.DataFrame:
-            if "compiled" not in state:
-                state["compiled"] = [
-                    {"event_type": et, "re": re.compile(pat, fl),
-                     "match_type": mt, "groups": grps, "hits": 0}
-                    for (et, pat, fl, mt, grps) in rules_spec
-                ]
-            compiled = state["compiled"]
-            order = list(range(len(compiled)))
-            if hot_first:
-                order.sort(key=lambda i: -compiled[i]["hits"])
-
-            etypes: list[str | None] = []
-            cols: dict[str, list] = {f: [] for f in fnames}
-            for s in col:
-                row_vals: dict[str, object] = {}
-                row_et = None
-                if s is None or not isinstance(s, str):
-                    etypes.append(mark_unmatched)
-                    for f in fnames:
-                        cols[f].append(None)
-                    continue
-                matches: dict = {}
-                for oi in order:
-                    rd = compiled[oi]
-                    matches = {}
-                    if rd["match_type"] == "search":
-                        m = rd["re"].search(s)
-                        if m:
-                            matches = m.groupdict()
-                    else:
-                        for m in rd["re"].finditer(s):
-                            for k, v in m.groupdict().items():
-                                matches.setdefault(k, []).append(v)
-                    if matches:
-                        row_vals.update(matches)
-                        row_et = rd["event_type"]
-                        rd["hits"] += 1
-                        if break_on_match:
-                            break
-                if not matches:
-                    # last-evaluated-rule quirk, same as the Catalyst path
-                    row_et = mark_unmatched
-                etypes.append(row_et if row_et is not None else mark_unmatched)
-                for f in fnames:
-                    cols[f].append(row_vals.get(f))
-            data = {"event_type": etypes}
-            data.update(cols)
-            return pd.DataFrame(data)
-
-        in_col = source
-        out = df.withColumn("_parsed", parse_batch(in_col))
-        # null-source pass-through parity with the reference
-        # (Regex.py:152-159): a pre-existing event_type survives
-        if "event_type" in df.columns:
-            out = out.withColumn(
-                "_prior_et", F.when(in_col.isNull(), F.col("event_type")))
-        clash = [f.name for f in out_type.fields if f.name in df.columns]
-        out = out.drop(*clash)
-        for f in out_type.fields:
-            out = out.withColumn(f.name, F.col("_parsed")[f.name])
-        if "_prior_et" in out.columns:
-            out = out.withColumn(
-                "event_type", F.coalesce("_prior_et", "event_type")
-            ).drop("_prior_et")
-        return out.drop("_parsed")
+        left = lines                  # rows no earlier rule hit
+        code = pa.nulls(len(lines), pa.int32())   # index of the tagging rule
+        parts: dict[str, list] = {f: [] for f in self.field_kinds}
+        for i, r in enumerate(self.rules):
+            hit, vals = _match(r, left)
+            if self.break_on_match or i == n - 1:
+                code = pc.if_else(hit, pa.scalar(i, pa.int32()), code)
+            for f, v in vals.items():
+                parts[f].append(v)
+            if self.break_on_match and i < n - 1:
+                left = pc.replace_with_mask(left, hit,
+                                            pa.scalar(None, left.type))
+        names = pa.array([r.event_type for r in self.rules]
+                         + [self.mark_unmatched_as], pa.string())
+        etype = names.take(pc.fill_null(code, n))
+        if prior is not None:
+            etype = pc.if_else(lines.is_valid(), etype, prior)
+        out = [etype]
+        for f in self.field_kinds:
+            vs = parts.pop(f)
+            if not self.break_on_match:
+                vs.reverse()
+            out.append(vs[0] if len(vs) == 1 else pc.coalesce(*vs))
+        return out

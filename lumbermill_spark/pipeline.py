@@ -70,11 +70,10 @@ def _m_regex(df: DataFrame, cfg: dict) -> DataFrame:
         source_field=cfg.get("source_field", "data"),
         mark_unmatched_as=cfg.get("mark_unmatched_as", "Unknown"),
         break_on_match=cfg.get("break_on_match", True),
-        hot_rules_first=cfg.get("hot_rules_first", True),
     )
     tokens_col = cfg.get("tokens_col")
     if cfg.get("optimize_rule_order"):
-        # Catalyst-path hot_rules_first analog: sample-measured selectivity
+        # plan-build hot_rules_first analog: sample-measured selectivity
         parser.optimize_rule_order(df, tokens_col=tokens_col)
     return parser.apply(df, tokens_col=tokens_col,
                         drop_tokens=cfg.get("drop_tokens", False))
@@ -158,6 +157,8 @@ TRANSFORMS = {
 # valid option keys for modules whose builder isn't a _wrap'ed function
 # (BaseModule-style docstring schemas -> explicit sets here)
 _EXPLICIT_KEYS: dict[str, set[str] | None] = {
+    # hot_rules_first: the reference key is accepted and has no effect
+    # (rule order is fixed at plan build, see optimize_rule_order)
     "parser.Regex": {"field_extraction_patterns", "source_field",
                      "mark_unmatched_as", "break_on_match",
                      "hot_rules_first", "tokens_col",

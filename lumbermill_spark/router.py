@@ -99,10 +99,8 @@ def route_tag(df: DataFrame, sinks: list[SinkSpec]) -> DataFrame:
     relying on the null-drop: when the chain is exhaustive no drop
     filter is emitted at all. The drop filter references the tag CASE,
     and Catalyst pushes such deterministic predicates below upstream
-    projections/aggregates by substitution — re-inlining every rule
-    regex of a RegexParser upstream into the pushed filter, evaluated
-    per ROW (measured ~6 rlikes/row on the 3-rule flagship; the
-    catch-all form keeps each rlike at exactly one evaluation).
+    projections/aggregates by substitution, re-evaluating every sink
+    predicate per ROW instead of per pre-aggregated group.
 
     Single-pass routed WRITE: ``route_and_write(route_tag(df, sinks),
     [SinkSpec("routed", partition_by=["sink"])], base)`` scans and

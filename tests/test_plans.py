@@ -113,26 +113,32 @@ def test_optimize_rule_order_keeps_overlapping_rules_ordered(spark):
     assert counts == {"k_high": 250, "k_any": 250}
 
 
-def test_optimize_rule_order_skips_java_unsafe(spark):
-    # backreference (?P=…) runs only on the Python-re fallback; rlike
-    # would throw, so the optimizer must leave the rule order untouched
-    df = spark.createDataFrame([("aa",), ("ab",)], "line string")
+def test_optimize_rule_order_probes_backref_rules(spark):
+    # the probe runs each rule with the kernel's own matcher, so a rule
+    # set holding a backreference (Python-re leg) is measured and
+    # reordered like any other: the hot backref rule is promoted
+    df = spark.createDataFrame(
+        [("aa",)] * 900 + [("xy",)] * 100, "line string")
     parser = RegexParser(
-        [{"doubled": r"(?P<c>\w)(?P=c)"}, {"any": r"(?P<c2>\w+)"}],
+        [{"x_then": r"^x(?P<t>\w+)"}, {"doubled": r"(?P<c>\w)(?P=c)"}],
     )
-    assert not parser._expr_capable()
-    order_before = [r.event_type for r in parser.rules]
+    assert parser.rules[1].re2_pattern is None
+    base = {r["event_type"]: r["count"] for r in
+            parser.apply(df).groupBy("event_type").count().collect()}
     parser.optimize_rule_order(df)
-    assert [r.event_type for r in parser.rules] == order_before
+    assert [r.event_type for r in parser.rules] == ["doubled", "x_then"]
+    got = {r["event_type"]: r["count"] for r in
+           parser.apply(df).groupBy("event_type").count().collect()}
+    assert got == base == {"doubled": 900, "x_then": 100}
 
 
 def test_route_tag_catchall_keeps_regexes_out_of_filters(spark, tok_path):
     """A catch-all final sink must emit NO null-drop filter: the drop
-    filter's tag CASE gets pushed below the pre-aggregate by Catalyst
-    and re-inlines every rule regex per ROW (round-2 PLANS.md plan 1
-    node (3) — ~6 rlikes/row). With the catch-all, each rule pattern
-    appears in the plan only at its legitimate sites: once for
-    _rule_idx, once per provided field."""
+    filter's tag CASE would be pushed below the pre-aggregate by
+    Catalyst (round-2 PLANS.md plan 1 node (3)). The parse is one Arrow
+    stage, so no rule regex can be inlined into a JVM filter at all:
+    the final plan holds no ``RLIKE`` or ``regexp_extract``, and exactly
+    one parse ``MapInArrow``, below the pre-aggregate."""
     from lumbermill_spark.router import SinkSpec, route_tag
 
     df = spark.read.parquet(tok_path)
@@ -148,10 +154,12 @@ def test_route_tag_catchall_keeps_regexes_out_of_filters(spark, tok_path):
     ]
     tagged = route_tag(pre, sinks)
     out = tagged.groupBy("sink").agg(F.sum("n_rows").alias("n"))
-    plan = _plan(out)
-    for r in rp.rules:
-        sites = 1 + len(r.group_index)  # _rule_idx + one per field
-        assert plan.count(r.java_pattern) <= sites, r.event_type
+    lines = _final_plan_lines(out)
+    final = "\n".join(lines).lower()
+    assert "rlike" not in final and "regexp_extract" not in final
+    assert final.count("mapinarrow") == 1
+    parse = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    assert any("partial_count" in ln for ln in lines[:parse]), final
     # same result as the explicit unmatched-predicate + null-drop form
     explicit = route_tag(pre, sinks[:2] + [
         SinkSpec("unmatched", F.col("event_type") == "Unknown")])

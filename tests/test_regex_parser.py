@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lumbermill_spark.functions.grok import expand_grok
+from lumbermill_spark.functions.tokens import encode_line
 from lumbermill_spark.operators.regex_parser import RegexParser
 
 RAW = '192.168.2.20 - - [28/Jul/2006:10:27:10 -0300] "GET /cgi-bin/try/ HTTP/1.0" 200 3395'
@@ -26,24 +27,35 @@ ACCESS_PATTERN = (
     r"(?P<http_status>\d+)\s+(?P<bytes_send>\d+)"
 )
 
-ENGINES = ["expr", "arrow"]
-
-
-def _run(parser, df, engine, tokens_col=None):
-    """Parse on the Catalyst path ('expr', what ``apply`` picks for
-    every Java-safe rule set) or force the Python-re fallback ('arrow',
-    what ``apply`` picks only for Java-unsafe patterns), so each
-    semantic case checks both."""
-    if engine == "arrow":
-        src_df, src = parser._source(df, tokens_col)
-        return parser._apply_arrow(src_df, src).drop("_lms_line")
-    assert parser._expr_capable()
-    return parser.apply(df, tokens_col=tokens_col)
-
-
-@pytest.fixture(params=ENGINES)
+@pytest.fixture(params=["expr", "arrow"])
 def engine(request):
+    """Which leg of the one parse kernel the rules take. The ids are the
+    names of the two engines these cases were first written against:
+    'expr' keeps the rules as compiled (the RE2 leg wherever RE2 takes
+    them), 'arrow' forces every rule onto the Python-``re`` leg."""
     return request.param
+
+
+def _force_python(parser):
+    for r in parser.rules:
+        r.re2_pattern = None
+    return parser
+
+
+def _run(parser, df, engine):
+    """Parse ``df`` (a ``data`` string column) on the ``engine`` leg with
+    both drivers: the ``source_field`` Arrow UDF over ``data``, and the
+    fused decode + parse stage over ``data``'s token array. The two must
+    agree; the ``source_field`` frame is returned."""
+    if engine == "arrow":
+        _force_python(parser)
+    by_source = parser.apply(df)
+    by_tokens = parser.apply(df.withColumn("tokens", encode_line("data")),
+                             tokens_col="tokens", drop_tokens=True)
+    assert by_tokens.columns == by_source.columns
+    assert sorted(map(repr, by_tokens.collect())) == \
+        sorted(map(repr, by_source.collect()))
+    return by_source
 
 
 def _one_row(spark, line):
@@ -124,8 +136,7 @@ def test_first_match_wins(spark, engine):
         {"numeric": r"^(?P<num>\d+)$"},
         {"anything": r"(?P<all>.+)"},
     ]
-    p = RegexParser(rules, source_field="data",
-                    hot_rules_first=False)
+    p = RegexParser(rules, source_field="data")
     df = spark.createDataFrame([("123",), ("abc",)], "data string")
     rows = {r["data"]: r for r in _run(p, df, engine).collect()}
     assert rows["123"]["event_type"] == "numeric"
@@ -141,10 +152,8 @@ def test_no_break_last_rule_quirk(spark, engine):
         {"numeric": r"^(?P<num>\d+)$"},
         {"alpha": r"^(?P<alpha>[a-z]+)$"},
     ]
-    p = RegexParser(rules, source_field="data",
-                    break_on_match=False, hot_rules_first=False)
+    p = RegexParser(rules, source_field="data", break_on_match=False)
     df = spark.createDataFrame([("123",), ("abc",)], "data string")
-    rows = {r for r in []}
     rows = {r["data"]: r for r in _run(p, df, engine).collect()}
     assert rows["123"]["event_type"] == "Unknown"  # last rule missed
     assert rows["123"]["num"] == "123"             # but fields were set
@@ -158,13 +167,16 @@ def test_null_source(spark, engine):
 
 
 def test_engines_agree_on_corpus(spark):
+    """The RE2 leg and the Python-``re`` leg give the same rows over
+    every output column of the flagship rules."""
     from lumbermill_spark.data.synth import synth_tokens
     from lumbermill_spark.pipelines_builtin import ACCESS_RULES
 
     df = synth_tokens(spark, 300).cache()
-    cols = ("doc_id", "event_type", "remote_ip", "http_status")
-    a, b = (_run(RegexParser(ACCESS_RULES), df, engine, tokens_col="tokens")
-            .select(*cols) for engine in ENGINES)
+    re2 = RegexParser(ACCESS_RULES)
+    assert all(r.re2_pattern for r in re2.rules)
+    a, b = (p.apply(df, tokens_col="tokens", drop_tokens=True)
+            for p in (re2, _force_python(RegexParser(ACCESS_RULES))))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -180,7 +192,7 @@ def test_null_source_preserves_prior_event_type(spark):
         "id string, data string, event_type string",
     )
     rules = [{"kv": r"x=(?P<xval>\d+)"}]
-    for engine in ENGINES:
+    for engine in ("expr", "arrow"):
         out = {r["id"]: r["event_type"]
                for r in _run(RegexParser(rules, source_field="data"), df,
                              engine).collect()}
@@ -188,7 +200,7 @@ def test_null_source_preserves_prior_event_type(spark):
         assert out["b"] == "earlier_type", engine
     # without a prior event_type column, null source -> mark_unmatched_as
     df2 = spark.createDataFrame([("b", None)], "id string, data string")
-    for engine in ENGINES:
+    for engine in ("expr", "arrow"):
         out2 = _run(RegexParser(rules, source_field="data"), df2,
                     engine).first()
         assert out2["event_type"] == "Unknown", engine
@@ -290,32 +302,160 @@ def test_grok_combined_apachelog_fields():
     assert d["agent"] == "Mozilla/5.0 (X11; Linux)"
 
 
-def test_grok_composites_java_safe(spark):
-    # the Catalyst path runs these through Java's regex (rlike /
-    # regexp_extract) — the expansion must be Java-compatible too
-    from pyspark.sql import functions as F
+def test_grok_composites_parse(spark):
+    """Each grok fixture parses to the fields Python ``re`` finds, on
+    whichever leg its expansion takes: %{TIME} carries lookarounds, so
+    everything built on it runs on the Python-``re`` leg."""
+    import re as _re
 
-    from lumbermill_spark.operators.regex_parser import RegexParser
-
-    for name in ("COMBINEDAPACHELOG", "SYSLOGLINE", "HAPROXYHTTP",
-                 "CISCOFW106023", "HTTPD24_ERRORLOG"):
-        df = spark.createDataFrame([(GROK_FIXTURES[name],)], "line string")
+    lines = spark.createDataFrame([(v,) for v in GROK_FIXTURES.values()],
+                                  "line string")
+    legs = {}
+    for name, line in GROK_FIXTURES.items():
         parser = RegexParser([{name.lower(): "%%{%s}" % name}],
                              source_field="line")
-        assert parser._expr_capable(), name
-        row = parser.apply(df).first()
+        legs[name] = parser.rules[0].re2_pattern is not None
+        row = parser.apply(lines).where(F.col("line") == line).first()
         assert row["event_type"] == name.lower(), name
+        want = _re.search(parser.rules[0].py_pattern, line).groupdict()
+        assert {f: row[f] for f in want} == \
+            {f: v or "" for f, v in want.items()}, name
+    assert not legs["SYSLOGLINE"] and not legs["COMBINEDAPACHELOG"]
+    assert legs["CISCOFW106023"]
 
 
-def test_java_unsafe_patterns_take_python_fallback(spark):
-    # a backreference has no Java meaning: apply() must pick the
-    # Python-re fallback from the patterns alone and still parse right
+def test_backref_rule_takes_python_re_leg(spark):
+    # a backreference is beyond RE2: the rule takes the Python-re leg
+    # from its pattern alone, in the same one Arrow UDF stage
     parser = RegexParser([{"doubled": r"(?P<c>\w)(?P=c)"}],
                          source_field="line")
-    assert not parser._expr_capable()
+    assert parser.rules[0].re2_pattern is None
     df = spark.createDataFrame([("xaay",), ("ab",)], "line string")
     out = parser.apply(df)
     got = {r["line"]: (r["event_type"], r["c"]) for r in out.collect()}
     assert got == {"xaay": ("doubled", "a"), "ab": ("Unknown", None)}
     assert "ArrowEvalPython" in out._jdf.queryExecution() \
         .executedPlan().toString()
+
+
+def test_rule_order_does_not_depend_on_batch(spark):
+    """Declared order holds on every batch. 300 "ab" rows come first,
+    so a per-batch hit-count reorder would promote ``any`` above
+    ``doubled`` before the 100 "aa" rows arrive."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        df = spark.createDataFrame(
+            [(i, "ab") for i in range(300)] + [(300 + i, "aa")
+                                              for i in range(100)],
+            "i int, line string").coalesce(1)
+        parser = RegexParser([{"doubled": r"(?P<c>\w)(?P=c)"},
+                              {"any": r"(?P<w>\w+)"}])
+        # filter after collect: a pushed-down filter would keep the "ab"
+        # rows from ever reaching the parse
+        out = parser.apply(df).collect()
+        assert {r["event_type"] for r in out if r["line"] == "aa"} \
+            == {"doubled"}
+    finally:
+        spark.conf.set(key, old)
+
+
+def _tag(spark, rules, line, engine="expr"):
+    p = RegexParser(rules, source_field="data")
+    return _run(p, _one_row(spark, line), engine).first()
+
+
+# Dialect edges. RE2, Java and Python disagree on each; these assert what
+# each leg ships.
+
+def test_re2_leg_whitespace_excludes_vertical_tab(spark):
+    rules = [{"ws": r"(?P<a>a)\s(?P<b>b)"}]
+    assert _tag(spark, rules, "a\x0bb")["event_type"] == "Unknown"
+    assert _tag(spark, rules, "a\x0bb", "arrow")["event_type"] == "ws"
+
+
+def test_dot_matches_carriage_return_on_both_legs(spark):
+    rules = [{"dot": r"(?P<x>a.b)"}]
+    for engine in ("expr", "arrow"):
+        assert _tag(spark, rules, "a\rb", engine)["x"] == "a\rb", engine
+
+
+def test_re2_leg_dollar_skips_trailing_newline(spark):
+    rules = [{"eol": r"(?P<x>abc)$"}]
+    assert _tag(spark, rules, "abc\n")["event_type"] == "Unknown"
+    assert _tag(spark, rules, "abc\n", "arrow")["x"] == "abc"
+
+
+def test_verbose_and_lookaround_rules_take_python_re_leg(spark):
+    rules = [{"verbose": [r"(?P<n> \d+ ) \s kg", "re.VERBOSE"]},
+             {"ahead": r"(?P<w>\w+)(?=!)"}]
+    p = RegexParser(rules, source_field="data")
+    assert [r.re2_pattern for r in p.rules] == [None, None]
+    df = spark.createDataFrame([("12 kg",), ("hey!",), ("hey",)],
+                               "data string")
+    got = {r["data"]: (r["event_type"], r["n"], r["w"])
+           for r in _run(p, df, "expr").collect()}
+    assert got == {"12 kg": ("verbose", "12", None),
+                   "hey!": ("ahead", None, "hey"),
+                   "hey": ("Unknown", None, None)}
+
+
+def test_unnamed_groups_and_no_named_group(spark):
+    rules = [{"unnamed": r"(a|b)+(?P<n>\d+)(x)?"}, {"bare": r"^(z)+$"}]
+    p = RegexParser(rules, source_field="data")
+    assert p.rules[0].re2_pattern == r"(?:a|b)+(?P<n>\d+)(?:x)?"
+    assert p.rules[1].re2_pattern == r"^(?:z)+$"
+    df = spark.createDataFrame([("ab12",), ("zz",), ("q",)], "data string")
+    for engine in ("expr", "arrow"):
+        got = {r["data"]: (r["event_type"], r["n"])
+               for r in _run(p, df, engine).collect()}
+        assert got == {"ab12": ("unnamed", "12"), "zz": ("bare", None),
+                       "q": ("Unknown", None)}, engine
+
+
+def test_re2_and_python_rules_share_a_field_across_batches(spark):
+    """First match wins across legs: the RE2 rule owns ``k=`` lines
+    even where the backref rule also matches, and each field value comes
+    from the rule that tagged its row, batch after batch."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rules = [{"kv": r"k=(?P<v>\w+)"}, {"pair": r"(?P<v>\w)(?P=v)"}]
+        p = RegexParser(rules, source_field="data")
+        assert p.rules[0].re2_pattern and p.rules[1].re2_pattern is None
+        lines = ["k=aa", "xbb", "k=1", "cd", "ee", "k=zz"]
+        df = spark.createDataFrame([(x,) for x in lines],
+                                   "data string").coalesce(1)
+        got = {r["data"]: (r["event_type"], r["v"])
+               for r in _run(p, df, "expr").collect()}
+        assert got == {"k=aa": ("kv", "aa"), "xbb": ("pair", "b"),
+                       "k=1": ("kv", "1"), "cd": ("Unknown", None),
+                       "ee": ("pair", "e"), "k=zz": ("kv", "zz")}
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_findall_over_sliced_batch():
+    import pyarrow as pa
+
+    p = RegexParser([{"num": r"^n(?P<d>\d)"},
+                     {"words": [r"(?P<w>[a-z]+)", "", "findall"]}])
+    lines = pa.array(["zz", "n1", "ab cd", None, "e", "n2"]).slice(1, 4)
+    et, d, w = p._parse_lines(lines)
+    assert et.to_pylist() == ["num", "words", "Unknown", "words"]
+    assert d.to_pylist() == ["1", None, None, None]
+    assert w.to_pylist() == [None, ["ab", "cd"], None, ["e"]]
+
+
+def test_null_line_keeps_prior_event_type_in_kernel():
+    import pyarrow as pa
+
+    p = RegexParser([{"kv": r"x=(?P<x>\d)"}])
+    lines = pa.array([None, "x=1", None, "y"])
+    et, x = p._parse_lines(lines, pa.array(["earlier", "earlier", None, "e"]))
+    assert et.to_pylist() == ["earlier", "kv", None, "Unknown"]
+    assert x.to_pylist() == [None, "1", None, None]
+    et, _ = p._parse_lines(lines)
+    assert et.to_pylist() == ["Unknown", "kv", "Unknown", "Unknown"]
