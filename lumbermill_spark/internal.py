@@ -28,7 +28,7 @@ class InternalStore:
         self._values: dict[str, Any] = {}
         self._bc: dict[str, Any] = {}
 
-    def set(self, key: str, value: Any) -> None:
+    def set(self, key: str, value: Any = None) -> None:
         self._values[key] = value
         # invalidate any stale broadcast of the old value
         old = self._bc.pop(key, None)

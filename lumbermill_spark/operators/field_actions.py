@@ -349,11 +349,18 @@ ACTIONS = {
 }
 
 
+def action_options(config: dict) -> dict:
+    """``config`` with the YAML name 'with' (a Python keyword) renamed to
+    the replace action's parameter ``with_``."""
+    if "with" not in config:
+        return config
+    config = dict(config)
+    config["with_"] = config.pop("with")
+    return config
+
+
 def apply_action(df: DataFrame, action: str, **config) -> DataFrame:
     """Dispatch one modify.Field action (Field.py:272-281)."""
     if action not in ACTIONS:
         raise ValueError(f"unknown field action {action!r}")
-    # YAML configs say 'with' / 'max' / 'map'; keep those names working
-    if "with" in config:
-        config["with_"] = config.pop("with")
-    return ACTIONS[action](df, **config)
+    return ACTIONS[action](df, **action_options(config))

@@ -11,13 +11,22 @@ Spec shape (YAML-safe dict list, module names mirror the reference):
 
     pipeline:
       - input.Tokens:   {path: /data/tokens}          # or input.Synthetic
-      - parser.Regex:   {source: tokens, field_extraction_patterns: [...]}
+      - parser.Regex:   {tokens_col: tokens, field_extraction_patterns: [...]}
       - modifier.Field: {action: map, source_field: http_status, map: {...}}
       - output.Parquet: {name: parsed, filter: "$(event_type) != 'Unknown'",
                          partition_by: [event_type]}
       - output.DevNull: {name: unmatched, filter: "$(event_type) == 'Unknown'"}
 
-Engine-primitive config keys honored on every module
+Each option is declared once: a module's options are the keyword
+parameters of the callable that takes them — its builder in INPUTS or
+TRANSFORMS (after the leading spark/df), ``SinkSpec`` for every output
+module, and for modifier.Field those of the chosen action. The compiler
+checks each config against that signature before any Spark job runs
+(unknown option with a did-you-mean hint, then missing required ones);
+sink rules that span options (mode=merge needs merge_key and
+merge_version) are SinkSpec's own, so the Python API gets them too.
+
+Engine-primitive config keys honored on every transform module
 (BaseModule.py:151-236):
 
 - ``filter``: input filter — non-matching rows BYPASS the module
@@ -53,254 +62,157 @@ except ImportError:  # pragma: no cover
 
 
 # ----------------------------------------------------------------------- #
-# module builders: (df, config) -> df
+# module builders: a module's options are the keyword parameters of the
+# one callable that takes them (inputs: (spark, **cfg); transforms:
+# (df, **cfg); outputs: SinkSpec(**cfg))
 
-def _in_tokens(spark: SparkSession, cfg: dict) -> DataFrame:
-    return spark.read.format(cfg.get("format", "parquet")).load(cfg["path"])
-
-
-def _in_synth(spark: SparkSession, cfg: dict) -> DataFrame:
-    return synth_tokens(spark, int(cfg.get("rows", 10000)),
-                        int(cfg.get("seed", 42)))
+def _in_tokens(spark: SparkSession, path: str,
+               format: str = "parquet") -> DataFrame:
+    return spark.read.format(format).load(path)
 
 
-def _m_regex(df: DataFrame, cfg: dict) -> DataFrame:
-    parser = RegexParser(
-        cfg["field_extraction_patterns"],
-        source_field=cfg.get("source_field", "data"),
-        mark_unmatched_as=cfg.get("mark_unmatched_as", "Unknown"),
-        break_on_match=cfg.get("break_on_match", True),
-    )
-    tokens_col = cfg.get("tokens_col")
-    if cfg.get("optimize_rule_order"):
+def _in_synth(spark: SparkSession, rows: int = 10000,
+              seed: int = 42) -> DataFrame:
+    return synth_tokens(spark, int(rows), int(seed))
+
+
+def _m_regex(df: DataFrame, field_extraction_patterns: list,
+             source_field: str = "data", mark_unmatched_as: str = "Unknown",
+             break_on_match: bool = True, hot_rules_first=None,
+             tokens_col: str | None = None, optimize_rule_order: bool = False,
+             drop_tokens: bool = False) -> DataFrame:
+    # hot_rules_first: the reference key is accepted and has no effect
+    # (rule order is fixed at plan build, see optimize_rule_order)
+    parser = RegexParser(field_extraction_patterns, source_field=source_field,
+                         mark_unmatched_as=mark_unmatched_as,
+                         break_on_match=break_on_match)
+    if optimize_rule_order:
         # plan-build hot_rules_first analog: sample-measured selectivity
         parser.optimize_rule_order(df, tokens_col=tokens_col)
-    return parser.apply(df, tokens_col=tokens_col,
-                        drop_tokens=cfg.get("drop_tokens", False))
+    return parser.apply(df, tokens_col=tokens_col, drop_tokens=drop_tokens)
 
 
-def _m_geo(df: DataFrame, cfg: dict) -> DataFrame:
-    from lumbermill_spark.operators.enrichers import geo_enrich
-
-    geo = df.sparkSession.read.parquet(cfg["geo_table_path"])
-    return geo_enrich(df, geo, cfg["source_fields"],
-                      prefix_len=cfg.get("prefix_len", 3),
-                      target_field=cfg.get("target_field", "geo_info"))
+def _m_geo(df: DataFrame, geo_table_path: str, source_fields: list[str],
+           prefix_len: int = 3, target_field: str = "geo_info") -> DataFrame:
+    geo = df.sparkSession.read.parquet(geo_table_path)
+    return enrichers.geo_enrich(df, geo, source_fields, prefix_len=prefix_len,
+                                target_field=target_field)
 
 
-def _m_field(df: DataFrame, cfg: dict) -> DataFrame:
-    cfg = dict(cfg)
-    action = cfg.pop("action")
-    return field_actions.apply_action(df, action, **cfg)
-
-
-def _m_drop(df: DataFrame, cfg: dict) -> DataFrame:
+def _m_drop(df: DataFrame) -> DataFrame:
     # modifier.DropEvent (/root/reference/lumbermill/modifier/DropEvent.py:21-22)
     # is only meaningful under an input filter; standalone it drops all.
     return df.limit(0)
 
 
-def _wrap(fn):
-    wrapper = lambda df, cfg: fn(df, **cfg)  # noqa: E731
-    wrapper._raw = fn
-    return wrapper
-
-
-def _m_throttle(df: DataFrame, cfg: dict) -> DataFrame:
+def _m_throttle(df: DataFrame, key: str, timeframe: str | None = None,
+                ts_field: str = "ts", min_count: int = 1,
+                max_count: int | None = None) -> DataFrame:
     """misc.Throttle: ``timeframe`` as a date_trunc unit over ``ts_field``
     (the YAML-safe stand-in for an arbitrary frame Column)."""
-    cfg = dict(cfg)
-    unit = cfg.pop("timeframe", None)
-    ts_field = cfg.pop("ts_field", "ts")
-    frame = F.date_trunc(unit, F.col(ts_field)) if unit else None
-    return stats.throttle(df, cfg.pop("key"), timeframe_col=frame, **cfg)
+    frame = F.date_trunc(timeframe, F.col(ts_field)) if timeframe else None
+    return stats.throttle(df, key, timeframe_col=frame, min_count=min_count,
+                          max_count=max_count)
+
+
+def _m_noop(df: DataFrame) -> DataFrame:
+    return df
 
 
 TRANSFORMS = {
     "parser.Regex": _m_regex,
-    "parser.Csv": _wrap(parsers.parse_csv),
-    "parser.Json": _wrap(parsers.parse_json),
-    "parser.JsonEncode": _wrap(parsers.encode_json),
-    "parser.Line": _wrap(parsers.parse_line),
-    "parser.DateTime": _wrap(parsers.parse_datetime),
-    "parser.Url": _wrap(parsers.parse_url),
-    "parser.UrlEncode": _wrap(parsers.encode_url),
-    "parser.SyslogPrival": _wrap(parsers.parse_syslog_prival),
-    "parser.Base64": _wrap(parsers.base64_codec),
-    "parser.Encoding": _wrap(parsers.recode_charset),
-    "parser.Inflate": _wrap(parsers.inflate),
-    "parser.MsgPack": _wrap(parsers.parse_msgpack),
-    "parser.XPath": _wrap(parsers.parse_xpath),
-    "parser.DomainName": _wrap(enrichers.split_domain),
-    "parser.UserAgent": _wrap(enrichers.parse_user_agent),
-    "parser.NetFlow": _wrap(netflow.parse_netflow),
-    "parser.Collectd": _wrap(collectd.parse_collectd),
+    "parser.Csv": parsers.parse_csv,
+    "parser.Json": parsers.parse_json,
+    "parser.JsonEncode": parsers.encode_json,
+    "parser.Line": parsers.parse_line,
+    "parser.DateTime": parsers.parse_datetime,
+    "parser.Url": parsers.parse_url,
+    "parser.UrlEncode": parsers.encode_url,
+    "parser.SyslogPrival": parsers.parse_syslog_prival,
+    "parser.Base64": parsers.base64_codec,
+    "parser.Encoding": parsers.recode_charset,
+    "parser.Inflate": parsers.inflate,
+    "parser.MsgPack": parsers.parse_msgpack,
+    "parser.XPath": parsers.parse_xpath,
+    "parser.DomainName": enrichers.split_domain,
+    "parser.UserAgent": enrichers.parse_user_agent,
+    "parser.NetFlow": netflow.parse_netflow,
+    "parser.Collectd": collectd.parse_collectd,
     "modifier.AddGeoInfo": _m_geo,
-    "modifier.Field": _m_field,
-    "modifier.AddDateTime": _wrap(parsers.add_datetime),
+    "modifier.Field": field_actions.apply_action,
+    "modifier.AddDateTime": parsers.add_datetime,
     "modifier.DropEvent": _m_drop,
-    "modifier.Math": _wrap(stats.math_op),
-    "modifier.MergeEvent": _wrap(stateful.merge_event),
-    "modifier.Permutate": _wrap(stateful.permutate),
-    "modifier.Lookup": _wrap(lookup.enrich_from_dict),
-    "misc.Facet": _wrap(stats.facet),
-    "misc.Metrics": _wrap(stats.metrics),
-    "misc.SimpleStats": _wrap(stats.simple_stats),
+    "modifier.Math": stats.math_op,
+    "modifier.MergeEvent": stateful.merge_event,
+    "modifier.Permutate": stateful.permutate,
+    "modifier.Lookup": lookup.enrich_from_dict,
+    "misc.Facet": stats.facet,
+    "misc.Metrics": stats.metrics,
+    "misc.SimpleStats": stats.simple_stats,
     "misc.Throttle": _m_throttle,
-    "misc.SaltedRepartition": _wrap(salted_repartition),
-    "misc.Noop": lambda df, cfg: df,
+    "misc.SaltedRepartition": salted_repartition,
+    "misc.Noop": _m_noop,
     # ExecPython escape hatch (modifier/ExecPython.py:41-65): user
     # Python over Arrow batches via mapInPandas
-    "modifier.ExecPython": _wrap(escape.exec_python),
+    "modifier.ExecPython": escape.exec_python,
 }
-
-# valid option keys for modules whose builder isn't a _wrap'ed function
-# (BaseModule-style docstring schemas -> explicit sets here)
-_EXPLICIT_KEYS: dict[str, set[str] | None] = {
-    # hot_rules_first: the reference key is accepted and has no effect
-    # (rule order is fixed at plan build, see optimize_rule_order)
-    "parser.Regex": {"field_extraction_patterns", "source_field",
-                     "mark_unmatched_as", "break_on_match",
-                     "hot_rules_first", "tokens_col",
-                     "optimize_rule_order", "drop_tokens"},
-    "modifier.AddGeoInfo": {"geo_table_path", "source_fields",
-                            "prefix_len", "target_field"},
-    "modifier.Field": None,  # validated per-action below
-    "modifier.DropEvent": set(),
-    "misc.Throttle": {"key", "timeframe", "ts_field", "min_count",
-                      "max_count"},
-    "misc.Noop": set(),
-    "misc.SetInternal": {"key", "value"},
-}
-
-
-def _fn_keys(fn) -> set[str] | None:
-    params = list(inspect.signature(fn).parameters.values())[1:]  # drop df
-    if any(p.kind == inspect.Parameter.VAR_KEYWORD for p in params):
-        return None  # **kwargs: can't enumerate, skip validation
-    return {p.name for p in params}
-
-
-# required options for modules whose builder isn't a _wrap'ed function
-# (mirrors the reference's docstring-schema required flags,
-# utils/ConfigurationValidator.py:47-77)
-_EXPLICIT_REQUIRED: dict[str, set[str]] = {
-    "parser.Regex": {"field_extraction_patterns"},
-    "modifier.AddGeoInfo": {"geo_table_path", "source_fields"},
-    "misc.Throttle": {"key"},
-    "misc.SetInternal": {"key"},
-    "modifier.DropEvent": set(),
-    "misc.Noop": set(),
-    "modifier.Field": set(),  # per-action, handled in _validate_module
-}
-
-
-def _fn_required(fn) -> set[str]:
-    params = list(inspect.signature(fn).parameters.values())[1:]  # drop df
-    return {p.name for p in params
-            if p.default is inspect.Parameter.empty
-            and p.kind in (inspect.Parameter.POSITIONAL_OR_KEYWORD,
-                           inspect.Parameter.KEYWORD_ONLY)}
-
-
-def required_keys(name: str) -> set[str]:
-    """Options a module config MUST carry (no default in the builder)."""
-    if name in _EXPLICIT_REQUIRED:
-        return _EXPLICIT_REQUIRED[name]
-    fn = TRANSFORMS.get(name)
-    raw = getattr(fn, "_raw", None)
-    return _fn_required(raw) if raw is not None else set()
-
-
-def valid_keys(name: str) -> set[str] | None:
-    """Allowed config keys for a module (None = action-specific)."""
-    if name in _EXPLICIT_KEYS:
-        return _EXPLICIT_KEYS[name]
-    fn = TRANSFORMS[name]
-    raw = getattr(fn, "_raw", None)
-    return _fn_keys(raw) if raw is not None else set()
-
-
-# conditional requiredness (the reference's `is: required if <key> is
-# <value>` docstring-schema clauses, utils/ConfigurationValidator.py:
-# 26-45): per module, rules (when_key, when_values, required_keys) —
-# every key in required_keys must be present when cfg[when_key] is in
-# when_values; when_values="*" means "whenever when_key is set at all".
-_REQUIRED_IF: dict[str, list[tuple[str, object, set[str]]]] = {
-    # modifier.Field per-action requirements are enforced from the
-    # action function's signature in _validate_module; add cross-key
-    # conditional rules for other modules here as they grow them.
-}
-
-# sink-level conditional rules (outputs are compiled to SinkSpec, not
-# through _validate_module): mode=merge is the ES 'update' bulk action
-# analog and is meaningless without a key and a version column.
-_SINK_REQUIRED_IF: list[tuple[str, object, set[str]]] = [
-    ("mode", ("merge",), {"merge_key", "merge_version"}),
-]
-
-
-def _check_required_if(name: str, cfg: dict,
-                       rules: list[tuple[str, object, set[str]]]) -> None:
-    for when_key, when_values, needed in rules:
-        val = cfg.get(when_key)
-        if val is None:
-            continue
-        if when_values != "*" and val not in when_values:
-            continue
-        missing = needed - set(cfg)
-        if missing:
-            raise ValueError(
-                f"module {name!r}: option(s) "
-                + ", ".join(repr(k) for k in sorted(missing))
-                + f" required when {when_key!r} is {val!r}")
-
-
-def _validate_module(name: str, cfg: dict) -> None:
-    """Compile-time config validation (the reference validates module
-    configs from docstring schemas before start,
-    utils/ConfigurationValidator.py:47-77): unknown module or option →
-    error naming the field, before any Spark job runs."""
-    known = valid_keys(name)
-    required = required_keys(name)
-    if name == "modifier.Field":
-        action = cfg.get("action")
-        if action is None:
-            raise ValueError("modifier.Field requires 'action'")
-        if action not in field_actions.ACTIONS:
-            hint = difflib.get_close_matches(
-                action, field_actions.ACTIONS, n=1)
-            raise ValueError(
-                f"unknown field action {action!r}"
-                + (f" (did you mean {hint[0]!r}?)" if hint else ""))
-        act_fn = field_actions.ACTIONS[action]
-        fk = _fn_keys(act_fn)
-        known = None if fk is None else fk | {"action"}
-        required = _fn_required(act_fn)
-    # unknown options first (the did-you-mean hint is the better error
-    # when a required field was merely typo'd) …
-    if known is not None:
-        extra = set(cfg) - known - _COMMON_KEYS
-        for k in sorted(extra):
-            hint = difflib.get_close_matches(k, known | _COMMON_KEYS, n=1)
-            raise ValueError(
-                f"unknown option {k!r} for module {name!r}"
-                + (f" (did you mean {hint[0]!r}?)" if hint else ""))
-    # … then missing required options fail at compile with the field
-    # named, not later as a KeyError/TypeError inside dataframe()
-    missing = required - set(cfg)
-    if missing:
-        raise ValueError(
-            f"module {name!r} missing required option(s): "
-            + ", ".join(repr(k) for k in sorted(missing)))
-    _check_required_if(name, cfg, _REQUIRED_IF.get(name, []))
 
 INPUTS = {
     "input.Tokens": _in_tokens,
     "input.Synthetic": _in_synth,
 }
 
-OUTPUTS = {"output.Parquet", "output.File", "output.DevNull", "output.StdOut"}
+# output module -> its default SinkSpec format
+OUTPUTS = {"output.Parquet": "parquet", "output.File": "text",
+           "output.DevNull": "noop", "output.StdOut": "noop"}
+
+# engine-primitive keys every transform module takes (BaseModule.py:151-236)
+_COMMON_KEYS = {"filter", "add_fields", "delete_fields", "set_event_type"}
+
+_NAMED = (inspect.Parameter.POSITIONAL_OR_KEYWORD,
+          inspect.Parameter.KEYWORD_ONLY)
+
+
+def _unknown(what: str, name: str, choices, where: str = "") -> ValueError:
+    hint = difflib.get_close_matches(name, choices, n=1)
+    return ValueError(f"unknown {what} {name!r}{where}"
+                      + (f" (did you mean {hint[0]!r}?)" if hint else ""))
+
+
+def _check_options(module: str, fn, cfg: dict, skip: int = 1,
+                   common: set[str] = frozenset()) -> None:
+    """Compile-time config validation (the reference validates module
+    configs from docstring schemas before start,
+    utils/ConfigurationValidator.py:47-77): the options of ``module``
+    are the keyword parameters of ``fn`` after its first ``skip``
+    (df / spark / self). Unknown or missing options fail naming the
+    field, before any Spark job runs."""
+    params = list(inspect.signature(fn).parameters.values())[skip:]
+    named = [p for p in params if p.kind in _NAMED]
+    # unknown options first (the did-you-mean hint is the better error
+    # when a required field was merely typo'd); **kwargs can't be listed
+    if all(p.kind != inspect.Parameter.VAR_KEYWORD for p in params):
+        known = {p.name for p in named} | common
+        for k in sorted(set(cfg) - known):
+            raise _unknown("option", k, known, f" for module {module!r}")
+    missing = {p.name for p in named if p.default is p.empty} - set(cfg)
+    if missing:
+        raise ValueError(
+            f"module {module!r} missing required option(s): "
+            + ", ".join(repr(k) for k in sorted(missing)))
+
+
+def _check_field(cfg: dict) -> dict:
+    """modifier.Field: the options are those of the chosen action."""
+    cfg = field_actions.action_options(cfg)
+    _check_options("modifier.Field", field_actions.apply_action, cfg)
+    action = cfg["action"]
+    if action not in field_actions.ACTIONS:
+        raise _unknown("field action", action, field_actions.ACTIONS)
+    _check_options("modifier.Field", field_actions.ACTIONS[action],
+                   {k: v for k, v in cfg.items() if k != "action"},
+                   common=_COMMON_KEYS)
+    return cfg
 
 
 def _common_actions(df: DataFrame, cfg: dict) -> DataFrame:
@@ -316,20 +228,17 @@ def _common_actions(df: DataFrame, cfg: dict) -> DataFrame:
     return df
 
 
-_COMMON_KEYS = {"filter", "add_fields", "delete_fields", "set_event_type"}
-
-
 def _apply_module(df: DataFrame, name: str, cfg: dict) -> DataFrame:
     cfg = dict(cfg or {})
     input_filter = cfg.pop("filter", None)
     common = {k: cfg.pop(k) for k in list(cfg) if k in _COMMON_KEYS}
     fn = TRANSFORMS[name]
     if input_filter is None:
-        return _common_actions(fn(df, cfg), common)
+        return _common_actions(fn(df, **cfg), common)
     # input-filter pass-through (BaseModule.py:260-276): non-matching rows
     # bypass unchanged
     pred = filter_to_column(input_filter)
-    handled = _common_actions(fn(df.filter(pred), cfg), common)
+    handled = _common_actions(fn(df.filter(pred), **cfg), common)
     bypassed = df.filter(~F.coalesce(pred, F.lit(False)))
     return handled.unionByName(bypassed, allowMissingColumns=True)
 
@@ -380,49 +289,23 @@ def compile_pipeline(spark: SparkSession, spec: list | dict | str) -> CompiledPi
     source_df = None
     stages: list = []
     sinks: list[SinkSpec] = []
-    _SINK_KEYS = {"name", "filter", "path", "format", "partition_by",
-                  "columns", "mode", "compression", "line_format",
-                  "format_line", "merge_key", "merge_version"}
-    _INPUT_KEYS = {"input.Tokens": {"path", "format"},
-                   "input.Synthetic": {"rows", "seed"}}
     for item in spec:
         (name, cfg), = item.items()
         cfg = cfg or {}
         if name in INPUTS:
-            extra = set(cfg) - _INPUT_KEYS[name]
-            if extra:
-                raise ValueError(
-                    f"unknown option {sorted(extra)[0]!r} for {name!r}")
-            source_df = INPUTS[name](spark, cfg)
+            _check_options(name, INPUTS[name], cfg)
+            source_df = INPUTS[name](spark, **cfg)
         elif name in OUTPUTS:
-            extra = set(cfg) - _SINK_KEYS
-            if extra:
-                raise ValueError(
-                    f"unknown option {sorted(extra)[0]!r} for {name!r}")
-            _check_required_if(name, cfg, _SINK_REQUIRED_IF)
-            fmt = {"output.Parquet": "parquet", "output.File": "text",
-                   "output.DevNull": "noop", "output.StdOut": "noop"}[name]
-            sinks.append(SinkSpec(
-                name=cfg.get("name", f"sink{len(sinks)}"),
-                filter=cfg.get("filter"),
-                path=cfg.get("path"),
-                format=cfg.get("format", fmt),
-                partition_by=cfg.get("partition_by", []),
-                columns=cfg.get("columns"),
-                mode=cfg.get("mode", "overwrite"),
-                merge_key=cfg.get("merge_key"),
-                merge_version=cfg.get("merge_version"),
-                compression=cfg.get("compression"),
-                line_format=cfg.get("line_format") or cfg.get("format_line"),
-            ))
+            cfg = {"name": f"sink{len(sinks)}", "format": OUTPUTS[name], **cfg}
+            _check_options(name, SinkSpec, cfg, skip=0)
+            sinks.append(SinkSpec(**cfg))
+        elif name == "modifier.Field":
+            stages.append((name, _check_field(cfg)))
         elif name in TRANSFORMS or name == "misc.SetInternal":
-            _validate_module(name, cfg)
+            _check_options(name, TRANSFORMS.get(name, InternalStore.set), cfg,
+                           common=_COMMON_KEYS)
             stages.append((name, cfg))
         else:
-            hint = difflib.get_close_matches(
-                name, list(TRANSFORMS) + list(INPUTS) + list(OUTPUTS)
-                + ["misc.SetInternal"], n=1)
-            raise ValueError(
-                f"unknown module {name!r}"
-                + (f" (did you mean {hint[0]!r}?)" if hint else ""))
+            raise _unknown("module", name, [*TRANSFORMS, *INPUTS, *OUTPUTS,
+                                            "misc.SetInternal"])
     return CompiledPipeline(spark, stages, sinks, source_df)

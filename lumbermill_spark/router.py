@@ -41,10 +41,18 @@ from lumbermill_spark.functions.filters import filter_to_column
 from lumbermill_spark.functions.fsutil import fs_exists
 
 
+SINK_MODES = ("overwrite", "append", "merge")
+
+
 @dataclass
 class SinkSpec:
     """One output branch. filter=None routes everything (default
-    receiver chaining, LumberMill.py:229-262)."""
+    receiver chaining, LumberMill.py:229-262).
+
+    Validated at construction, so a bad sink fails before any sink of
+    the run writes: ``mode`` is one of SINK_MODES, and mode='merge'
+    needs merge_key + merge_version and a persistent format. Its fields
+    are also the options of every output.* module."""
 
     name: str
     filter: str | Column | None = None
@@ -53,7 +61,7 @@ class SinkSpec:
     format: str = "parquet"
     partition_by: list[str] = dfield(default_factory=list)
     columns: list[str] | None = None     # projection before write
-    # "overwrite" | "append" | "merge". mode="merge" is the
+    # one of SINK_MODES. mode="merge" is the
     # output.ElasticSearch 'update' bulk action analog
     # (ElasticSearch.py:166-194): the batch SCD-1-merges into the
     # sink's latest committed snapshot on merge_key (highest
@@ -69,6 +77,28 @@ class SinkSpec:
     # text write. '%Y...' strftime parts expand at plan build like the
     # reference's dynamic sink paths (DynamicValues.py:155-166).
     line_format: str | None = None
+
+    def __post_init__(self):
+        if self.mode not in SINK_MODES:
+            raise ValueError(
+                f"sink {self.name!r}: mode must be one of "
+                + ", ".join(repr(m) for m in SINK_MODES)
+                + f", not {self.mode!r}")
+        if self.mode != "merge":
+            return
+        missing = [k for k in ("merge_key", "merge_version")
+                   if not getattr(self, k)]
+        if missing:
+            raise ValueError(
+                f"sink {self.name!r}: option(s) "
+                + ", ".join(repr(k) for k in missing)
+                + " required when 'mode' is 'merge' (a merge needs "
+                "merge_key and merge_version)")
+        if self.format == "noop":
+            raise ValueError(
+                f"sink {self.name!r}: mode='merge' needs a persistent "
+                "snapshot (format='noop' writes nothing for the next "
+                "increment to merge onto)")
 
     def predicate(self) -> Column | None:
         if self.filter is None:
@@ -225,15 +255,6 @@ def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
         # what makes the new snapshot current. Idempotent on retry
         # (same run_id -> same dir, mode=overwrite); resume skips
         # via the committed-sinks check in route_and_write.
-        if not spec.merge_key or not spec.merge_version:
-            raise ValueError(
-                f"sink {spec.name!r}: mode='merge' requires "
-                "merge_key and merge_version")
-        if spec.format == "noop":
-            raise ValueError(
-                f"sink {spec.name!r}: mode='merge' needs a "
-                "persistent snapshot (format='noop' writes nothing "
-                "for the next increment to merge onto)")
         from lumbermill_spark.operators.stateful import upsert_latest
 
         prev = merge_snapshot_path(spark, base, spec.name, spec.path)

@@ -58,12 +58,19 @@ def test_unknown_field_action_fails(spark):
         compile_pipeline(spark, [{"modifier.Field": {"action": "uper"}}])
 
 
-def test_field_action_option_validated(spark):
+def test_field_action_option_validated(spark, ev):
     with pytest.raises(ValueError,
                        match="unknown option 'sourcefield'.*modifier.Field"):
         compile_pipeline(spark, [
             {"modifier.Field": {"action": "upper", "sourcefield": ["x"]}},
         ])
+    # YAML says 'with' (a Python keyword) for the replace action's with_
+    p = compile_pipeline(spark, [
+        {"modifier.Field": {"action": "replace", "source_field": "event_type",
+                            "regex": "^cl", "with": "CL"}},
+    ])
+    out = {r["event_id"]: r["event_type"] for r in p.dataframe(ev).collect()}
+    assert out == {1: "CLick", 2: "error", 3: "CLick"}
 
 
 def test_missing_required_option_fails_at_compile(spark):
@@ -83,6 +90,9 @@ def test_missing_required_option_fails_at_compile(spark):
     with pytest.raises(ValueError,
                        match="modifier.Field.*missing required"):
         compile_pipeline(spark, [{"modifier.Field": {"action": "rename"}}])
+    with pytest.raises(ValueError,
+                       match="input.Tokens.*missing required option.*'path'"):
+        compile_pipeline(spark, [{"input.Tokens": {"format": "parquet"}}])
 
 
 def test_sink_and_input_options_validated(spark):
@@ -90,6 +100,101 @@ def test_sink_and_input_options_validated(spark):
         compile_pipeline(spark, [{"output.Parquet": {"filtr": "x"}}])
     with pytest.raises(ValueError, match="unknown option 'rows'"):
         compile_pipeline(spark, [{"input.Tokens": {"rows": 5}}])
+    # an unknown sink mode fails at compile, not after earlier sinks
+    # of the run have written and committed
+    with pytest.raises(ValueError, match="mode must be one of.*'upsert'"):
+        compile_pipeline(spark, "pipeline:\n"
+                                "  - output.Parquet: {name: a}\n"
+                                "  - output.Parquet: {name: b, mode: upsert}\n")
+
+
+_COMMON = {"filter": "$(event_type) == 'x'", "add_fields": {"k": "v"},
+           "delete_fields": ["k"], "set_event_type": "y"}
+_SINK = {"name": "s", "filter": "$(event_type) == 'x'", "path": "/unused/s",
+         "format": "parquet", "partition_by": ["event_type"],
+         "columns": ["doc_id", "event_type"], "mode": "merge",
+         "compression": "snappy", "line_format": "$(doc_id)",
+         "merge_key": "doc_id", "merge_version": "n_tok"}
+_MERGE_REQUIRED = ["merge_key", "merge_version"]  # because mode is merge
+_PINNED = [
+    ("parser.Regex",
+     {"field_extraction_patterns": [{"a": "(?P<x>a)"}], "source_field": "data",
+      "mark_unmatched_as": "Unknown", "break_on_match": True,
+      "hot_rules_first": True, "tokens_col": "tokens",
+      "optimize_rule_order": False, "drop_tokens": False, **_COMMON},
+     ["field_extraction_patterns"]),
+    ("modifier.AddGeoInfo",
+     {"geo_table_path": "/unused/geo", "source_fields": ["ip"],
+      "prefix_len": 3, "target_field": "geo_info", **_COMMON},
+     ["geo_table_path", "source_fields"]),
+    ("modifier.DropEvent", dict(_COMMON), []),
+    ("misc.Throttle",
+     {"key": "source", "timeframe": "hour", "ts_field": "ts", "min_count": 1,
+      "max_count": 5, **_COMMON},
+     ["key"]),
+    ("misc.Noop", dict(_COMMON), []),
+    ("misc.SetInternal", {"key": "k", "value": 1, **_COMMON}, ["key"]),
+    ("input.Tokens", {"path": "TABLE", "format": "parquet"}, ["path"]),
+    ("input.Synthetic", {"rows": 10, "seed": 7}, []),
+    ("output.Parquet", dict(_SINK), _MERGE_REQUIRED),
+    ("output.File", dict(_SINK), _MERGE_REQUIRED),
+    ("output.DevNull", dict(_SINK), _MERGE_REQUIRED),
+    ("output.StdOut", dict(_SINK), _MERGE_REQUIRED),
+]
+
+
+@pytest.mark.parametrize("module,cfg,required", _PINNED,
+                         ids=[m for m, _, _ in _PINNED])
+def test_module_option_sets_pinned(spark, tmp_path, module, cfg, required):
+    # every option these modules took before their declarations moved
+    # into builder signatures still compiles, and each required one is
+    # still required by name
+    cfg = dict(cfg)
+    if cfg.get("path") == "TABLE":
+        cfg["path"] = str(tmp_path / "tokens")
+        spark.range(3).write.parquet(cfg["path"])
+    compile_pipeline(spark, [{module: cfg}])
+    for key in required:
+        short = {k: v for k, v in cfg.items() if k != key}
+        # KeyError: input.Tokens named its missing path that way before
+        with pytest.raises((ValueError, KeyError), match=f"'{key}'"):
+            compile_pipeline(spark, [{module: short}])
+
+
+def test_shipped_yaml_compiles(spark, tmp_path):
+    # the YAML the repo ships: the example, and the benchmark's copy
+    # with its TOKENS placeholder pointed at a real token table
+    import os
+
+    import yaml
+
+    from lumbermill_spark.data.synth import synth_tokens
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tokens = str(tmp_path / "tokens")
+    synth_tokens(spark, 20, num_partitions=1).write.parquet(tokens)
+    with open(os.path.join(root, "examples", "flagship.yaml")) as f:
+        example = f.read()
+    with open(os.path.join(root, "lmbench", "flagship_routed.yaml")) as f:
+        routed = yaml.safe_load(f)
+    assert routed["pipeline"][0] == {"input.Tokens": {"path": "TOKENS"}}
+    routed["pipeline"][0] = {"input.Tokens": {"path": tokens}}
+    for spec in (example, routed):
+        p = compile_pipeline(spark, spec)
+        assert [n for n, _ in p.stages] == [
+            "misc.SaltedRepartition", "parser.Regex", "modifier.Field",
+            "parser.SyslogPrival"]
+        assert [(s.name, s.format, s.filter, s.line_format, s.compression)
+                for s in p.sinks] == [
+            ("web", "parquet",
+             "$(event_type) in ('httpd_access_log', 'nginx_access_log')",
+             None, None),
+            ("firewall", "parquet", "$(event_type) == 'iptables_log'",
+             None, None),
+            ("unmatched", "text", "$(event_type) == 'Unknown'",
+             "$(doc_id) $(n_tok)", "gzip"),
+        ]
+        assert {"event_type", "status_class"} <= set(p.dataframe().columns)
 
 
 def test_common_keys_still_accepted(spark, ev):

@@ -543,11 +543,15 @@ def test_merge_mode_sink(spark, tmp_path):
     assert snap3 == {1: "a5", 2: "b2", 3: "c1", 4: "d1"}
 
 
-def test_merge_mode_requires_key_and_version(spark, tmp_path):
-    bad = [SinkSpec("d", None, mode="merge", merge_key="doc_id")]
-    df = spark.createDataFrame([(1, 1)], "doc_id long, version long")
+def test_merge_mode_requires_key_and_version():
+    # rejected at construction, before route_and_write writes anything
     with pytest.raises(ValueError, match="merge_key and merge_version"):
-        route_and_write(df, bad, str(tmp_path / "x"), run_id="m")
+        SinkSpec("d", None, mode="merge", merge_key="doc_id")
+
+
+def test_unknown_sink_mode_rejected():
+    with pytest.raises(ValueError, match="mode must be one of.*'upsert'"):
+        SinkSpec("d", None, mode="upsert")
 
 
 def test_dynamic_path_text_gzip_sink(spark, tmp_path):
@@ -589,10 +593,7 @@ def test_dynamic_path_text_gzip_sink(spark, tmp_path):
     assert [r["value"] for r in back.collect()] == ["e2|5"]
 
 
-def test_merge_mode_rejects_noop_format(spark, tmp_path):
-    spec = [SinkSpec("d", None, mode="merge", format="noop",
-                     merge_key="doc_id", merge_version="v")]
-    df = spark.createDataFrame([(1, 1)], "doc_id long, v long")
+def test_merge_mode_rejects_noop_format():
     with pytest.raises(ValueError, match="persistent snapshot"):
-        route_and_write(df, spec, str(tmp_path / "x"), run_id="m",
-                        token_col=None)
+        SinkSpec("d", None, mode="merge", format="noop",
+                 merge_key="doc_id", merge_version="v")
