@@ -555,7 +555,7 @@ def _q34_dedup_keepset(spark, sf):
     docs = _t(spark, sf, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=32, bands=16,
                                     shingle_n=3, threshold=0.2)
-    kept = dedup.dedup_keep_set(docs, pairs)
+    kept = dedup.dedup_keep_best(docs, pairs)
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -2924,7 +2924,7 @@ def _q98_dedup_keep_best(spark, sf):
     pipelines use: per duplicate cluster keep the LONGEST member
     (RefinedWeb), ties to the lowest doc_id — not the lowest id
     unconditionally. Same LSH pairs + connected components; one extra
-    score join + component max_by."""
+    score join + one component window."""
     docs = _t(spark, sf, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=32, bands=16,
                                     shingle_n=3, threshold=0.2)

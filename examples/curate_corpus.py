@@ -84,7 +84,7 @@ def main() -> None:
     # 2. near-dup keep-set (LSH candidates -> exact verify -> CC)
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=32, bands=16,
                                     shingle_n=3, threshold=0.5)
-    docs = dedup.dedup_keep_set(docs, pairs)
+    docs = dedup.dedup_keep_best(docs, pairs)
 
     # 3. within-doc repetition scrub — zero-shuffle array expressions;
     # the scrubbed text is what ships (and what later signals score)

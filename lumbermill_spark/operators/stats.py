@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lumbermill_spark.functions.arrays import array_pairs
 from lumbermill_spark.functions.dynamic import dynamic_value_col, has_dynamic_refs
 
 
@@ -537,29 +538,22 @@ def association_rules(txn: DataFrame, txn_col: str = "txn_id",
     lift per unordered item pair.
 
     Plan: distinct (txn, item) once; item counts and per-txn sorted
-    item sets come off that one frame; pair generation is the same
-    pure-JVM indexed array transform as textstats.pmi_pairs (no
-    self-join, bounded items²/txn); frequencies attach via two
-    item-keyed joins (AQE broadcasts when the item dimension is small).
+    item sets come off that one frame; pair generation is
+    :func:`array_pairs` (no self-join, bounded items²/txn); frequencies
+    attach via two item-keyed joins (AQE broadcasts when the item
+    dimension is small).
     Transaction count is a 1-row broadcast.
 
     Output: (item_a, item_b, n_pair, support, conf_ab, conf_ba, lift),
     floats rounded 4, pairs below ``min_pair_count`` dropped.
     """
-    from pyspark.sql import Window  # noqa: F401  (parity with siblings)
-
     ti = txn.select(F.col(txn_col).alias("t"),
                     F.col(item_col).alias("i")).distinct()
     n_txn = ti.select(F.count_distinct("t").alias("n"))
     item_counts = ti.groupBy("i").agg(F.count(F.lit(1)).alias("ni"))
     per_txn = ti.groupBy("t").agg(
         F.sort_array(F.collect_set("i")).alias("items"))
-    arr = F.col("items")
-    pair_gen = F.flatten(F.transform(
-        arr, lambda x, idx: F.transform(
-            F.slice(arr, idx + 2, F.size(arr)),
-            lambda y: F.struct(x.alias("a"), y.alias("b")))))
-    pairs = (per_txn.select(F.explode(pair_gen).alias("p"))
+    pairs = (per_txn.select(F.explode(array_pairs(F.col("items"))).alias("p"))
              .groupBy("p.a", "p.b").agg(F.count(F.lit(1)).alias("n_pair"))
              .where(F.col("n_pair") >= min_pair_count))
     ca = item_counts.select(F.col("i").alias("a"), F.col("ni").alias("n_a"))

@@ -301,9 +301,12 @@ def compile_pipeline(spark: SparkSession, spec: list | dict | str) -> CompiledPi
             sinks.append(SinkSpec(**cfg))
         elif name == "modifier.Field":
             stages.append((name, _check_field(cfg)))
-        elif name in TRANSFORMS or name == "misc.SetInternal":
-            _check_options(name, TRANSFORMS.get(name, InternalStore.set), cfg,
-                           common=_COMMON_KEYS)
+        elif name in TRANSFORMS:
+            _check_options(name, TRANSFORMS[name], cfg, common=_COMMON_KEYS)
+            stages.append((name, cfg))
+        elif name == "misc.SetInternal":
+            # runs on the driver, not over rows: no filter or row actions
+            _check_options(name, InternalStore.set, cfg)
             stages.append((name, cfg))
         else:
             raise _unknown("module", name, [*TRANSFORMS, *INPUTS, *OUTPUTS,

@@ -206,9 +206,10 @@ def dedup_stream(
     follows the batch op's ``keep_nulls=False`` policy; pre-filter
     nulls upstream if they must pass through.
     """
-    key = (F.lower(F.trim(F.col(text_col))) if normalize
-           else F.col(text_col))
-    hashed = df.withColumn("_content_hash", F.sha2(key.cast("string"), 256))
+    from lumbermill_spark.training.dedup import content_hash
+
+    hashed = df.withColumn("_content_hash",
+                           content_hash(F.col(text_col), normalize))
     if ts_col and watermark:
         out = (hashed.withWatermark(ts_col, watermark)
                .dropDuplicatesWithinWatermark(["_content_hash"]))

@@ -7,26 +7,30 @@ expressed Spark-first:
 - exact:      hash-groupBy keep-first — one shuffle on the content hash.
 - n-gram Jaccard: exact set similarity on candidate pairs.
 - MinHash+LSH: shingle → signature (map-side-combinable min aggregates)
-  → band → bucket-join → candidate pairs → exact verify.
+  → band → bucket → candidate pairs → exact verify.
 - SimHash:    64-bit sign-of-weighted-sum fingerprint; near-dup =
   small Hamming distance, candidates via 16-bit chunk banding.
 - embedding cosine: see training/similarity.py (near_duplicate_pairs).
+- keep resolution: pairs → connected components → one kept member per
+  component (:func:`dedup_keep_best`: lowest id, or highest score).
 
 Scale design: every stage is groupBy/join shaped. MinHash signatures
 are computed as 2H min-aggregates over exploded shingle hashes — the
 partial aggregation collapses each partition to one row per doc before
-the shuffle. LSH banding turns the quadratic pair problem into
-groupBy(band_hash); bucket skew (a degenerate band value) is capped by
-``max_bucket`` exactly like production dedup pipelines cap posting
-lists.
+the shuffle. LSH and SimHash banding turn the quadratic pair problem
+into one groupBy per bucket key, in one shared stage
+(:func:`_bucket_pairs`); bucket skew (a degenerate band value) is
+capped by ``max_bucket`` exactly like production dedup pipelines cap
+posting lists.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lumbermill_spark.functions.arrays import array_pairs
 from lumbermill_spark.functions.skew import ensure_min_parallelism
 from lumbermill_spark.training.textstats import words
 
@@ -148,6 +152,14 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
+def _jaccard(a: str, b: str) -> Column:
+    """|a ∩ b| / |a ∪ b| of two array columns, rounded to 6 places;
+    0.0 when both are empty."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -177,8 +189,6 @@ def ngram_jaccard_pairs(
     shingles end-to-end) for cross-checking.
     Output: (id_a, id_b, jaccard) with id_a < id_b.
     """
-    from pyspark.sql import Window
-
     if block_col is None:
         require_block(df, "ngram_jaccard_pairs", unblocked_limit)
     df = ensure_min_parallelism(df)  # single-row-group inputs: fan out
@@ -235,10 +245,8 @@ def ngram_jaccard_pairs(
     joined = (a.join(b, on=blk_names) if block_col else a.crossJoin(b)).filter(
         F.col("id_a") < F.col("id_b")
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    out = joined.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    out = joined.select("id_a", "id_b",
+                        _jaccard("_sh_a", "_sh_b").alias("jaccard"))
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
     return out
@@ -298,6 +306,35 @@ def minhash_signatures(
     return sigs.select(F.col("_id").alias(id_col), sig_arr.alias("sig"))
 
 
+def _bucket_pairs(rows: DataFrame, keys: list[str], member: Column,
+                  max_bucket: int) -> DataFrame:
+    """Distinct (a, b) pairs of ``member`` values sharing a bucket
+    ``keys``, with a < b (members are sorted before pairing).
+
+    Buckets larger than ``max_bucket`` are dropped (degenerate-content
+    guard: empty / boilerplate docs all hash to one bucket, which can
+    collect billions of members at corpus scale and send the candidate
+    set quadratic; those clusters belong to :func:`exact_dedup`). The
+    guard runs BEFORE any bucket is materialized: a window count over
+    ``keys`` streams per partition and drops oversized buckets, then
+    the survivors are collect_set'd. Filtering after collect_set would
+    build the degenerate bucket inside one unspillable aggregation
+    buffer before discarding it: a single-task OOM at corpus scale.
+    Window and groupBy hash-partition on the same keys, so they share
+    one shuffle.
+    """
+    sized = rows.withColumn(
+        "_bn", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+    return (
+        sized.where((F.col("_bn") > 1) & (F.col("_bn") <= max_bucket))
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_set(member)).alias("_m"))
+        .select(F.explode(array_pairs(F.col("_m"))).alias("_p"))
+        .select("_p.a", "_p.b")
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -314,8 +351,7 @@ def minhash_lsh_pairs(
     signature → ``bands`` band-hashes → explode → groupBy(band, hash)
     bucket join → distinct candidate pairs → verify with exact n-gram
     Jaccard ≥ threshold. Buckets larger than ``max_bucket`` are dropped
-    (degenerate-content guard; at corpus scale those are boilerplate
-    clusters handled by exact dedup first).
+    (see :func:`_bucket_pairs`).
     Output: (id_a, id_b, jaccard).
     """
     if num_hashes % bands:
@@ -343,34 +379,8 @@ def minhash_lsh_pairs(
             )
         ).alias("_b"),
     ).select("_id", "_b.band", "_b.bhash")
-    # size-filter BEFORE collect_set: a degenerate band bucket (all
-    # boilerplate docs hash to one band value) must never be
-    # materialized in an aggregation buffer just to be discarded —
-    # window count streams, collect_set buffers (see simhash_pairs).
-    from pyspark.sql import Window as _W
-
-    sized = banded.withColumn(
-        "_bn", F.count(F.lit(1)).over(_W.partitionBy("band", "bhash")))
-    buckets = (
-        sized.where((F.col("_bn") > 1) & (F.col("_bn") <= max_bucket))
-        .drop("_bn")
-        .groupBy("band", "bhash")
-        .agg(F.sort_array(F.collect_set("_id")).alias("ids"))
-    )
-    # all in-bucket pairs (ids sorted, so a<b by construction)
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("_p")
-    ).select("_p.id_a", "_p.id_b").distinct()
+    pairs = _bucket_pairs(banded, ["band", "bhash"], F.col("_id"),
+                          max_bucket).toDF("id_a", "id_b")
 
     # Verify in the SAME DAG with ONE shingle pass: pairs explode
     # long-form (one row per pair side), join once against the shingle
@@ -400,11 +410,9 @@ def minhash_lsh_pairs(
                     ignorenulls=True).alias("_sh_b"),
         )
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
-        regrouped.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        regrouped.select("id_a", "id_b",
+                         _jaccard("_sh_a", "_sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -631,59 +639,43 @@ def connected_components(
                          F.col("label").alias("component"))
 
 
-def dedup_keep_set(
+def dedup_keep_best(
     df: DataFrame,
     pairs: DataFrame,
+    order_col: str | None = None,
     id_col: str = "doc_id",
     a_col: str = "id_a",
     b_col: str = "id_b",
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into a keep decision: group pairs
-    into connected components, keep the lowest id per component plus
+    into connected components and keep one member per component plus
     every unpaired document. Output: df filtered to kept rows.
 
     This is the step after minhash_lsh_pairs / simhash_pairs /
     near_duplicate_pairs in a real curation pipeline — without it, a
     dup CHAIN (a~b, b~c) would keep {a, c} under naive pairwise drops
-    even though a~c are transitive dups."""
-    comp = connected_components(pairs, a_col, b_col)
-    drop = comp.filter(F.col("id") != F.col("component")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(drop, on=id_col, how="left_anti")
+    even though a~c are transitive dups.
 
-
-def dedup_keep_best(
-    df: DataFrame,
-    pairs: DataFrame,
-    order_col: str,
-    id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
-    """Quality-aware variant of :func:`dedup_keep_set`: per duplicate
-    cluster keep the member with the HIGHEST ``order_col`` (ties break
-    to the lowest id), not the lowest id — the keep policy real
+    With no ``order_col`` the lowest id wins: the component label
+    already is that id, so nothing beyond the components is computed.
+    With ``order_col`` the member with the HIGHEST value wins, ties and
+    nulls to the lowest id (nulls rank last) — the keep policy real
     curation pipelines use (RefinedWeb keeps the longest document,
-    quality-filtered corpora keep the best-scoring one).
-
-    ``order_col`` must be non-null for every paired document (score,
-    n_chars, ...); ids may be any orderable type (numeric or string).
-    Cost over dedup_keep_set: one id-keyed join to attach scores + two
-    component-keyed partial aggs (max score, then min id among the
-    maximizers) — component-sized frames, nothing row-scaled on the
-    driver.
+    quality-filtered corpora keep the best-scoring one). The scores
+    attach with one id-keyed join and one window over the component
+    relabels each member with its winner; component-sized frames,
+    nothing row-scaled on the driver. Ids may be any orderable type.
     """
     comp = connected_components(pairs, a_col, b_col)
-    scored = comp.join(
-        df.select(F.col(id_col).alias("id"),
-                  F.col(order_col).alias("_score")), on="id")
-    best = scored.groupBy("component").agg(F.max("_score").alias("_best"))
-    winners = (scored.join(best, on="component")
-               .where(F.col("_score") == F.col("_best"))
-               .groupBy("component").agg(F.min("id").alias("_win")))
-    drop = (comp.join(winners, on="component")
-            .where(F.col("id") != F.col("_win"))
-            .select(F.col("id").alias(id_col)))
+    if order_col is not None:
+        best = Window.partitionBy("component").orderBy(
+            F.col("_score").desc_nulls_last(), F.col("id"))
+        comp = (comp.join(df.select(F.col(id_col).alias("id"),
+                                    F.col(order_col).alias("_score")),
+                          on="id")
+                .withColumn("component", F.first("id").over(best)))
+    drop = comp.filter(F.col("id") != F.col("component")) \
+        .select(F.col("id").alias(id_col))
     return df.join(drop, on=id_col, how="left_anti")
 
 
@@ -759,22 +751,9 @@ def simhash_pairs(
     verified with bit_count(xor). Output: (id_a, id_b, hamming).
 
     Chunk buckets larger than ``max_bucket`` are dropped — the same
-    degenerate-content guard as :func:`minhash_lsh_pairs`. Empty /
-    boilerplate docs all vote to the same fingerprint, so one chunk
-    value can otherwise collect billions of members at corpus scale and
-    the candidate set goes quadratic. Those clusters are exact-dup
-    clusters and belong to :func:`exact_dedup`, not SimHash.
-
-    The size guard runs BEFORE any bucket is materialized: a window
-    count over (chunk, cval) drops oversized buckets first, then the
-    survivors are collect_set'd (the same pattern as
-    :func:`fuzzy_prefix_pairs`). Filtering after collect_set would
-    build the degenerate bucket — the exact case the guard exists for —
-    inside one unspillable aggregation buffer before discarding it: a
-    single-task OOM at corpus scale. Window and groupBy hash-partition
-    on the same keys, so the exchange is reused (one shuffle total).
+    degenerate-content guard as :func:`minhash_lsh_pairs` (see
+    :func:`_bucket_pairs`).
     """
-    from pyspark.sql import Window
     fps = simhash(df, text_col, id_col, bits, hash_expr=hash_expr)
     nchunks = 4
     width = bits // nchunks
@@ -793,51 +772,13 @@ def simhash_pairs(
             ])
         ).alias("_c"),
     ).select("_id", "simhash", "_c.chunk", "_c.cval")
-    # drop degenerate buckets BEFORE collecting them (window count is
-    # streamed per partition — no unbounded buffer), then bucket the
-    # survivors; sort_array over struct(id, fp) orders by id, so
-    # slice-pairing below yields id_a < id_b by construction.
-    sized = chunks.withColumn(
-        "_bn", F.count(F.lit(1)).over(Window.partitionBy("chunk", "cval")))
-    survivors = sized.where(
-        (F.col("_bn") > 1) & (F.col("_bn") <= max_bucket)).drop("_bn")
-    buckets = (
-        survivors.groupBy("chunk", "cval")
-        .agg(
-            F.sort_array(
-                F.collect_set(
-                    F.struct(F.col("_id").alias("id"),
-                             F.col("simhash").alias("fp"))
-                )
-            ).alias("members")
-        )
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("members"), i + 2,
-                                    F.size("members")),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                y["id"].alias("id_b"),
-                                x["fp"].alias("_fa"),
-                                y["fp"].alias("_fb"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("_p")
-        )
-        .select("_p.id_a", "_p.id_b", "_p._fa", "_p._fb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb")))
+    # sort_array over struct(id, fp) orders by id, so id_a < id_b
+    member = F.struct(F.col("_id").alias("id"), F.col("simhash").alias("fp"))
+    cand = _bucket_pairs(chunks, ["chunk", "cval"], member, max_bucket)
+    ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     return (
-        cand.select("id_a", "id_b", ham.alias("hamming"))
+        cand.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                    ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -866,8 +807,6 @@ def dup_span_stats(
 
     Output: (id, n_grams, n_dup_grams, dup_fraction).
     """
-    from pyspark.sql import Window
-
     df = ensure_min_parallelism(df)  # single-row-group inputs: fan out
     grams = df.select(
         F.col(id_col),
@@ -976,8 +915,6 @@ def exact_substring_scrub(
     Output: (id, n_tokens, n_grams, n_removed_grams, covered_tokens,
     retained_tokens, retained_frac).
     """
-    from pyspark.sql import Window
-
     df = ensure_min_parallelism(df)
     ws = words(F.col(text_col))
     n_tokens = F.when(
@@ -1072,8 +1009,6 @@ def line_dedup(
 
     Output: (id, n_lines, n_removed_lines, text_clean, retained_frac).
     """
-    from pyspark.sql import Window
-
     from lumbermill_spark.operators.field_actions import _java_quote
 
     if mode not in ("drop_frequent", "keep_first"):
@@ -1139,8 +1074,6 @@ def fuzzy_prefix_pairs(
 
     Output: (id_a, id_b, dist) with id_a < id_b.
     """
-    from pyspark.sql import Window
-
     w = max_dist + 1
     p = F.substring(F.col(text_col), 1, prefix_len)
     base = (df.select(F.col(id_col).alias("id"), p.alias("p"))

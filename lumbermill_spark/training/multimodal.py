@@ -191,10 +191,6 @@ def resize(df: DataFrame, width: int, height: int,
     return df.mapInPandas(run, out_schema)
 
 
-#: Backwards-compatible alias from the rounds when resize was stubbed.
-resize_stub = resize
-
-
 def frame_sample(df: DataFrame, every_n: int = 30,
                  codec: str = "real") -> DataFrame:
     """Video frame-sampling (1→N rows per video), mapInPandas.
@@ -246,11 +242,6 @@ def frame_sample(df: DataFrame, every_n: int = 30,
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(run, out_schema)
-
-
-#: Backwards-compatible alias from the rounds when frame sampling was a
-#: stub; codec='real' now executes (Y4M payloads).
-frame_sample_stub = frame_sample
 
 
 AHASH_SCHEMA = T.StructType([

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from lumbermill_spark.functions.arrays import array_pairs
 from lumbermill_spark.functions.skew import ensure_min_parallelism
 
 # tiny per-language stopword marker sets (distinct words, lowercase)
@@ -612,12 +613,7 @@ def pmi_pairs(df: DataFrame, text_col: str = "text",
     in_vocab = dt.join(F.broadcast(vocab.select("term")), on="term")
     per_doc = in_vocab.groupBy("d").agg(
         F.sort_array(F.collect_set("term")).alias("ts"))
-    arr = F.col("ts")
-    pair_gen = F.flatten(F.transform(
-        arr, lambda x, i: F.transform(
-            F.slice(arr, i + 2, F.size(arr)),
-            lambda y: F.struct(x.alias("a"), y.alias("b")))))
-    pairs = (per_doc.select(F.explode(pair_gen).alias("p"))
+    pairs = (per_doc.select(F.explode(array_pairs(F.col("ts"))).alias("p"))
              .groupBy("p.a", "p.b").agg(F.count(F.lit(1)).alias("n_pair"))
              .where(F.col("n_pair") >= min_pair_docs))
 

@@ -133,7 +133,7 @@ _PINNED = [
       "max_count": 5, **_COMMON},
      ["key"]),
     ("misc.Noop", dict(_COMMON), []),
-    ("misc.SetInternal", {"key": "k", "value": 1, **_COMMON}, ["key"]),
+    ("misc.SetInternal", {"key": "k", "value": 1}, ["key"]),
     ("input.Tokens", {"path": "TABLE", "format": "parquet"}, ["path"]),
     ("input.Synthetic", {"rows": 10, "seed": 7}, []),
     ("output.Parquet", dict(_SINK), _MERGE_REQUIRED),
@@ -221,6 +221,16 @@ def test_set_internal_feeds_later_module(spark, ev):
     p.internal.set("threshold", 2.5)
     assert p.internal.get("threshold") == 2.5
     assert p.internal.broadcast("threshold").value == 2.5
+
+
+@pytest.mark.parametrize("key", sorted(_COMMON))
+def test_set_internal_rejects_common_keys(spark, key):
+    # SetInternal sets a driver-side value; a row filter or row action
+    # on it would compile and then be ignored
+    with pytest.raises(ValueError, match=f"unknown option '{key}' for "
+                                         "module 'misc.SetInternal'"):
+        compile_pipeline(spark, [{"misc.SetInternal": {
+            "key": "k", "value": 1, key: _COMMON[key]}}])
 
 
 def test_internal_unset_key_raises(spark, ev):

@@ -2,6 +2,8 @@
 pushdown, pruning, broadcast, codegen, partial aggregation — asserted
 on the actual executed plans so a refactor can't silently lose them."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -235,6 +237,24 @@ def test_funnel_is_single_exchange(spark):
             counts[step] = n
         return counts
     assert got == brute()
+
+
+@pytest.mark.parametrize("pairs_fn,keys", [
+    ("minhash_lsh_pairs", ("band", "bhash")),
+    ("simhash_pairs", ("chunk", "cval")),
+], ids=["minhash_lsh_pairs", "simhash_pairs"])
+def test_bucket_stage_is_one_shuffle(spark, pairs_fn, keys):
+    # the max_bucket size window and the collect_set partition on the
+    # same bucket keys, so they share one Exchange
+    from lumbermill_spark.training import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps over") for i in range(20)],
+        "doc_id long, text string")
+    plan = _plan(getattr(dedup, pairs_fn)(docs))
+    on_keys = re.findall(r"Exchange hashpartitioning\({}#\d+L?, {}#\d+L?, "
+                         .format(*keys), plan)
+    assert len(on_keys) == 1, plan
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):

@@ -117,15 +117,18 @@ def test_simhash_pairs_degenerate_bucket_capped(spark):
         F.col("id").alias("doc_id"),
         F.lit("same boilerplate text repeated everywhere").alias("text"),
     )
-    capped = dedup.simhash_pairs(df, max_bucket=100)
-    assert capped.count() == 0
-    # small clusters below the cap still pair up
     small = spark.createDataFrame(
         [(i, "identical tiny doc") for i in range(4)],
         "doc_id long, text string",
     )
-    got = {(r["id_a"], r["id_b"]) for r in dedup.simhash_pairs(small).collect()}
-    assert got == {(a, b) for a in range(4) for b in range(4) if a < b}
+    # MinHash shares the bucket stage: every band of the 10k docs lands
+    # in one bucket, which the same guard drops
+    for pairs_fn in (dedup.simhash_pairs, dedup.minhash_lsh_pairs):
+        capped = pairs_fn(df, max_bucket=100)
+        assert capped.count() == 0
+        # small clusters below the cap still pair up
+        got = {(r["id_a"], r["id_b"]) for r in pairs_fn(small).collect()}
+        assert got == {(a, b) for a in range(4) for b in range(4) if a < b}
 
 
 @pytest.fixture(scope="module")
@@ -212,10 +215,10 @@ def test_multimodal_decode_and_frames(spark):
     with pytest.raises(Exception, match="not a PNG|cannot identify|image"):
         # synth payloads are hash bytes, not images: real codec rejects
         multimodal.decode_images(media, codec="real").collect()
-    frames = multimodal.frame_sample_stub(media.limit(5), codec="fake")
+    frames = multimodal.frame_sample(media.limit(5), codec="fake")
     fr = frames.collect()
     assert len(fr) >= 5
-    resized = multimodal.resize_stub(media.limit(3), 224, 224, codec="fake").collect()
+    resized = multimodal.resize(media.limit(3), 224, 224, codec="fake").collect()
     assert all(r["width"] == 224 for r in resized)
 
 
@@ -340,7 +343,7 @@ def test_connected_components_and_keep_set(spark):
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in [1, 2, 3, 7, 10, 11]], "doc_id long, text string")
     kept = sorted(r["doc_id"]
-                  for r in dedup.dedup_keep_set(docs, pairs).collect())
+                  for r in dedup.dedup_keep_best(docs, pairs).collect())
     # keep component minima (1, 10) + unpaired (7)
     assert kept == [1, 7, 10]
 
@@ -942,6 +945,17 @@ def test_dedup_keep_best(spark):
     kept2 = [r.doc_id for r in
              dedup.dedup_keep_best(docs2, pairs2, "n_chars").collect()]
     assert kept2 == [7]
+
+    # null scores rank last: an all-null cluster {1,2} keeps its lowest
+    # id, mixed clusters {3,4} and {5,6} keep their scored member
+    docs3 = spark.createDataFrame(
+        [(1, None), (2, None), (3, 5), (4, None), (5, None), (6, 7)],
+        "doc_id long, n_chars long")
+    pairs3 = spark.createDataFrame([(1, 2), (3, 4), (5, 6)],
+                                   "id_a long, id_b long")
+    kept3 = sorted(r.doc_id for r in
+                   dedup.dedup_keep_best(docs3, pairs3, "n_chars").collect())
+    assert kept3 == [1, 3, 6]
 
 
 def test_token_budget_trim(spark):

@@ -5,18 +5,25 @@ DuckDB over the same sf dir; compares row count, column-name set, and an
 order-insensitive value hash (columns sorted by name, rows sorted,
 floats canonicalized). Usage:
 
-    python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py [--json OUT] [sf_dir] [query ...]
+
+``--json OUT`` also writes each query's Spark-side ``frame_sig`` and
+whether it passed to OUT, so two checkouts' runs can be diffed.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import json
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, so a second checkout gates its own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from lumbermill_spark.session import get_spark  # noqa: E402
@@ -59,19 +66,24 @@ def connect_oracle(sf: str):
     return con
 
 
-def run_gate(spark, sf: str, only=None, con=None) -> list[str]:
+def run_gate(spark, sf: str, only=None, con=None,
+             record: dict | None = None) -> list[str]:
     """Run the driver-equivalent correctness gate; returns the failing
     query names. Importable (tests wire this in as a smoke check for
-    queries past the driver gate's 50-query cap — see COVERAGE.md)."""
+    queries past the driver gate's 50-query cap — see COVERAGE.md).
+    ``record``, when given, is filled with ``name -> {"ok", "sig"}``:
+    the Spark-side frame_sig (null when Spark raised) and the verdict."""
     if con is None:
         con = connect_oracle(sf)
     only = set(only) if only else None
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    sigs = {}  # name -> Spark-side frame_sig, None when Spark raised
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        sigs[name] = None
         try:
             sdf = fn(spark, sf)
             srows = [tuple(r) for r in sdf.collect()]
@@ -80,6 +92,7 @@ def run_gate(spark, sf: str, only=None, con=None) -> list[str]:
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
+        s_sig = sigs[name] = frame_sig(scols, srows)
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(srows)} rows)"
                   + (" EMPTY!" if not srows else ""))
@@ -94,7 +107,6 @@ def run_gate(spark, sf: str, only=None, con=None) -> list[str]:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {e}")
             continue
-        s_sig = frame_sig(scols, srows)
         d_sig = frame_sig(dcols, drows)
         if s_sig == d_sig:
             print(f"ok   {name}: {s_sig[0]} rows match")
@@ -110,14 +122,25 @@ def run_gate(spark, sf: str, only=None, con=None) -> list[str]:
                 for a, b in diffs[:3]:
                     print(f"       spark : {a[:160]}")
                     print(f"       duckdb: {b[:160]}")
+    if record is not None:
+        record.update({n: {"ok": n not in failures, "sig": sig}
+                       for n, sig in sigs.items()})
     return failures
 
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--json", help="write {query: {ok, sig}} here")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("query", nargs="*")
+    args = ap.parse_args()
     spark = get_spark("oracle-check", cores=8)
-    failures = run_gate(spark, sf, only=only)
+    record: dict = {}
+    failures = run_gate(spark, args.sf_dir, only=args.query, record=record)
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump({"sf": Path(args.sf_dir).name, "queries": record}, f,
+                      indent=1, sort_keys=True)
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
