@@ -29,8 +29,14 @@ merge_version) are SinkSpec's own, so the Python API gets them too.
 Engine-primitive config keys honored on every transform module
 (BaseModule.py:151-236):
 
-- ``filter``: input filter — non-matching rows BYPASS the module
-  unchanged (not dropped): split -> transform -> unionByName;
+- ``filter``: input filter — non-matching rows (and rows where it is
+  null) BYPASS the module unchanged, not dropped. A module that only
+  projects runs as one conditional projection: every column it defines
+  is ``when(filter, new).otherwise(old)``, so the upstream plan runs
+  once and ``new`` is evaluated on handled rows only. Any other module
+  (rows dropped, added or aggregated, a join, a Python stage) runs as
+  split -> transform -> unionByName. Either way the schema is the
+  module's columns, then the input columns it dropped;
 - ``add_fields`` / ``delete_fields`` / ``set_event_type``: common
   actions applied to handled rows.
 """
@@ -39,14 +45,16 @@ from __future__ import annotations
 
 import difflib
 import inspect
+import re
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lumbermill_spark.data.synth import synth_tokens
 from lumbermill_spark.functions.dynamic import dynamic_value_col, has_dynamic_refs
-from lumbermill_spark.functions.filters import filter_to_column
+from lumbermill_spark.functions.filters import filter_to_sql
 from lumbermill_spark.functions.skew import salted_repartition
 from lumbermill_spark.internal import InternalStore
 from lumbermill_spark.operators import (
@@ -102,6 +110,8 @@ def _m_geo(df: DataFrame, geo_table_path: str, source_fields: list[str],
 def _m_drop(df: DataFrame) -> DataFrame:
     # modifier.DropEvent (/root/reference/lumbermill/modifier/DropEvent.py:21-22)
     # is only meaningful under an input filter; standalone it drops all.
+    # It drops rows, so under a filter it takes _apply_module's
+    # split/union path: the bypassed rows are what remains.
     return df.limit(0)
 
 
@@ -169,6 +179,10 @@ OUTPUTS = {"output.Parquet": "parquet", "output.File": "text",
 # engine-primitive keys every transform module takes (BaseModule.py:151-236)
 _COMMON_KEYS = {"filter", "add_fields", "delete_fields", "set_event_type"}
 
+# prefix of the hidden columns of a conditional projection (_apply_module);
+# filter strings cannot name them, they reject "__"
+_HIDDEN = "__lms_bypass_"
+
 _NAMED = (inspect.Parameter.POSITIONAL_OR_KEYWORD,
           inspect.Parameter.KEYWORD_ONLY)
 
@@ -228,6 +242,104 @@ def _common_actions(df: DataFrame, cfg: dict) -> DataFrame:
     return df
 
 
+def _q(name: str) -> str:
+    """SQL for the column called ``name``, dots and backticks literal."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _defined_columns(tagged: DataFrame, out: DataFrame):
+    """(names, exprIds) of the columns the module defines on top of
+    ``tagged``, when every operator it added is a Project and no column
+    it defines reads or replaces a hidden one; else None."""
+    node = out._jdf.queryExecution().analyzed()
+    base = tagged._jdf.queryExecution().analyzed()
+    names, ids = set(), set()
+    while not node.equals(base):
+        if node.nodeName() != "Project":
+            return None
+        child = node.child()
+        # the items that are not a child column passed through
+        items = node.projectList().diff(child.output())
+        for i in range(items.size()):
+            item = items.apply(i)
+            if (_HIDDEN in item.name()
+                    or _HIDDEN in item.references().toString()):
+                return None
+            names.add(item.name())
+            ids.add(item.exprId().id())
+        node = child
+    return names, ids
+
+
+def _optimized(df: DataFrame) -> tuple[Counter, set[int]]:
+    """The non-Project operators of ``df``'s optimized plan, and the
+    exprIds that any of its operators outputs. The session's optimizer
+    is called directly: QueryExecution refuses to optimize a stream."""
+    ops, ids = Counter(), set()
+    optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+    stack = [optimizer.execute(df._jdf.queryExecution().analyzed())]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() != "Project":
+            ops[node.nodeName()] += 1
+        ids.update(map(int, re.findall(r"#(\d+)", node.output().toString())))
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return ops, ids
+
+
+def _as_projection(df: DataFrame, module, hit: str) -> DataFrame | None:
+    """``module`` applied to the rows where the SQL predicate ``hit`` holds,
+    as one projection over ``df``; None when the module is not one.
+
+    The module runs once over all rows, beside hidden copies of its
+    input. It qualifies when it added only Projects that leave the hidden
+    columns alone, and the optimized result has the input's other
+    operators: no Filter, Aggregate, Generate, Join, Window, Limit or
+    Python stage, which would drop, add or regroup rows or run on
+    bypassed ones. Each column it defines becomes
+    ``CASE WHEN hit THEN new ELSE old END``, with ``hit`` read from the
+    input's values in each (not from one flag column: Catalyst does not
+    inline a non-trivial column read more than once, and would then
+    compute the module's columns apart). CaseWhen evaluates ``new`` on
+    handled rows only, so no operator may still output a module column
+    (a Project that Catalyst did not inline into the CaseWhen computes
+    it on every row).
+    The schema is unionByName's: the module's columns, then the input
+    columns it dropped, null on handled rows. The projections are SQL
+    strings: each Column expression would cost a JVM round trip.
+    """
+    old = {c: f"{_HIDDEN}{i}" for i, c in enumerate(df.columns)}
+    hidden = set(old.values())
+    tagged = df.selectExpr("*", *[f"{_q(c)} AS {h}" for c, h in old.items()])
+    out = module(tagged)
+    if not hidden <= set(out.columns):
+        return None
+    found = _defined_columns(tagged, out)
+    if found is None:
+        return None
+    names, ids = found
+    cols = [c for c in out.columns if c not in hidden]
+    new = {c: f"{_HIDDEN}new{j}" for j, c in enumerate(cols) if c in names}
+    # the input under its own names again, the module's columns hidden
+    both = out.selectExpr(*[f"{h} AS {_q(c)}" for c, h in old.items()],
+                          *[f"{_q(c)} AS {h}" for c, h in new.items()])
+
+    def pick(c: str) -> str:
+        if c not in new:  # passed through: the input's value
+            return _q(c)
+        other = f" ELSE {_q(c)}" if c in old else ""
+        return f"CASE WHEN {hit} THEN {new[c]}{other} END AS {_q(c)}"
+
+    res = both.selectExpr(*map(pick, cols),
+                          *[f"CASE WHEN NOT {hit} THEN {_q(c)} END AS {_q(c)}"
+                            for c in old if c not in cols])
+    ops, outs = _optimized(res)
+    if ops != _optimized(df)[0] or ids & outs:
+        return None
+    return res
+
+
 def _apply_module(df: DataFrame, name: str, cfg: dict) -> DataFrame:
     cfg = dict(cfg or {})
     input_filter = cfg.pop("filter", None)
@@ -235,12 +347,20 @@ def _apply_module(df: DataFrame, name: str, cfg: dict) -> DataFrame:
     fn = TRANSFORMS[name]
     if input_filter is None:
         return _common_actions(fn(df, **cfg), common)
-    # input-filter pass-through (BaseModule.py:260-276): non-matching rows
-    # bypass unchanged
-    pred = filter_to_column(input_filter)
+    # input-filter pass-through (BaseModule.py:260-276): rows where the
+    # filter is false or null bypass the module unchanged. A module that
+    # only projects does so as one projection, so the plan upstream of
+    # it runs once; any other splits, transforms the handled rows and
+    # unions the bypassed ones back.
+    pred = filter_to_sql(input_filter)
+    hit = f"coalesce(({pred}), false)"
+    res = _as_projection(
+        df, lambda d: _common_actions(fn(d, **cfg), common), hit)
+    if res is not None:
+        return res
     handled = _common_actions(fn(df.filter(pred), **cfg), common)
-    bypassed = df.filter(~F.coalesce(pred, F.lit(False)))
-    return handled.unionByName(bypassed, allowMissingColumns=True)
+    return handled.unionByName(df.filter(f"NOT {hit}"),
+                               allowMissingColumns=True)
 
 
 class CompiledPipeline:

@@ -14,6 +14,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The local driver heap: 40 % of physical memory, at most 16g.
+
+    One local JVM hosts driver and executors. Very large heaps (48g+)
+    showed erratic multi-tens-of-seconds GC stalls with Arrow-heavy
+    stages, so 16g is the cap (stable, measured). Below it, 40 % leaves
+    room for the Python workers and for a second Spark process on the
+    same host: a fixed 16g on a 15 GB host let the kernel kill one of
+    two JVMs. ``LMS_DRIVER_MEM`` overrides it.
+    """
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf here
+        return "16g"
+    return f"{min(16 << 10, int(total * 0.4) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "lumbermill_spark",
     cores: int | str | None = None,
@@ -54,6 +71,13 @@ def get_spark(
                 "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # a persisted frame (the routed parent) keeps the partitioning
+        # of the plan it caches unless AQE may re-plan it; with this on,
+        # its shuffles coalesce like any other and the sinks read (and
+        # write) a few right-sized partitions instead of one per shuffle
+        # partition
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -61,10 +85,8 @@ def get_spark(
         # we use try_* functions explicitly, but keep ANSI off so plain
         # casts in user filter expressions behave like Spark 3.
         .config("spark.sql.ansi.enabled", "false")
-        # NB not bigger: one local JVM hosts driver+executors, and very
-        # large heaps (48g+) showed erratic multi-tens-of-seconds GC
-        # stalls with Arrow-heavy stages; 16g is stable (measured)
-        .config("spark.driver.memory", os.environ.get("LMS_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("LMS_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -207,6 +207,156 @@ def test_common_keys_still_accepted(spark, ev):
 
 
 # ------------------------------------------------------------------ #
+# input filters: one conditional projection, or split/union
+
+_ROUTED = [
+    (1, "a", "x", "12", "13", 1.5, "l1\nl2"),
+    (2, "b", "y", "7", "30", 2.0, "l3"),
+    (3, None, "z", "oops", "165", None, None),
+    (4, "a", None, None, None, 4.0, "l4\nl5\nl6"),
+    (5, "b", "x", "3.9", "7", -1.0, "l7"),
+]
+_ROUTED_SCHEMA = ("id long, kind string, v string, n string, prival string, "
+                  "x double, data string")
+
+
+@pytest.fixture()
+def routed(spark):
+    # kind 'a' is handled; 'b' and null (a null predicate) bypass. The
+    # repartition keeps the optimizer from folding the rows into the
+    # plan, so the projection runs in a real task.
+    return spark.createDataFrame(_ROUTED, _ROUTED_SCHEMA).repartition(2)
+
+
+def _split_union(df, name, cfg):
+    """The reference bypass: split, transform the handled rows, union."""
+    from lumbermill_spark.functions.filters import filter_to_column
+    from lumbermill_spark.pipeline import TRANSFORMS, _COMMON_KEYS, _common_actions
+
+    cfg = dict(cfg)
+    pred = filter_to_column(cfg.pop("filter"))
+    common = {k: cfg.pop(k) for k in list(cfg) if k in _COMMON_KEYS}
+    handled = _common_actions(TRANSFORMS[name](df.filter(pred), **cfg), common)
+    return handled.unionByName(df.filter(~F.coalesce(pred, F.lit(False))),
+                               allowMissingColumns=True)
+
+
+def _bag(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _has_union(df) -> bool:
+    # the analyzed plan: the optimizer drops a union with an empty side
+    return "Union" in df._jdf.queryExecution().analyzed().toString()
+
+
+_A = {"filter": "$(kind) == 'a'"}
+_PROJECTING = [
+    ("modifier.Field", {"action": "map", "source_field": "v",
+                        "map": {"x": "ex", "y": "why"},
+                        "target_field": "v_class", **_A}),
+    ("modifier.Field", {"action": "upper", "source_fields": ["v"], **_A}),
+    ("modifier.Field", {"action": "cast_to_int", "source_fields": ["n"], **_A}),
+    ("modifier.Field", {"action": "delete", "source_fields": ["v", "n"], **_A}),
+    ("parser.SyslogPrival", {"source_field": "prival", **_A}),
+    ("modifier.Math", {"target_field": "x", "function": "x * 2 + id", **_A}),
+    ("misc.Noop", {"add_fields": {"greet": "hi $(v)", "n": "set"},
+                   "delete_fields": ["data"], "set_event_type": "t", **_A}),
+]
+_NOT_PROJECTING = [
+    ("parser.Line", {"source_field": "data", **_A}),
+    ("modifier.DropEvent", dict(_A)),
+    ("misc.Throttle", {"key": "v", "min_count": 2, **_A}),
+    ("modifier.Field", {"action": "keep", "source_fields": ["id", "v"], **_A}),
+    ("modifier.Field", {"action": "string_replace", "source_field": "v",
+                        "old": "x", "new": "X", "max": 1, **_A}),
+    # reads every column, so it would see the hidden copies
+    ("parser.JsonEncode", {"target_field": "json", **_A}),
+    # renames every column, the hidden copies too
+    ("modifier.Field", {"action": "rename_regex", "regex": "^_*", "replace": "c_",
+                        **_A}),
+]
+
+
+def _ids(cases):
+    return [f"{n}:{c.get('action', '')}" for n, c in cases]
+
+
+@pytest.mark.parametrize("name,cfg", _PROJECTING, ids=_ids(_PROJECTING))
+def test_filtered_projection_matches_split_union(spark, routed, name, cfg):
+    from lumbermill_spark.pipeline import _apply_module
+
+    got, ref = _apply_module(routed, name, cfg), _split_union(routed, name, cfg)
+    assert not _has_union(got)
+    assert got.schema == ref.schema
+    assert _bag(got) == _bag(ref)
+    # bypassed rows, the null-predicate row among them, are unchanged
+    keep = [c for c in routed.columns if c in got.columns]
+    bypassed = "kind IS NULL OR kind != 'a'"
+    assert _bag(got.filter(bypassed).select(keep)) == \
+        _bag(routed.filter(bypassed).select(keep))
+
+
+@pytest.mark.parametrize("name,cfg", _NOT_PROJECTING, ids=_ids(_NOT_PROJECTING))
+def test_filtered_non_projection_keeps_split_union(spark, routed, name, cfg):
+    from lumbermill_spark.pipeline import _apply_module
+
+    got, ref = _apply_module(routed, name, cfg), _split_union(routed, name, cfg)
+    assert _has_union(got)
+    assert got.schema == ref.schema
+    assert _bag(got) == _bag(ref)
+
+
+@pytest.mark.parametrize("extra,projection", [
+    ({"add_fields": {"seen": "yes"}}, True),
+    # x feeds two more columns, so Catalyst keeps the Project computing
+    # it apart from the CaseWhen: that module takes split/union
+    ({"add_fields": {"seen": "$(x)", "again": "$(x)"}}, False),
+], ids=["inlined", "reused"])
+def test_filtered_module_skips_bypassed_rows(spark, extra, projection):
+    # new values are computed on handled rows only: a function that
+    # raises on every other row runs, and bypassed rows stay identical.
+    # Local rows: the optimizer evaluates while planning any Project it
+    # cannot merge into the CaseWhen, over every row.
+    local = spark.createDataFrame(_ROUTED, _ROUTED_SCHEMA)
+    p = compile_pipeline(spark, [{"modifier.Math": {
+        "target_field": "x", "filter": "$(kind) == 'a'",
+        "function": "if(kind = 'a', x * 10, raise_error('bypassed row'))",
+        **extra}}])
+    out = p.dataframe(local)
+    assert _has_union(out) != projection
+    got = {r["id"]: r for r in out.collect()}
+    for row in _ROUTED:
+        if row[1] != "a":
+            assert [got[row[0]][c] for c in local.columns] == list(row)
+            assert got[row[0]]["seen"] is None
+    assert [got[i]["x"] for i in (1, 4)] == [15.0, 40.0]
+
+
+def test_filtered_projection_on_a_stream(spark, tmp_path):
+    # a streaming frame cannot be optimized through its QueryExecution;
+    # the filtered projection still compiles and runs on it
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("a", "keep"), ("b", "skip"), ("c", None)],
+                          "v string, tag string").write.parquet(src)
+    stream = spark.readStream.schema("v string, tag string").parquet(src)
+    p = compile_pipeline(spark, [{"modifier.Field": {
+        "action": "upper", "source_fields": ["v"], "filter": "$(tag) == 'keep'"}}])
+    out = p.dataframe(stream)
+    assert out.isStreaming and not _has_union(out)
+    q = (out.writeStream.format("memory").queryName("filtered_stream")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    got = spark.table("filtered_stream").collect()
+    assert sorted(tuple(r) for r in got) == [
+        ("A", "keep"), ("b", "skip"), ("c", None)]
+
+
+# ------------------------------------------------------------------ #
 # set_internal (BaseModule.py:234-235 analog)
 
 def test_set_internal_feeds_later_module(spark, ev):

@@ -171,6 +171,31 @@ def test_route_tag_catchall_keeps_regexes_out_of_filters(spark, tok_path):
     assert a == b
 
 
+def test_filtered_modules_run_upstream_once(spark):
+    """examples/flagship.yaml filters two modules. Each is a projection,
+    so it runs as one conditional projection: the plan holds no Union,
+    and as many decode/parse ``MapInArrow`` and ``Exchange`` nodes as
+    the same spec with the module filters removed."""
+    import os
+
+    import yaml
+
+    from lumbermill_spark.pipeline import compile_pipeline
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "examples", "flagship.yaml")) as f:
+        spec = yaml.safe_load(f)
+    bare = [{n: {k: v for k, v in (c or {}).items() if k != "filter"}
+             if not n.startswith("output.") else c}
+            for (n, c), in (m.items() for m in spec["pipeline"])]
+    assert bare != spec["pipeline"]
+    plans = [_plan(compile_pipeline(spark, s).dataframe())
+             for s in (spec, {"pipeline": bare})]
+    assert "Union" not in plans[0]
+    for node in ("MapInArrow", "Exchange"):
+        assert plans[0].count(node) == plans[1].count(node) > 0, node
+
+
 def test_funnel_is_single_exchange(spark):
     # q89's scale property: the whole K-step funnel partitions the
     # events exactly ONCE on the user — K chained window passes plus
