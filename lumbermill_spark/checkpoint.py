@@ -25,10 +25,15 @@ the table snapshot itself):
    skipped entirely (their data is already consistent: the marker is
    written only after the data).
 
-Readers list every visible parquet file in ``_checkpoint``, so tables
-holding rows written by Spark's own parquet writer (``part-*-c000``
-files plus ``_SUCCESS``) read together with the single-file rows. Like
-the reference, the protocol tolerates duplicates on re-run because
+``read_checkpoints`` is the one reader; ``committed_sinks``, the
+router's merge snapshot lookup and ``sink_stats`` filter its frame. It
+lists ``_checkpoint`` on the driver and reads exactly the visible
+``*.parquet`` files, so Spark-written rows (``part-*-c000`` files plus
+``_SUCCESS``) read together with the single-file rows. It fails closed:
+only an absent table, or one with no visible parquet file, reads as
+"nothing committed"; anything else that cannot be read raises, so a
+damaged table never makes a resume redo work or a merge drop history.
+Like the reference, the protocol tolerates duplicates on re-run because
 doc_ids are stable (EventBuffer.py:29-31 makes the same argument) and
 sink writes are idempotent overwrites.
 """
@@ -45,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from lumbermill_spark.functions.fsutil import fs_exists, write_atomic
+from lumbermill_spark.functions.fsutil import list_visible, write_atomic
 
 CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
@@ -100,21 +105,20 @@ def commit(spark: SparkSession, base: str, run_id: str, stage: str, sink: str,
                  buf.getvalue().to_pybytes())
 
 
-def has_checkpoints(spark: SparkSession, base: str) -> bool:
-    """Whether the checkpoint table exists. Readers treat ONLY its
-    absence as "nothing committed"; every other read error propagates,
-    so a damaged table can never make a resume redo (and duplicate) work
-    or a merge drop the sink's history."""
-    return fs_exists(spark, _ckpt_path(base))
+def read_checkpoints(spark: SparkSession, base: str) -> DataFrame:
+    """Every commit row under ``base``, typed CHECKPOINT_SCHEMA. An
+    absent table, or one with no visible parquet file, is an empty frame
+    and runs no job; any other read error propagates."""
+    files = list_visible(spark, _ckpt_path(base), ".parquet")
+    if not files:
+        # typed nulls over an empty range: Catalyst plans no scan, so
+        # collecting it runs no job (createDataFrame([]) runs one)
+        return spark.range(0).selectExpr(*(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in CHECKPOINT_SCHEMA))
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(*files)
 
 
 def committed_sinks(spark: SparkSession, base: str, run_id: str) -> set[str]:
-    if not has_checkpoints(spark, base):
-        return set()
-    df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(_ckpt_path(base))
-    return {r["sink"] for r in
-            df.filter(F.col("run_id") == run_id).select("sink").collect()}
-
-
-def read_checkpoints(spark: SparkSession, base: str) -> DataFrame:
-    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(_ckpt_path(base))
+    return {r["sink"] for r in read_checkpoints(spark, base)
+            .filter(F.col("run_id") == run_id).select("sink").collect()}

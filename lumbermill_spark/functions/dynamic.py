@@ -33,6 +33,14 @@ def has_dynamic_refs(template: str) -> bool:
     return bool(_REF_RE.search(template))
 
 
+def dynamic_or_lit(value, columns: list[str] | None = None) -> Column:
+    """A config value as a Column: a string with ``$(field)`` refs
+    compiles with dynamic_value_col, anything else is a literal."""
+    if isinstance(value, str) and has_dynamic_refs(value):
+        return dynamic_value_col(value, columns)
+    return F.lit(value)
+
+
 def dynamic_fields(template: str) -> list[str]:
     return _REF_RE.findall(template)
 

@@ -1,7 +1,7 @@
 """Filesystem-agnostic small-file helpers over the Hadoop FS API —
 one shared implementation of the Path/getFileSystem dance (works for
 file://, hdfs://, s3a:// — wherever sinks and checkpoints live), used
-by the checkpoint-table commits and probes, the router snapshot probes
+by the checkpoint-table commits and listing, the router snapshot probes
 and the streaming checkpoint-namespace marker."""
 
 from __future__ import annotations
@@ -17,6 +17,23 @@ def _fs(spark, path: str):
 def fs_exists(spark, path: str) -> bool:
     _jvm, fs, p = _fs(spark, path)
     return fs.exists(p)
+
+
+def list_visible(spark, path: str, suffix: str) -> list[str]:
+    """Paths of the files directly in directory ``path`` whose names end
+    with ``suffix``, skipping hidden names (leading '.' or '_', the
+    names Spark's file listing skips), sorted. An absent ``path`` lists
+    as empty; a ``path`` that is not a directory raises
+    NotADirectoryError."""
+    _jvm, fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return []
+    if not fs.getFileStatus(p).isDirectory():
+        raise NotADirectoryError(f"{path} is not a directory")
+    return sorted(
+        st.getPath().toString() for st in fs.listStatus(p)
+        if st.isFile() and st.getPath().getName().endswith(suffix)
+        and not st.getPath().getName().startswith((".", "_")))
 
 
 def read_marker(spark, path: str) -> str | None:
@@ -51,7 +68,3 @@ def write_atomic(spark, path: str, data: bytes) -> None:
         fs.delete(p, False)
     if not fs.rename(tmp, p):
         raise OSError(f"could not rename {tmp.toString()} to {path}")
-
-
-def write_marker(spark, path: str, text: str) -> None:
-    write_atomic(spark, path, text.encode("utf-8"))

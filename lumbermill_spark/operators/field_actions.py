@@ -22,10 +22,10 @@ from __future__ import annotations
 import re as _re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lumbermill_spark.functions.dynamic import dynamic_value_col, has_dynamic_refs
+from lumbermill_spark.functions.dynamic import dynamic_or_lit
 
 META_COLUMNS = ("doc_id", "tokens", "n_tok", "source", "event_type")
 
@@ -46,12 +46,6 @@ _HASH_FUNCS = {
 def _java_quote(s: str) -> str:
     """Literal string -> Java regex matching it verbatim."""
     return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
-def _dyn(value: str, df: DataFrame) -> Column:
-    if isinstance(value, str) and has_dynamic_refs(value):
-        return dynamic_value_col(value, df.columns)
-    return F.lit(value)
 
 
 # --------------------------------------------------------------------- #
@@ -75,7 +69,7 @@ def insert(df: DataFrame, target_field: str, value: str) -> DataFrame:
     if isinstance(value, str) and value in df.columns:
         col = F.col(value)
     else:
-        col = _dyn(value, df)
+        col = dynamic_or_lit(value, df.columns)
     return df.withColumn(target_field, col)
 
 

@@ -46,14 +46,13 @@ from __future__ import annotations
 import difflib
 import inspect
 import re
-import uuid
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lumbermill_spark.data.synth import synth_tokens
-from lumbermill_spark.functions.dynamic import dynamic_value_col, has_dynamic_refs
+from lumbermill_spark.functions.dynamic import dynamic_or_lit
 from lumbermill_spark.functions.filters import filter_to_sql
 from lumbermill_spark.functions.skew import salted_repartition
 from lumbermill_spark.internal import InternalStore
@@ -232,9 +231,7 @@ def _check_field(cfg: dict) -> dict:
 def _common_actions(df: DataFrame, cfg: dict) -> DataFrame:
     """add_fields / delete_fields / set_event_type (BaseModule.py:217-236)."""
     for k, v in (cfg.get("add_fields") or {}).items():
-        col = (dynamic_value_col(v, df.columns)
-               if isinstance(v, str) and has_dynamic_refs(v) else F.lit(v))
-        df = df.withColumn(k, col)
+        df = df.withColumn(k, dynamic_or_lit(v, df.columns))
     for k in cfg.get("delete_fields") or []:
         df = df.drop(k)
     if cfg.get("set_event_type"):
@@ -390,7 +387,6 @@ class CompiledPipeline:
     def run(self, base: str, run_id: str | None = None, resume: bool = False,
             df: DataFrame | None = None, **route_kw) -> dict:
         out = self.dataframe(df)
-        run_id = run_id or uuid.uuid4().hex[:12]
         if not self.sinks:
             raise ValueError("pipeline has no output stage")
         return route_and_write(out, self.sinks, base, run_id=run_id,

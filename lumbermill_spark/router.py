@@ -19,8 +19,12 @@ Spark design decisions (SURVEY.md §4):
 - a checkpoint commit row per sink makes a killed run resumable (see
   checkpoint.py); it is one small crash-safe file written by the
   calling process, so the per-sink bookkeeping runs no Spark job besides
-  the lineage aggregation, and the checkpoint reads (resume, merge
-  snapshot lookup) collect their few rows without a shuffle or sort job;
+  the lineage aggregation. Sink names are unique: a name keys the
+  default path, the metrics and the commit rows;
+- every checkpoint read here (resume, merge snapshot lookup,
+  ``sink_stats``) goes through ``checkpoint.read_checkpoints``, which
+  fails closed: only an absent or empty table means "nothing
+  committed", and its few rows are collected without a shuffle or sort;
 - dynamic sink paths ("index-%Y.%m.%d-$(event_type)" in the reference,
   output/ElasticSearch.py:172) become partition columns — the scalable
   equivalent of per-value file paths.
@@ -162,11 +166,6 @@ def merge_snapshot_path(spark: SparkSession, base: str, sink: str,
     snapshot pointer; with the Iceberg runtime the table's own current
     snapshot plays this role and the merge becomes MERGE INTO)."""
     root = sink_path or f"{base.rstrip('/')}/{sink}"
-    # only an ABSENT checkpoint table means "nothing committed": a
-    # damaged one must raise, or a merge would commit a snapshot without
-    # the sink's history
-    if not ckpt.has_checkpoints(spark, base):
-        return None
     rows = (ckpt.read_checkpoints(spark, base)
             .filter(F.col("sink") == sink)
             .select("run_id", "committed_at").collect())
@@ -197,6 +196,7 @@ def route_and_write(
 ) -> dict:
     """Write every sink branch, collect per-sink metrics in-pass, commit
     checkpoint rows. Returns {sink: {rows, tokens, skipped, path, secs}}.
+    Sink names must be unique (ValueError before anything is written).
 
     resume=True skips sinks already committed for this run_id.
     Whenever more than one sink writes, the parent is persisted once
@@ -207,6 +207,12 @@ def route_and_write(
     sequential spill. For disjoint sinks, the single-pass form is
     route_tag plus one partition_by=["sink"] spec (see route_tag).
     """
+    names = [s.name for s in sinks]
+    dup = sorted({n for n in names if names.count(n) > 1})
+    if dup:
+        # the name keys the default path, the metrics and the commit rows
+        raise ValueError(f"duplicate sink name(s) {dup}: each sink needs "
+                         "its own name")
     spark = df.sparkSession
     if run_id is None:
         run_id = uuid.uuid4().hex[:12]

@@ -9,16 +9,18 @@ drains queues for a final flush (LumberMill.py:505-531).
 Spark mapping (SURVEY.md §3.3):
 - tail/consume      → ``readStream`` (file source here; kafka source is
   the same plan with ``format('kafka')``)
-- interval flush    → ``trigger(processingTime=...)`` + watermarked
-  windowed aggregates (late data handled — the reference silently
-  loses stragglers, we bound them explicitly)
-- flush-on-stop     → ``trigger(availableNow=True)`` drains everything
-  pending and commits the final micro-batch
+- interval flush    → watermarked windowed aggregates (late data handled
+  — the reference silently loses stragglers, we bound them explicitly)
+- flush-on-stop     → every driver here (run_to_parquet, run_routed,
+  run_merged, run_throttled_batches) processes what is available and
+  stops (``trigger(availableNow=True)``), committing the final
+  micro-batch, then returns the finished query
 - EventBuffer WAL   → the sink's checkpointLocation (offsets + state)
 
 Every BATCH transform in this package (parse/modify/enrich/route_tag)
 is a DataFrame→DataFrame function, so it composes onto a streaming
-DataFrame unchanged — including the mapInArrow token decode. The only
+DataFrame unchanged — including the mapInArrow token decode — and onto
+a caller's own ``writeStream`` with any trigger. The only
 streaming-specific operators are the stateful ones below.
 """
 
@@ -218,6 +220,36 @@ def dedup_stream(
     return out.drop("_content_hash")
 
 
+def _drain(writer, checkpoint: str):
+    """Run ``writer`` on stream checkpoint ``checkpoint`` until it has
+    processed everything available, then return the finished query (a
+    failed micro-batch raises here)."""
+    q = (writer.option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return q
+
+
+def _route_batches(df: DataFrame, sinks, base: str, checkpoint: str,
+                   prepare=None):
+    """foreachBatch through the batch router: each micro-batch (after
+    ``prepare``, if given) goes to ``route_and_write`` with a run_id
+    derived from its batch id under the checkpoint's namespace, with
+    resume on. Exactly-once without transactions: the stream checkpoint
+    dedups source replays, and a replayed foreachBatch (possible after a
+    crash between the sink commits and the stream commit) is skipped by
+    the router's committed-sinks check instead of writing twice."""
+    from lumbermill_spark.router import route_and_write
+
+    ns = _checkpoint_namespace(df.sparkSession, checkpoint)
+
+    def write_batch(batch_df: DataFrame, batch_id: int):
+        route_and_write(prepare(batch_df) if prepare else batch_df, sinks,
+                        base, run_id=f"{ns}-b{batch_id:012d}", resume=True)
+
+    return _drain(df.writeStream.foreachBatch(write_batch), checkpoint)
+
+
 def run_throttled_batches(
     df: DataFrame,
     key: str,
@@ -225,15 +257,11 @@ def run_throttled_batches(
     checkpoint: str,
     min_count: int = 1,
     max_count: int | None = None,
-    available_now: bool = True,
 ):
-    """Throttle with per-micro-batch timeframes via foreachBatch: each
-    micro-batch is one throttle window (the reference's `timeframe`
-    maps to the trigger interval), reusing the batch operator. Passed
-    rows append to ``base`` through the batch router with a run_id
-    derived from the batch id, so a foreachBatch replayed after a
-    crash is skipped instead of appended twice (same contract as
-    :func:`run_routed`).
+    """Throttle with per-micro-batch timeframes: each micro-batch is one
+    throttle window, reusing the batch operator. Passed rows append to
+    ``base`` through the batch router with run_routed's exactly-once and
+    restart semantics.
 
     This is the portable fallback: throttle_stream's cross-batch
     running counts need transformWithStateInPandas, whose Python
@@ -241,49 +269,20 @@ def run_throttled_batches(
     without it; per-window counts need neither.
     """
     from lumbermill_spark.operators.stats import throttle
-    from lumbermill_spark.router import SinkSpec, route_and_write
+    from lumbermill_spark.router import SinkSpec
 
-    sinks = [SinkSpec("throttled", path=base, mode="append")]
-    ns = _checkpoint_namespace(df.sparkSession, checkpoint)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        passed = throttle(batch_df, key, min_count=min_count,
-                          max_count=max_count)
-        route_and_write(passed, sinks, base,
-                        run_id=f"{ns}-b{batch_id:012d}", resume=True)
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _route_batches(
+        df, [SinkSpec("throttled", path=base, mode="append")], base,
+        checkpoint, prepare=lambda b: throttle(
+            b, key, min_count=min_count, max_count=max_count))
 
 
-def run_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    output_mode: str = "append",
-):
-    """Drain-everything-then-stop execution (flush-on-stop analog).
-    Returns the StreamingQuery (already awaiting termination when
-    available_now)."""
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=available_now)
-        .start()
-    )
-    if available_now:
-        q.awaitTermination()
-    return q
+def run_to_parquet(df: DataFrame, path: str, checkpoint: str):
+    """Drain-everything-then-stop into the parquet file sink at ``path``
+    (flush-on-stop analog; the file sink only appends). Returns the
+    finished StreamingQuery."""
+    return _drain(df.writeStream.format("parquet").option("path", path),
+                  checkpoint)
 
 
 def _checkpoint_namespace(spark, checkpoint: str) -> str:
@@ -300,74 +299,44 @@ def _checkpoint_namespace(spark, checkpoint: str) -> str:
     an empty marker gets a new namespace."""
     import uuid as _uuid
 
-    from lumbermill_spark.functions.fsutil import read_marker, write_marker
+    from lumbermill_spark.functions.fsutil import read_marker, write_atomic
 
     marker = f"{checkpoint.rstrip('/')}/__lms_ns"
     ns = read_marker(spark, marker)
     if ns:
         return ns
     ns = _uuid.uuid4().hex[:12]
-    write_marker(spark, marker, ns)
+    write_atomic(spark, marker, ns.encode("utf-8"))
     return ns
 
 
-def run_routed(
-    df: DataFrame,
-    sinks,
-    base: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """Streaming fan-out: foreachBatch hands each micro-batch to the
-    batch router (per-sink filters + writes + per-sink metrics + commit
-    rows). Exactly-once without transactions: the stream checkpoint
-    dedups source replays, and each batch's run_id is derived from its
-    batch_id, so a replayed foreachBatch (possible after a crash between
-    the sink commits and the stream commit) is skipped by the router's
-    committed-sinks check instead of writing twice. Deleting the
-    checkpoint to reprocess starts a fresh namespaced run_id series
-    (see _checkpoint_namespace) instead of being skipped by the previous
-    life's commits. The one gap: a crash between an append sink's write
-    and its commit row re-appends that sink's batch on replay.
+def run_routed(df: DataFrame, sinks, base: str, checkpoint: str):
+    """Streaming fan-out: drains the stream, handing each micro-batch to
+    the batch router (per-sink filters + writes + per-sink metrics +
+    commit rows) under a batch_id-derived run_id, and returns the
+    finished query. A replayed micro-batch is skipped, not written
+    twice (see _route_batches). Deleting the checkpoint to reprocess
+    starts a fresh namespaced run_id series (see _checkpoint_namespace)
+    instead of being skipped by the previous life's commits. The one
+    gap: a crash between an append sink's write and its commit row
+    re-appends that sink's batch on replay.
 
     Sinks must be mode='append' or 'merge': an overwrite sink would
     replace the previous micro-batch's output on every trigger.
     """
-    from lumbermill_spark.router import route_and_write
-
     overwrite = [s.name for s in sinks if s.mode == "overwrite"]
     if overwrite:
         raise ValueError(
             f"streaming sinks {overwrite} have mode='overwrite': each "
             "micro-batch would replace the last; use 'append' or 'merge'")
-    ns = _checkpoint_namespace(df.sparkSession, checkpoint)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        route_and_write(batch_df, sinks, base,
-                        run_id=f"{ns}-b{batch_id:012d}", resume=True)
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
-    if available_now:
-        q.awaitTermination()
-    return q
+    return _route_batches(df, sinks, base, checkpoint)
 
 
-def run_merged(
-    df: DataFrame,
-    sink,
-    base: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
+def run_merged(df: DataFrame, sink, base: str, checkpoint: str):
     """Streaming SCD-1 ingestion into a merge-mode sink: each
     micro-batch merges into the sink's latest committed snapshot
     (router merge mode — the streaming form of the ES 'update' bulk
     action), with run_routed's exactly-once and restart semantics."""
     if sink.mode != "merge":
         raise ValueError("run_merged requires a mode='merge' SinkSpec")
-    return run_routed(df, [sink], base, checkpoint, available_now)
+    return run_routed(df, [sink], base, checkpoint)

@@ -597,3 +597,47 @@ def test_merge_mode_rejects_noop_format():
     with pytest.raises(ValueError, match="persistent snapshot"):
         SinkSpec("d", None, mode="merge", format="noop",
                  merge_key="doc_id", merge_version="v")
+
+
+def test_duplicate_sink_names_rejected_before_write(spark, tmp_path):
+    # a sink name keys the default path, the metrics and the commit
+    # rows: two sinks named alike would overwrite each other and commit
+    # as one, so the writer refuses before anything is written
+    import os
+
+    base = tmp_path / "dup"
+    df = spark.createDataFrame([("d1", "click", 3), ("d2", "error", 4)],
+                               "doc_id string, event_type string, n_tok long")
+    sinks = [SinkSpec("web", "$(event_type) == 'click'"),
+             SinkSpec("rest"),
+             SinkSpec("web", "$(event_type) == 'error'")]
+    with pytest.raises(ValueError, match=r"duplicate sink name.*'web'"):
+        route_and_write(df, sinks, str(base), run_id="d1")
+    assert not base.exists() or os.listdir(base) == []
+
+
+def test_checkpoint_readers_absent_and_not_a_directory(spark, tmp_path):
+    # read_checkpoints is the one reader of _checkpoint: an absent table
+    # reads as "nothing committed" in every reader built on it, and a
+    # _checkpoint that is not a directory makes each of them raise
+    from lumbermill_spark.router import merge_snapshot_path, sink_stats
+
+    absent = str(tmp_path / "absent")
+    empty = ckpt.read_checkpoints(spark, absent)
+    assert empty.schema == ckpt.CHECKPOINT_SCHEMA and empty.count() == 0
+    assert sink_stats(spark, absent).count() == 0
+    assert ckpt.committed_sinks(spark, absent, "r1") == set()
+    assert merge_snapshot_path(spark, absent, "docs") is None
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "_checkpoint").write_bytes(b"not a directory")
+    readers = [
+        lambda: ckpt.read_checkpoints(spark, str(bad)).collect(),
+        lambda: sink_stats(spark, str(bad)).collect(),
+        lambda: ckpt.committed_sinks(spark, str(bad), "r1"),
+        lambda: merge_snapshot_path(spark, str(bad), "docs"),
+    ]
+    for read in readers:
+        with pytest.raises(NotADirectoryError, match="_checkpoint"):
+            read()

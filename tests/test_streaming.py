@@ -216,6 +216,47 @@ def test_stream_routed_replay_writes_once(spark, tmp_path):
     assert rows.count() == rows.distinct().count() == 3 * len(sinks)
 
 
+def test_drivers_return_finished_query(spark, tmp_path):
+    # every driver processes what is available, stops and returns the
+    # finished query with its output written; none takes a trigger
+    # option (availableNow=True is the only trigger that runs)
+    from lumbermill_spark.router import read_merged
+
+    src = str(tmp_path / "src")
+    schema = "doc_id long, version long, k string"
+    spark.createDataFrame([(1, 1, "k0"), (2, 1, "k0"), (3, 1, "k1")],
+                          schema).write.parquet(src)
+
+    def stream():
+        return sp.stream_source(spark, src, schema=schema)
+
+    out = {d: str(tmp_path / d) for d in ("parquet", "routed", "merged",
+                                          "throttled")}
+    merge = SinkSpec("docs", None, mode="merge",
+                     merge_key="doc_id", merge_version="version")
+    runs = {
+        "parquet": lambda ck, **kw: sp.run_to_parquet(
+            stream(), out["parquet"], ck, **kw),
+        "routed": lambda ck, **kw: sp.run_routed(
+            stream(), [SinkSpec("all", None, mode="append")],
+            out["routed"], ck, **kw),
+        "merged": lambda ck, **kw: sp.run_merged(
+            stream(), merge, out["merged"], ck, **kw),
+        "throttled": lambda ck, **kw: sp.run_throttled_batches(
+            stream(), "k", out["throttled"], ck, min_count=2, **kw),
+    }
+    for name, run in runs.items():
+        with pytest.raises(TypeError, match="available_now"):
+            run(str(tmp_path / f"ck-{name}-x"), available_now=True)
+        q = run(str(tmp_path / f"ck-{name}"))
+        assert not q.isActive and q.exception() is None, name
+    assert spark.read.parquet(out["parquet"]).count() == 3
+    assert spark.read.parquet(f"{out['routed']}/all").count() == 3
+    assert read_merged(spark, out["merged"], "docs").count() == 3
+    assert {r["k"] for r in
+            spark.read.parquet(out["throttled"]).collect()} == {"k0"}
+
+
 def test_namespace_marker_is_crash_safe(spark, tmp_path, monkeypatch):
     # the namespace marker is written through write_atomic: an empty
     # marker gets a fresh namespace that then sticks, a hidden temp file
