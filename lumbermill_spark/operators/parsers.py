@@ -302,6 +302,11 @@ RFC5424_SEVERITIES = {
 }
 
 
+def _sql_quote(v: str) -> str:
+    """``v`` escaped for a single-quoted Spark SQL string literal."""
+    return v.replace("\\", "\\\\").replace("'", "\\'")
+
+
 def parse_syslog_prival(df: DataFrame, source_field: str = "syslog_prival",
                         map_values: bool = True,
                         facility_mappings: dict | None = None,
@@ -318,14 +323,15 @@ def parse_syslog_prival(df: DataFrame, source_field: str = "syslog_prival",
     smap = {**RFC5424_SEVERITIES, **(severity_mappings or {})}
 
     def _lookup(m: dict, key: Column) -> Column:
-        kv = []
-        for k, v in m.items():
-            kv += [F.lit(int(k)), F.lit(v)]
+        # one SQL map literal: one JVM call per lookup, not one per key
+        # and per value (CompiledPipeline.run rebuilds the plan each run)
+        lit = [f"{int(k)}, '{_sql_quote(str(v))}'" for k, v in m.items()]
         # unmapped ids stay numeric (reference KeyError -> pass), as
         # string; try_element_at because ANSI mode makes a missing map
         # key an error, not a null, and coalesce evaluates its first arg
-        return F.coalesce(F.try_element_at(F.create_map(*kv), key),
-                          key.cast("string"))
+        return F.coalesce(
+            F.try_element_at(F.expr(f"map({', '.join(lit)})"), key),
+            key.cast("string"))
 
     return (df.withColumn("syslog_facility", _lookup(fmap, fac))
               .withColumn("syslog_severity", _lookup(smap, sev)))

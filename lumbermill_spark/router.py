@@ -13,6 +13,11 @@ Spark design decisions (SURVEY.md §4):
   writes, so the sinks don't recompute the parse stage per sink (the
   reference equivalent: events are routed, not cloned, unless two
   receivers both match — BaseModule.py:244-253 clones; we never need to);
+- those sinks write concurrently over the one persisted parent, one
+  thread per sink, as each reference output module is its own thread
+  (LumberMill.py:426-466); the threads carry the caller's Spark local
+  properties, and a single sink left to write runs on the calling
+  thread;
 - per-sink counts and sum(n_tok) are collected with ``df.observe`` on
   the SAME pass that writes the sink — zero extra scans for metrics;
 - per-partition lineage is a small extra agg over the persisted parent;
@@ -36,7 +41,7 @@ import time
 import uuid
 from dataclasses import dataclass, field as dfield
 
-from pyspark import StorageLevel
+from pyspark import InheritableThread, StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -195,17 +200,32 @@ def route_and_write(
     resume: bool = False,
 ) -> dict:
     """Write every sink branch, collect per-sink metrics in-pass, commit
-    checkpoint rows. Returns {sink: {rows, tokens, skipped, path, secs}}.
-    Sink names must be unique (ValueError before anything is written).
+    checkpoint rows. Returns {sink: {rows, tokens, skipped, path, secs}}
+    in declared order. Sink names must be unique (ValueError before
+    anything is written).
 
     resume=True skips sinks already committed for this run_id.
-    Whenever more than one sink writes, the parent is persisted once
-    (DISK_ONLY) so neither the sink writes nor their lineage passes
-    recompute the upstream plan: at corpus scale a MEMORY_AND_DISK
-    cache of the full routed parent is a spill storm (executors evict
-    under memory pressure mid-write), while DISK_ONLY is a predictable
-    sequential spill. For disjoint sinks, the single-pass form is
-    route_tag plus one partition_by=["sink"] spec (see route_tag).
+    Whenever more than one sink is left to write, the parent is
+    persisted once (DISK_ONLY) so neither the sink writes nor their
+    lineage passes recompute the upstream plan: at corpus scale a
+    MEMORY_AND_DISK cache of the full routed parent is a spill storm
+    (executors evict under memory pressure mid-write), while DISK_ONLY
+    is a predictable sequential spill. Those sinks then write
+    concurrently, one thread each (the output-module threads of
+    LumberMill.py:426-466), so a slow sink does not hold up the others;
+    each thread carries the caller's Spark local properties (job group,
+    scheduler pool, description). A single sink left to write runs on
+    the calling thread.
+
+    Failure rule: every started sink runs to its end; then the error of
+    the first failed sink in declared order is raised, with a note naming
+    each other failed sink and its error. Each sink commits right after
+    its own write, so the sinks that succeeded are committed and a
+    resume with the same run_id rewrites exactly the sinks that have no
+    commit row.
+
+    For disjoint sinks, the single-pass form is route_tag plus one
+    partition_by=["sink"] spec (see route_tag).
     """
     names = [s.name for s in sinks]
     dup = sorted({n for n in names if names.count(n) > 1})
@@ -217,21 +237,56 @@ def route_and_write(
     if run_id is None:
         run_id = uuid.uuid4().hex[:12]
     done = ckpt.committed_sinks(spark, base, run_id) if resume else set()
+    paths = {s.name: s.path or f"{base.rstrip('/')}/{s.name}" for s in sinks}
+    todo = [s for s in sinks if s.name not in done]
 
-    shared = len([s for s in sinks if s.name not in done]) > 1
+    shared = len(todo) > 1
     if shared:
         df = df.persist(StorageLevel.DISK_ONLY)
-    results: dict[str, dict] = {}
+
+    def write(spec: SinkSpec) -> dict:
+        return _write_sink(df, spec, paths[spec.name], base, run_id,
+                           token_col)
+
     try:
-        for spec in sinks:
-            path = spec.path or f"{base.rstrip('/')}/{spec.name}"
-            results[spec.name] = (
-                {"skipped": True, "path": path} if spec.name in done
-                else _write_sink(df, spec, path, base, run_id, token_col))
+        written = (_on_own_threads(spark, write, todo) if shared
+                   else {s.name: write(s) for s in todo})
     finally:
         if shared:
             df.unpersist()
-    return results
+    return {s.name: written.get(s.name, {"skipped": True,
+                                         "path": paths[s.name]})
+            for s in sinks}
+
+
+def _on_own_threads(spark: SparkSession, write, specs: list[SinkSpec]
+                    ) -> dict[str, dict]:
+    """{name: write(spec)}, each spec on its own thread that carries the
+    caller's Spark local properties and session tags. Waits for every
+    thread, then raises the error of the first failed spec in order,
+    noting the others'."""
+    out: dict[str, dict] = {}
+    errors: dict[str, BaseException] = {}
+
+    def run(spec: SinkSpec) -> None:
+        try:
+            out[spec.name] = write(spec)
+        except BaseException as e:  # raised below, in declared order
+            errors[spec.name] = e
+
+    threads = [InheritableThread(run, args=(s,), session=spark)
+               for s in specs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    failed = [s.name for s in specs if s.name in errors]
+    if failed:
+        first = errors[failed[0]]
+        for name in failed[1:]:
+            first.add_note(f"sink {name!r} also failed: {errors[name]!r}")
+        raise first
+    return out
 
 
 def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,

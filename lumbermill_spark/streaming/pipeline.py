@@ -105,10 +105,9 @@ def merge_sessions_stream(
     session bounds) is emitted once the watermark passes.
 
     Divergence from the batch merge_event, documented: the reference's
-    start/end PATTERN semantics need per-key ordered state, and both
-    custom-state APIs (applyInPandasWithState /
-    transformWithStateInPandas) crash their Python state workers in
-    this runtime — gap-based sessionization is the built-in-operator
+    start/end PATTERN semantics need per-key ordered state, which
+    applyInPandasWithState (see throttle_stream) could keep, but
+    gap-based sessionization is the built-in-operator
     expression of the same reassembly, and is what the reference's
     flush-on-timeout path (MergeEvent.py buffer timeout) degenerates to
     anyway when no end pattern arrives.
@@ -143,41 +142,26 @@ def throttle_stream(
     """misc.Throttle as custom streaming state (Throttle.py:60-110):
     pass at most ``max_count`` events per key across the stream's
     lifetime (the reference GCs stale keys on a timer,
-    Throttle.py:100-104 — here the state store TTL/timer facilities of
-    transformWithStateInPandas cover that when configured).
+    Throttle.py:100-104; keys never expire here, and a GroupStateTimeout
+    on the same API is where that would go).
 
-    Implemented with transformWithStateInPandas (the Spark 4 custom
-    stateful operator API): a ValueState counter per key.
+    Implemented with applyInPandasWithState: a running count per key,
+    kept in the stream's state store.
     """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out_schema = df.schema
+    def throttle(key, pdfs, state):
+        seen = state.get[0] if state.exists else 0
+        for pdf in pdfs:
+            out = pdf.iloc[:max(0, max_count - seen)]
+            seen += len(out)
+            if len(out):
+                yield out
+        state.update((seen,))
 
-    class ThrottleProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("seen", "n long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            seen = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                take = max(0, max_count - seen)
-                out = pdf.iloc[:take]
-                seen += len(out)
-                if len(out):
-                    yield out
-            self._count.update((seen,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.groupBy(key)
-        .transformWithStateInPandas(
-            ThrottleProcessor(), out_schema, "Append",
-            "ProcessingTime",
-        )
-    )
+    return df.groupBy(key).applyInPandasWithState(
+        throttle, df.schema, "seen long", "Append",
+        GroupStateTimeout.NoTimeout)
 
 
 def dedup_stream(
@@ -263,10 +247,9 @@ def run_throttled_batches(
     ``base`` through the batch router with run_routed's exactly-once and
     restart semantics.
 
-    This is the portable fallback: throttle_stream's cross-batch
-    running counts need transformWithStateInPandas, whose Python
-    state worker imports the protobuf package and fails to start
-    without it; per-window counts need neither.
+    Unlike throttle_stream, whose count per key spans the whole stream
+    and which takes only a max_count, the window here is one
+    micro-batch, so min_count applies and no state store is kept.
     """
     from lumbermill_spark.operators.stats import throttle
     from lumbermill_spark.router import SinkSpec

@@ -123,6 +123,13 @@ def test_syslog_prival(spark):
     assert row["syslog_severity"] == "Informational"
     raw = P.parse_syslog_prival(df, map_values=False).first()
     assert raw["syslog_facility"] == 1 and raw["syslog_severity"] == 6
+    # a custom name with a quote and a backslash survives the SQL map
+    # literal; facility 25 (prival 203) has no name and stays numeric
+    custom = {1: "user's \\ own"}
+    df2 = spark.createDataFrame([("14",), ("203",)], "syslog_prival string")
+    got = [(r["syslog_facility"], r["syslog_severity"]) for r in
+           P.parse_syslog_prival(df2, facility_mappings=custom).collect()]
+    assert got == [("user's \\ own", "Informational"), ("25", "Error")]
 
 
 def test_base64_roundtrip(spark):

@@ -641,3 +641,124 @@ def test_checkpoint_readers_absent_and_not_a_directory(spark, tmp_path):
     for read in readers:
         with pytest.raises(NotADirectoryError, match="_checkpoint"):
             read()
+
+
+def _three_sinks():
+    return [SinkSpec("a", "$(event_type) == 'click'"),
+            SinkSpec("b", "$(event_type) == 'error'"),
+            SinkSpec("c", None)]
+
+
+def test_failed_sink_lets_the_others_commit(spark, tmp_path, monkeypatch):
+    # the sinks write concurrently: a failing sink does not stop the
+    # others, route_and_write raises once all have ended, and a resume
+    # rewrites exactly the failed sink
+    import time
+
+    from lumbermill_spark import router
+
+    schema = "doc_id long, version long, event_type string, n_tok long"
+    df = spark.createDataFrame(
+        [(i, 1, ("click", "error", "view")[i % 3], i) for i in range(30)],
+        schema)
+    sinks = _three_sinks()
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    route_and_write(df, sinks, clean, run_id="r1")
+
+    write_sink = router._write_sink
+    written = []
+
+    def failing(fail, delay=None):
+        def write(df, spec, *rest):
+            if spec.name in fail:
+                time.sleep((delay or {}).get(spec.name, 0))
+                raise _Crash(spec.name)
+            written.append(spec.name)
+            return write_sink(df, spec, *rest)
+        return write
+
+    # b fails at once, before a and c have written anything
+    monkeypatch.setattr(router, "_write_sink", failing({"b"}))
+    with pytest.raises(_Crash, match="^b$"):
+        route_and_write(df, sinks, crashed, run_id="r1", resume=True)
+    assert ckpt.committed_sinks(spark, crashed, "r1") == {"a", "c"}
+
+    written.clear()
+    monkeypatch.setattr(router, "_write_sink", failing(set()))
+    res = route_and_write(df, sinks, crashed, run_id="r1", resume=True)
+    assert written == ["b"]
+    assert [res[s.name]["skipped"] for s in sinks] == [True, False, True]
+    for s in sinks:
+        assert _sink_contents(spark, crashed, s) == _sink_contents(
+            spark, clean, s)
+
+    # two sinks fail: the error raised is the first failed sink's in
+    # declared order, though c fails before b does
+    monkeypatch.setattr(router, "_write_sink",
+                        failing({"b", "c"}, delay={"b": 0.5}))
+    with pytest.raises(_Crash) as err:
+        route_and_write(df, sinks, str(tmp_path / "two"), run_id="r2")
+    assert err.value.args == ("b",)
+    assert err.value.__notes__ == ["sink 'c' also failed: _Crash('c')"]
+    assert ckpt.committed_sinks(spark, str(tmp_path / "two"), "r2") == {"a"}
+
+
+def test_more_sink_threads_than_cores_all_commit(spark, tmp_path):
+    # eight sink threads on four cores, switching threads as often as the
+    # interpreter allows: every sink's result and commit row is kept
+    import sys
+
+    df = spark.range(40).selectExpr("id AS doc_id", "id % 8 AS k",
+                                    "1L AS n_tok")
+    sinks = [SinkSpec(f"s{i}", f"$(k) == {i}") for i in range(8)]
+    base = str(tmp_path / "many")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        res = route_and_write(df, sinks, base, run_id="m1")
+    finally:
+        sys.setswitchinterval(interval)
+    assert [(n, r["rows"], r["tokens"]) for n, r in res.items()] == [
+        (s.name, 5, 5) for s in sinks]
+    assert ckpt.committed_sinks(spark, base, "m1") == {s.name for s in sinks}
+
+
+def test_sink_threads_keep_caller_local_properties(spark, tmp_path):
+    # every job of a multi-sink write runs in the caller's job group and
+    # scheduler pool, though the sinks write on their own threads
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    jsc.listenerBus().waitUntilEmpty()
+    before = {j.jobId() for j in seq(jsc.statusStore().jobsList(None))}
+    df = spark.createDataFrame(
+        [(i, 1, ("click", "error")[i % 2], i) for i in range(20)],
+        "doc_id long, version long, event_type string, n_tok long")
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel", "spark.scheduler.pool")
+    saved = [sc.getLocalProperty(k) for k in props]
+    sc.setJobGroup("caller-group", "three sinks")
+    sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+    try:
+        route_and_write(df, _three_sinks(), str(tmp_path / "props"),
+                        run_id="p1")
+    finally:
+        for k, v in zip(props, saved):
+            sc.setLocalProperty(k, v)
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = [j for j in seq(store.jobsList(None)) if j.jobId() not in before]
+    assert jobs
+    groups = {j.jobGroup().get() if j.jobGroup().isDefined() else None
+              for j in jobs}
+    assert groups == {"caller-group"}
+    stage_ids = {sid for j in jobs for sid in seq(j.stageIds())}
+    # a skipped stage never runs, so it has no pool of its own
+    ran = [st for st in seq(store.stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None))
+        if st.stageId() in stage_ids and str(st.status()) != "SKIPPED"]
+    assert ran
+    assert {st.schedulingPool() for st in ran} == {"caller-pool"}

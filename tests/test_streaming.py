@@ -87,14 +87,6 @@ def test_stream_facet(spark, tmp_path):
     assert "s3" not in got  # its window is still open
 
 
-@pytest.mark.xfail(
-    reason="transformWithStateInPandas needs the protobuf package: "
-    "without it its Python worker fails STREAMING_PYTHON_RUNNER_"
-    "INITIALIZATION_FAILURE (\"cannot import name 'descriptor' from "
-    "'google.protobuf'\") and the query stops with "
-    "'TransformWithStateInPySpark driver worker exited unexpectedly'",
-    strict=False,
-)
 def test_stream_throttle_state(spark, tmp_path):
     rows = [(f"k{(i % 2)}", i) for i in range(20)]
     src_dir = tmp_path / "thr"
@@ -103,6 +95,25 @@ def test_stream_throttle_state(spark, tmp_path):
     limited = sp.throttle_stream(stream, "k", max_count=3)
     out = str(tmp_path / "tout")
     sp.run_to_parquet(limited, out, str(tmp_path / "ckpt4"))
+    got = spark.read.parquet(out).groupBy("k").count().collect()
+    assert {r["k"]: r["count"] for r in got} == {"k0": 3, "k1": 3}
+
+
+def test_stream_throttle_state_across_batches(spark, tmp_path):
+    # the per-key count carries over from one micro-batch to the next:
+    # three one-file batches of two rows per key pass three rows per key
+    src = str(tmp_path / "thr3")
+    schema = "k string, i long"
+    for b in range(3):
+        spark.createDataFrame(
+            [(k, b * 10 + i) for k in ("k0", "k1") for i in range(2)],
+            schema).coalesce(1).write.mode("append").parquet(src)
+    stream = sp.stream_source(spark, src, schema=schema,
+                              max_files_per_trigger=1)
+    out = str(tmp_path / "tout3")
+    q = sp.run_to_parquet(sp.throttle_stream(stream, "k", max_count=3),
+                          out, str(tmp_path / "ckpt7"))
+    assert q.lastProgress["batchId"] >= 2
     got = spark.read.parquet(out).groupBy("k").count().collect()
     assert {r["k"]: r["count"] for r in got} == {"k0": 3, "k1": 3}
 
