@@ -30,6 +30,11 @@ an Iceberg catalog table.
 
 from __future__ import annotations
 
+import gzip
+import json
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 RUNTIME_CLASS = "org.apache.iceberg.spark.SparkCatalog"
@@ -145,10 +150,15 @@ def write_table(
 
 def last_snapshot_id(spark: SparkSession, table: str) -> int | None:
     """Most recent committed snapshot of ``table`` (None for an empty
-    snapshot log) via the ``.snapshots`` metadata table — what a
-    restarted pipeline passes to :func:`read_table` to pin its input,
-    and what it compares against its own checkpoint record to decide
-    which sinks already committed."""
+    snapshot log) — what a restarted pipeline passes to
+    :func:`read_table` to pin its input, and what it compares against
+    its own checkpoint record to decide which sinks already committed.
+
+    A path-based table (``table`` holds a '/') is read from its metadata
+    file by :func:`metadata_last_snapshot_id`, without the runtime jar;
+    a catalog table through its ``.snapshots`` metadata table."""
+    if "/" in table:
+        return metadata_last_snapshot_id(table)
     _require_runtime(spark)
     row = (
         spark.read.format("iceberg").load(f"{table}.snapshots")
@@ -157,3 +167,51 @@ def last_snapshot_id(spark: SparkSession, table: str) -> int | None:
         .first()
     )
     return None if row is None else int(row["snapshot_id"])
+
+
+def metadata_last_snapshot_id(location: str) -> int | None:
+    """Most recent committed snapshot (largest ``timestamp-ms``, the
+    ``committed_at`` of the ``.snapshots`` table) of the path-based table
+    at ``location``, read in pure Python from its current metadata file.
+    The current version is found as Iceberg's HadoopTableOperations
+    finds it: start from ``metadata/version-hint.text`` (the highest
+    listed version when the hint is missing or unreadable), then step
+    forward while the next version's file exists, since a commit renames
+    ``v<N+1>`` into place before it rewrites the hint. A version's file
+    is ``v<N>.metadata.json``, ``v<N>.gz.metadata.json`` or the older
+    ``v<N>.metadata.json.gz``. None for an empty snapshot log.
+    ``location`` is a local path or ``file:`` URI; FileNotFoundError
+    when it holds no current metadata file."""
+    meta = os.path.join(re.sub(r"^file:(//)?", "", location), "metadata")
+    try:
+        with open(os.path.join(meta, "version-hint.text")) as f:
+            current = int(f.read().strip())
+    except (FileNotFoundError, ValueError):
+        current = max((int(m.group(1)) for name in os.listdir(meta)
+                       if (m := _METADATA_NAME.fullmatch(name))), default=0)
+    path = _metadata_file(meta, current)
+    if path is None:
+        raise FileNotFoundError(
+            f"no metadata file for version {current} under {meta}")
+    while (ahead := _metadata_file(meta, current + 1)) is not None:
+        current, path = current + 1, ahead
+    opener = gzip.open if ".gz" in os.path.basename(path) else open
+    with opener(path, "rt") as f:
+        snapshots = json.load(f).get("snapshots") or []
+    if not snapshots:
+        return None
+    return int(max(snapshots, key=lambda s: s["timestamp-ms"])["snapshot-id"])
+
+
+_METADATA_NAME = re.compile(r"v(\d+)(?:\.gz)?\.metadata\.json(?:\.gz)?")
+
+
+def _metadata_file(meta: str, version: int) -> str | None:
+    """The metadata file of ``version`` under ``meta``, in Iceberg's
+    lookup order (plain, gzip, legacy gzip); None when there is none."""
+    for name in (f"v{version}.metadata.json", f"v{version}.gz.metadata.json",
+                 f"v{version}.metadata.json.gz"):
+        path = os.path.join(meta, name)
+        if os.path.exists(path):
+            return path
+    return None

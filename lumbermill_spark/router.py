@@ -20,16 +20,21 @@ Spark design decisions (SURVEY.md §4):
   thread;
 - per-sink counts and sum(n_tok) are collected with ``df.observe`` on
   the SAME pass that writes the sink — zero extra scans for metrics;
-- per-partition lineage is a small extra agg over the persisted parent;
+- per-partition lineage rides in that same observe: one conditional
+  count and token sum per partition id below a bound read from the
+  physical plan (``checkpoint.partition_bound``); an aggregation job
+  (``checkpoint.partition_lineage``) runs only as the fallback, when
+  no bound is known, it is too large, or a partition id reached it;
 - a checkpoint commit row per sink makes a killed run resumable (see
   checkpoint.py); it is one small crash-safe file written by the
-  calling process, so the per-sink bookkeeping runs no Spark job besides
-  the lineage aggregation. Sink names are unique: a name keys the
-  default path, the metrics and the commit rows;
+  calling process, so no Spark job runs after a sink's write. Sink
+  names are unique: a name keys the default path, the metrics and the
+  commit rows;
 - every checkpoint read here (resume, merge snapshot lookup,
-  ``sink_stats``) goes through ``checkpoint.read_checkpoints``, which
-  fails closed: only an absent or empty table means "nothing
-  committed", and its few rows are collected without a shuffle or sort;
+  ``sink_stats``) goes through checkpoint.py's one reader, which fails
+  closed: only an absent or empty table means "nothing committed" (and
+  then resume and the merge lookup build no frame), and its few rows
+  are collected without a shuffle or sort;
 - dynamic sink paths ("index-%Y.%m.%d-$(event_type)" in the reference,
   output/ElasticSearch.py:172) become partition columns — the scalable
   equivalent of per-value file paths.
@@ -171,9 +176,7 @@ def merge_snapshot_path(spark: SparkSession, base: str, sink: str,
     snapshot pointer; with the Iceberg runtime the table's own current
     snapshot plays this role and the merge becomes MERGE INTO)."""
     root = sink_path or f"{base.rstrip('/')}/{sink}"
-    rows = (ckpt.read_checkpoints(spark, base)
-            .filter(F.col("sink") == sink)
-            .select("run_id", "committed_at").collect())
+    rows = ckpt.commit_rows(spark, base, "sink", sink, "run_id", "committed_at")
     for r in sorted(rows, key=lambda r: r["committed_at"], reverse=True):
         p = f"{root}/snap={r['run_id']}"
         if fs_exists(spark, p):
@@ -206,8 +209,9 @@ def route_and_write(
 
     resume=True skips sinks already committed for this run_id.
     Whenever more than one sink is left to write, the parent is
-    persisted once (DISK_ONLY) so neither the sink writes nor their
-    lineage passes recompute the upstream plan: at corpus scale a
+    persisted once (DISK_ONLY) so the sink writes do not recompute the
+    upstream plan (each sink's lineage comes from its write's own
+    observe; see _write_sink): at corpus scale a
     MEMORY_AND_DISK cache of the full routed parent is a spill storm
     (executors evict under memory pressure mid-write), while DISK_ONLY
     is a predictable sequential spill. Those sinks then write
@@ -241,12 +245,17 @@ def route_and_write(
     todo = [s for s in sinks if s.name not in done]
 
     shared = len(todo) > 1
+    bound = None
     if shared:
         df = df.persist(StorageLevel.DISK_ONLY)
+        # read once, from the plan persist built: every sink branch is a
+        # narrow filter/projection of the cached relation, so it keeps
+        # the parent's partition ids
+        bound = ckpt.partition_bound(df)
 
     def write(spec: SinkSpec) -> dict:
         return _write_sink(df, spec, paths[spec.name], base, run_id,
-                           token_col)
+                           token_col, bound)
 
     try:
         written = (_on_own_threads(spark, write, todo) if shared
@@ -290,9 +299,17 @@ def _on_own_threads(spark: SparkSession, write, specs: list[SinkSpec]
 
 
 def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
-                run_id: str, token_col: str | None) -> dict:
-    """One sink of route_and_write: filter, write with in-pass metrics,
-    lineage, commit row."""
+                run_id: str, token_col: str | None,
+                bound: int | None = None) -> dict:
+    """One sink of route_and_write: filter, write with in-pass metrics
+    and lineage, commit row. ``bound`` is the persisted parent's
+    partition bound, which a narrow branch of it shares; without it (or
+    for a merge, whose upsert re-partitions) the branch's own plan gives
+    the bound. The lineage comes from the write's observe unless the
+    bound is unknown, above ckpt.MAX_OBSERVED_PARTITIONS, or reached by a
+    partition id; then partition_lineage runs one aggregation job (over
+    a merge's persisted merged frame when that is known before the
+    write)."""
     spark = df.sparkSession
     branch = df if spec.predicate() is None else df.filter(spec.predicate())
     if spec.columns:
@@ -315,7 +332,11 @@ def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
         # being read is never safe, and the commit row below is
         # what makes the new snapshot current. Idempotent on retry
         # (same run_id -> same dir, mode=overwrite); resume skips
-        # via the committed-sinks check in route_and_write.
+        # via the committed-sinks check in route_and_write. With a
+        # bound the write is the merged frame's only reader: its
+        # lineage is observed write-side (a read-back of the snapshot
+        # would report reader-conf-dependent split counts instead of
+        # the written layout).
         from lumbermill_spark.operators.stateful import upsert_latest
 
         prev = merge_snapshot_path(spark, base, spec.name, spec.path)
@@ -324,23 +345,21 @@ def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
                     else spark.createDataFrame([], branch.schema))
         branch = upsert_latest(existing, branch,
                                spec.merge_key, spec.merge_version)
-        # persist around write+lineage: the merged frame feeds BOTH
-        # (the prev-snapshot read + upsert shuffle must not run
-        # twice), and lineage stays write-side partitioned (a
-        # read-back of the snapshot would report reader-conf-
-        # dependent split counts instead of the written layout)
-        branch = branch.persist(StorageLevel.DISK_ONLY)
-        merge_persisted = branch
         path = f"{path}/snap={run_id}"
-    else:
-        merge_persisted = None
+        bound = None
+    if bound is None:
+        bound = ckpt.partition_bound(branch)
+    if bound is not None and bound > ckpt.MAX_OBSERVED_PARTITIONS:
+        bound = None
+    merge_persisted = None
+    if spec.mode == "merge" and bound is None:
+        # the fallback lineage job reads the merged frame too: the
+        # prev-snapshot read and the upsert shuffle must not run twice
+        branch = merge_persisted = branch.persist(StorageLevel.DISK_ONLY)
 
-    has_tok = token_col and token_col in branch.columns
+    tok_col = token_col if token_col and token_col in branch.columns else None
     obs = Observation(f"{run_id}-{spec.name}")
-    metrics_exprs = [F.count(F.lit(1)).alias("rows")]
-    if has_tok:
-        metrics_exprs.append(F.sum(token_col).cast("long").alias("tokens"))
-    observed = branch.observe(obs, *metrics_exprs)
+    observed = ckpt.observe_commit(branch, obs, tok_col, bound)
 
     t0 = time.time()
     if spec.format == "noop":
@@ -358,8 +377,10 @@ def _write_sink(df: DataFrame, spec: SinkSpec, path: str, base: str,
 
     got = obs.get
     rows = int(got.get("rows", 0))
-    tokens = int(got["tokens"]) if has_tok and got.get("tokens") is not None else None
-    lineage = ckpt.partition_lineage(branch, token_col) if rows > 0 else []
+    tokens = int(got["tokens"]) if got.get("tokens") is not None else None
+    lineage = ckpt.observed_lineage(got, bound) if bound is not None else None
+    if lineage is None:
+        lineage = ckpt.partition_lineage(branch, token_col) if rows > 0 else []
     if merge_persisted is not None:
         merge_persisted.unpersist()
     ckpt.commit(spark, base, run_id, "route", spec.name, rows, tokens,

@@ -556,6 +556,61 @@ def test_iceberg_fails_fast_without_jar(spark):
         write_table(df, "lm.db.tokens", mode="replace")
 
 
+def test_iceberg_last_snapshot_id_from_metadata(spark, tmp_path):
+    # a path-based table's newest snapshot comes from its metadata file
+    # in pure Python: no runtime jar is on this session's classpath
+    import gzip
+    import json
+
+    from lumbermill_spark.iceberg import (last_snapshot_id,
+                                          metadata_last_snapshot_id)
+
+    table = str(tmp_path / "tbl")
+    meta = tmp_path / "tbl" / "metadata"
+    meta.mkdir(parents=True)
+
+    def version(n, snapshots, name="v{}.metadata.json"):
+        doc = {"format-version": 2, "table-uuid": "9c1f0d2e",
+               "location": table,
+               "current-snapshot-id": (snapshots[0]["snapshot-id"]
+                                       if snapshots else -1),
+               "snapshots": snapshots}
+        text = json.dumps(doc)
+        if ".gz" in name:
+            (meta / name.format(n)).write_bytes(gzip.compress(text.encode()))
+        else:
+            (meta / name.format(n)).write_text(text)
+
+    version(1, [])
+    assert metadata_last_snapshot_id(table) is None
+    s1 = {"snapshot-id": 3051729675574597004, "timestamp-ms": 1700000000000}
+    s2 = {"snapshot-id": 1278532908462301785, "timestamp-ms": 1700000360000}
+    s3 = {"snapshot-id": 5520394011853301777, "timestamp-ms": 1700000720000}
+    s4 = {"snapshot-id": 8815307162045963120, "timestamp-ms": 1700001080000}
+    version(2, [s1])
+    # without a version hint the highest version is current
+    assert metadata_last_snapshot_id(table) == s1["snapshot-id"]
+    (meta / "version-hint.text").write_text("2\n")
+    assert last_snapshot_id(spark, table) == s1["snapshot-id"]
+    # a commit cut between renaming v3 into place and rewriting the
+    # hint: v3 is current although the hint still names 2
+    version(3, [s2, s1])   # the newest commit, listed first
+    assert metadata_last_snapshot_id(f"file://{table}") == s2["snapshot-id"]
+    # gzip-compressed metadata, both names Iceberg writes or reads
+    version(4, [s3, s2, s1], "v{}.gz.metadata.json")
+    assert metadata_last_snapshot_id(table) == s3["snapshot-id"]
+    version(5, [s4, s3, s2, s1], "v{}.metadata.json.gz")
+    assert metadata_last_snapshot_id(table) == s4["snapshot-id"]
+    (meta / "version-hint.text").write_text("5")
+    assert last_snapshot_id(spark, table) == s4["snapshot-id"]
+    (meta / "version-hint.text").write_text("7")
+    with pytest.raises(FileNotFoundError, match="version 7"):
+        metadata_last_snapshot_id(table)
+    # a catalog table still needs the runtime
+    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
+        last_snapshot_id(spark, "lm.db.tokens")
+
+
 def test_required_if_sink_merge(spark):
     # conditional config validation (reference `is: required if ...`
     # clauses, ConfigurationValidator.py:26-45): a merge-mode output

@@ -762,3 +762,191 @@ def test_sink_threads_keep_caller_local_properties(spark, tmp_path):
         if st.stageId() in stage_ids and str(st.status()) != "SKIPPED"]
     assert ran
     assert {st.schedulingPool() for st in ran} == {"caller-pool"}
+
+
+def _lineage_frame(spark):
+    # 60 rows in 4 range partitions: no shuffle, so partition ids do not
+    # depend on AQE, and the plan declares the bound (4)
+    return spark.range(0, 60, 1, 4).selectExpr(
+        "id AS doc_id", "1L AS version",
+        "CASE id % 3 WHEN 0 THEN 'click' WHEN 1 THEN 'error' "
+        "ELSE 'view' END AS event_type", "id % 7 AS n_tok")
+
+
+def _lineage_case(spark, case, tmp_path):
+    """(frame, sinks) of one lineage case."""
+    from lumbermill_spark.router import route_tag
+
+    df = _lineage_frame(spark)
+    if case == "scan":
+        # straight over a file scan, which declares no partitioning: the
+        # bound is its split count
+        src = str(tmp_path / "src")
+        df.write.parquet(src)
+        return spark.read.parquet(src), [SinkSpec("all", None)]
+    if case == "three_sinks":
+        return df, _three_sinks()
+    if case == "single":
+        return df, [SinkSpec("all", "$(event_type) != 'view'")]
+    if case == "route_tag":
+        # a shuffle, which AQE may coalesce below the plan's bound (5)
+        return (route_tag(df.repartition(5, "doc_id"), _three_sinks()),
+                [SinkSpec("routed", partition_by=["sink"])])
+    if case == "merge":
+        return df, [SinkSpec("docs", "$(event_type) != 'click'", mode="merge",
+                             merge_key="doc_id", merge_version="version")]
+    if case == "text":
+        return df, [SinkSpec("lines", "$(event_type) == 'view'",
+                             line_format="$(doc_id) $(n_tok)")]
+    if case == "no_tokens":
+        return df, [SinkSpec("ids", columns=["doc_id", "event_type"])]
+    # rows in partitions 0, 1 and 3 only (15 ids per partition)
+    return df, [SinkSpec("gaps", "$(doc_id) < 20 or $(doc_id) >= 45")]
+
+
+def _count_lineage_jobs(monkeypatch) -> list:
+    """The calls to the aggregation-job lineage from here on, each as
+    whether the frame it aggregates was persisted."""
+    calls = []
+    aggregate = ckpt.partition_lineage
+
+    def counted(df, *args):
+        calls.append(df.is_cached)
+        return aggregate(df, *args)
+
+    monkeypatch.setattr(ckpt, "partition_lineage", counted)
+    return calls
+
+
+def _committed_lineage(spark, base):
+    return {(r["run_id"], r["sink"]): (r["n_partitions"],
+                                       [x.asDict() for x in r["lineage"] or []])
+            for r in ckpt.read_checkpoints(spark, base).collect()}
+
+
+@pytest.mark.parametrize("case", ["three_sinks", "single", "scan",
+                                  "route_tag", "merge", "text", "no_tokens",
+                                  "gaps"])
+def test_observed_lineage_matches_aggregation(spark, tmp_path, monkeypatch,
+                                              case):
+    # the lineage folded into the write's observe is the one the
+    # aggregation job gives for the same branch, value for value
+    df, sinks = _lineage_case(spark, case, tmp_path)
+    runs = 2 if case == "merge" else 1   # the second merges onto the first
+    lineage_jobs = _count_lineage_jobs(monkeypatch)
+    observed, aggregated = str(tmp_path / "obs"), str(tmp_path / "agg")
+    for i in range(runs):
+        route_and_write(df, sinks, observed, run_id=f"r{i}")
+    assert lineage_jobs == []
+    monkeypatch.setattr(ckpt, "partition_bound", lambda df: None)
+    for i in range(runs):
+        res = route_and_write(df, sinks, aggregated, run_id=f"r{i}")
+    assert len(lineage_jobs) == runs * len(sinks)
+
+    got = _committed_lineage(spark, observed)
+    want = _committed_lineage(spark, aggregated)
+    assert got == want
+    last = f"r{runs - 1}"
+    for s in sinks:
+        n, lineage = want[(last, s.name)]
+        assert n == len(lineage) == res[s.name]["n_partitions"] > 0
+        assert sum(x["rows"] for x in lineage) == res[s.name]["rows"]
+        if case in ("text", "no_tokens"):
+            assert {x["tokens"] for x in lineage} == {None}
+        else:
+            assert sum(x["tokens"] for x in lineage) == res[s.name]["tokens"]
+    if case == "gaps":
+        assert [x["partition_id"] for x in want[(last, "gaps")][1]] == [0, 1, 3]
+    if case == "three_sinks":
+        assert [n for n, _ in want.values()] == [4, 4, 4]
+
+
+@pytest.mark.parametrize("case", ["three_sinks", "merge"])
+def test_lineage_falls_back_to_the_aggregation_job(spark, tmp_path,
+                                                   monkeypatch, case):
+    # with the plan's bound no aggregation job runs; a bound below the
+    # real partition count, none, or one too large to observe each cost
+    # the job, never a different lineage
+    df, sinks = _lineage_case(spark, case, tmp_path)
+
+    def refuse(*args):
+        raise AssertionError("partition_lineage ran")
+
+    def write(base):
+        route_and_write(df, sinks, str(tmp_path / base), run_id="r1")
+        return _committed_lineage(spark, str(tmp_path / base))
+
+    with monkeypatch.context() as m:
+        m.setattr(ckpt, "partition_lineage", refuse)
+        real = write("real")
+
+    # each sink has rows in the top partition, so this bound is too low
+    top = max(x["partition_id"] for _, lineage in real.values()
+              for x in lineage)
+    assert all(lineage[-1]["partition_id"] == top
+               for _, lineage in real.values())
+    # a merge whose fallback is known before the write (no bound, or
+    # one too large) persists the merged frame, so the job does not run
+    # the upsert again; a bound found too low only after it cannot
+    for base, bound, persisted in [
+            ("low", top, False), ("none", None, True),
+            ("large", ckpt.MAX_OBSERVED_PARTITIONS + 1, True)]:
+        with monkeypatch.context() as m:
+            lineage_jobs = _count_lineage_jobs(m)
+            m.setattr(ckpt, "partition_bound", lambda df, b=bound: b)
+            assert write(base) == real
+        assert len(lineage_jobs) == len(sinks)
+        if case == "merge":
+            assert lineage_jobs == [persisted]
+
+
+def test_no_job_after_the_last_sink_write(spark, tmp_path):
+    # the lineage rides in each write's observe and the commit is a
+    # driver-side file: after the last write job ends, no job starts
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    saved = [sc.getLocalProperty(k) for k in props]
+    sc.setJobGroup("lineage-group", "three sinks")
+    try:
+        route_and_write(_lineage_frame(spark), _three_sinks(),
+                        str(tmp_path / "jobs"), run_id="j1")
+    finally:
+        for k, v in zip(props, saved):
+            sc.setLocalProperty(k, v)
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = [j for j in seq(jsc.statusStore().jobsList(None))
+            if j.jobGroup().isDefined()
+            and j.jobGroup().get() == "lineage-group"]
+    writes = [j for j in jobs if j.name().startswith("save at")]
+    assert len(writes) == 3
+    last_write_end = max(j.completionTime().get().getTime() for j in writes)
+    assert [j.jobId() for j in jobs
+            if j.submissionTime().get().getTime() > last_write_end] == []
+
+
+def test_empty_checkpoint_table_builds_no_frame(spark, tmp_path,
+                                                 monkeypatch):
+    # nothing committed reads as such from the driver-side listing
+    # alone: no frame is built, let alone collected
+    from lumbermill_spark.router import merge_snapshot_path
+
+    cut = tmp_path / "cut" / "_checkpoint"
+    cut.mkdir(parents=True)
+    (cut / ".part-0.parquet.tmp").write_bytes(b"commit cut by a crash")
+
+    def no_frame(*args, **kwargs):
+        raise AssertionError("built a frame")
+
+    session = type(spark)
+    monkeypatch.setattr(session, "read", property(no_frame))
+    monkeypatch.setattr(session, "range", no_frame)
+    monkeypatch.setattr(session, "createDataFrame", no_frame)
+    for base in (tmp_path / "absent", tmp_path / "cut"):
+        assert ckpt.committed_sinks(spark, str(base), "r1") == set()
+        assert merge_snapshot_path(spark, str(base), "docs") is None
