@@ -13,6 +13,11 @@ there is no mutation mid-stream: values are fixed at plan build, which
 is exactly the semantics a distributed immutable plan can honor
 (documented divergence; the reference's mid-run mutation is racy even
 there).
+
+``version`` counts ``set()`` calls. A plan built from the store's
+values is stale once it moves: ``CompiledPipeline`` rebuilds its kept
+DAG then (``set()`` also unpersists the old value's broadcast, which
+such a plan may still use).
 """
 
 from __future__ import annotations
@@ -27,9 +32,11 @@ class InternalStore:
         self._spark = spark
         self._values: dict[str, Any] = {}
         self._bc: dict[str, Any] = {}
+        self.version = 0
 
     def set(self, key: str, value: Any = None) -> None:
         self._values[key] = value
+        self.version += 1
         # invalidate any stale broadcast of the old value
         old = self._bc.pop(key, None)
         if old is not None:

@@ -324,7 +324,7 @@ def parse_syslog_prival(df: DataFrame, source_field: str = "syslog_prival",
 
     def _lookup(m: dict, key: Column) -> Column:
         # one SQL map literal: one JVM call per lookup, not one per key
-        # and per value (CompiledPipeline.run rebuilds the plan each run)
+        # and per value (each Column call costs the driver a JVM trip)
         lit = [f"{int(k)}, '{_sql_quote(str(v))}'" for k, v in m.items()]
         # unmapped ids stay numeric (reference KeyError -> pass), as
         # string; try_element_at because ANSI mode makes a missing map

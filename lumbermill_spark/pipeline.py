@@ -36,9 +36,22 @@ Engine-primitive config keys honored on every transform module
   once and ``new`` is evaluated on handled rows only. Any other module
   (rows dropped, added or aggregated, a join, a Python stage) runs as
   split -> transform -> unionByName. Either way the schema is the
-  module's columns, then the input columns it dropped;
+  module's columns, then the input columns it dropped. A module that
+  changes an input column in place to a type Spark cannot merge with the
+  old one (``parser.Url`` on ``url``: string -> struct) raises a
+  ValueError at build; its ``target_field`` writes a new column instead;
 - ``add_fields`` / ``delete_fields`` / ``set_event_type``: common
   actions applied to handled rows.
+
+Build once. ``compile_pipeline`` checks the spec and reads the input
+stage's source (its file listing is fixed from then on); it builds no
+DAG. The first ``dataframe()`` or ``run()`` of a ``CompiledPipeline``
+builds the transform DAG over that source and keeps it: a plan, no rows.
+Later calls reuse it, so a warm ``run()`` only persists the routed
+parent, writes the sinks, commits and unpersists; a run keeps no rows.
+A change of the pipeline's internal store rebuilds the DAG on the next
+call. ``dataframe(df)`` / ``run(df=...)`` build a fresh DAG over ``df``
+and leave the kept one alone.
 """
 
 from __future__ import annotations
@@ -47,7 +60,9 @@ import difflib
 import inspect
 import re
 from collections import Counter
+from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -285,7 +300,34 @@ def _optimized(df: DataFrame) -> tuple[Counter, set[int]]:
     return ops, ids
 
 
-def _as_projection(df: DataFrame, module, hit: str) -> DataFrame | None:
+@contextmanager
+def _in_place_types(name: str, df: DataFrame, out: DataFrame):
+    """Merging ``out`` (module ``name`` over ``df``'s rows) with the
+    bypassed rows fails with a ValueError, not Spark's AnalysisException
+    over hidden columns, when the module changed an input column in place
+    to a type Spark cannot merge with the old one (a string widens, a
+    struct does not)."""
+    try:
+        yield
+    except AnalysisException:
+        was = {f.name: f.dataType for f in df.schema.fields}
+        for f in out.schema.fields:
+            if was.get(f.name, f.dataType) == f.dataType:
+                continue
+            try:
+                out.selectExpr(_q(f.name)).unionByName(df.selectExpr(_q(f.name)))
+            except AnalysisException:
+                raise ValueError(
+                    f"module {name!r} under a filter changes column "
+                    f"{f.name!r} from {was[f.name].simpleString()} to "
+                    f"{f.dataType.simpleString()}, but bypassed rows keep "
+                    f"{was[f.name].simpleString()}; write the result to a "
+                    "new column with target_field") from None
+        raise
+
+
+def _as_projection(df: DataFrame, name: str, module,
+                   hit: str) -> DataFrame | None:
     """``module`` applied to the rows where the SQL predicate ``hit`` holds,
     as one projection over ``df``; None when the module is not one.
 
@@ -328,9 +370,10 @@ def _as_projection(df: DataFrame, module, hit: str) -> DataFrame | None:
         other = f" ELSE {_q(c)}" if c in old else ""
         return f"CASE WHEN {hit} THEN {new[c]}{other} END AS {_q(c)}"
 
-    res = both.selectExpr(*map(pick, cols),
-                          *[f"CASE WHEN NOT {hit} THEN {_q(c)} END AS {_q(c)}"
-                            for c in old if c not in cols])
+    with _in_place_types(name, df, out):
+        res = both.selectExpr(
+            *map(pick, cols), *[f"CASE WHEN NOT {hit} THEN {_q(c)} END AS {_q(c)}"
+                                for c in old if c not in cols])
     ops, outs = _optimized(res)
     if ops != _optimized(df)[0] or ids & outs:
         return None
@@ -352,15 +395,28 @@ def _apply_module(df: DataFrame, name: str, cfg: dict) -> DataFrame:
     pred = filter_to_sql(input_filter)
     hit = f"coalesce(({pred}), false)"
     res = _as_projection(
-        df, lambda d: _common_actions(fn(d, **cfg), common), hit)
+        df, name, lambda d: _common_actions(fn(d, **cfg), common), hit)
     if res is not None:
         return res
     handled = _common_actions(fn(df.filter(pred), **cfg), common)
-    return handled.unionByName(df.filter(f"NOT {hit}"),
-                               allowMissingColumns=True)
+    with _in_place_types(name, df, handled):
+        return handled.unionByName(df.filter(f"NOT {hit}"),
+                                   allowMissingColumns=True)
 
 
 class CompiledPipeline:
+    """A compiled stage list, its compile-time source and its sinks.
+
+    The transform DAG over the source is built once, on the first
+    ``dataframe()`` or ``run()`` (never at compile), and kept: a plan,
+    holding no rows. Later calls reuse it, so a warm ``run()`` only
+    persists the routed parent, writes the sinks and commits. The
+    source's file listing is fixed at compile; a change of the internal
+    store (``internal.set()``, its ``version`` moves) rebuilds the DAG
+    on the next call; a build that raises keeps nothing. ``df=`` builds
+    a fresh DAG over that frame and leaves the kept one alone.
+    """
+
     def __init__(self, spark: SparkSession, stages: list, sinks: list[SinkSpec],
                  source_df: DataFrame | None):
         self.spark = spark
@@ -371,12 +427,10 @@ class CompiledPipeline:
         # values set by misc.SetInternal stages (or .internal.set()) and
         # consumed by any later module config via '@internal:<key>'
         self.internal = InternalStore(spark)
+        # (internal.version after the build, the DAG over _source)
+        self._kept: tuple[int, DataFrame] | None = None
 
-    def dataframe(self, df: DataFrame | None = None) -> DataFrame:
-        """The transform DAG output (pre-routing)."""
-        cur = df if df is not None else self._source
-        if cur is None:
-            raise ValueError("pipeline has no input stage and no df given")
+    def _build(self, cur: DataFrame) -> DataFrame:
         for name, cfg in self.stages:
             if name == "misc.SetInternal":
                 self.internal.set(cfg["key"], cfg.get("value"))
@@ -384,8 +438,24 @@ class CompiledPipeline:
             cur = _apply_module(cur, name, self.internal.resolve(cfg))
         return cur
 
+    def dataframe(self, df: DataFrame | None = None) -> DataFrame:
+        """The transform DAG output (pre-routing)."""
+        if df is not None:
+            return self._build(df)
+        if self._source is None:
+            raise ValueError("pipeline has no input stage and no df given")
+        if self._kept is None or self._kept[0] != self.internal.version:
+            self._kept = None
+            out = self._build(self._source)
+            # the version after the build: SetInternal stages move it
+            self._kept = (self.internal.version, out)
+        return self._kept[1]
+
     def run(self, base: str, run_id: str | None = None, resume: bool = False,
             df: DataFrame | None = None, **route_kw) -> dict:
+        """Route the DAG output to the sinks (``route_and_write``). What
+        the write persists it unpersists before returning: no rows
+        outlive the run."""
         out = self.dataframe(df)
         if not self.sinks:
             raise ValueError("pipeline has no output stage")

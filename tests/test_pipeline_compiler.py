@@ -393,6 +393,237 @@ def test_internal_unset_key_raises(spark, ev):
 
 
 # ------------------------------------------------------------------ #
+# type changes under a filter
+
+@pytest.mark.parametrize("name,cfg,new_type", [
+    # a projection: Spark cannot resolve CASE WHEN over struct and string
+    ("parser.Url", {"source_field": "url"}, "struct<scheme:string"),
+    # split/union: UNION over array<bigint> and string
+    ("modifier.ExecPython", {"fn": lambda pdf: pdf.assign(url=[[1]] * len(pdf)),
+                             "schema": "event_type string, url array<bigint>"},
+     "array<bigint>"),
+], ids=["projection", "split_union"])
+def test_filtered_type_change_raises(spark, name, cfg, new_type):
+    df = spark.createDataFrame(
+        [("httpd_access_log", "http://a.b/c?x=1"), ("other", "zz")],
+        "event_type string, url string")
+    p = compile_pipeline(spark, [{name: {
+        **cfg, "filter": "$(event_type) == 'httpd_access_log'"}}])
+    with pytest.raises(ValueError) as err:
+        p.dataframe(df)
+    msg = str(err.value)
+    assert msg.startswith(f"module {name!r} under a filter changes column "
+                          f"'url' from string to {new_type}")
+    assert "bypassed rows keep string" in msg and "target_field" in msg
+    assert "__lms_bypass_" not in msg
+
+
+def test_filtered_type_widening_still_merges(spark):
+    # a type Spark can merge with the old one is no error: bypassed rows
+    # keep their value, widened to the common type
+    df = spark.createDataFrame([("a", "xyz"), ("b", "zz")], "kind string, url string")
+    p = compile_pipeline(spark, [{"modifier.ExecPython": {
+        "fn": lambda pdf: pdf.assign(url=pdf.url.str.len()),
+        "schema": "kind string, url bigint", "filter": "$(kind) == 'a'"}}])
+    assert sorted(tuple(r) for r in p.dataframe(df).collect()) == [
+        ("a", "3"), ("b", "zz")]
+
+
+# ------------------------------------------------------------------ #
+# build once: the DAG over the compile-time source is built on the first
+# dataframe()/run() and kept
+
+@pytest.fixture()
+def tokens(spark, tmp_path):
+    from lumbermill_spark.data.synth import synth_tokens
+
+    path = str(tmp_path / "tokens")
+    synth_tokens(spark, 600, seed=5, num_partitions=3).write.parquet(path)
+    return path
+
+
+@pytest.fixture()
+def builds(monkeypatch):
+    """Counts _apply_module calls, by module name."""
+    from collections import Counter
+
+    import lumbermill_spark.pipeline as pl
+
+    calls, real = Counter(), pl._apply_module
+
+    def counted(df, name, cfg):
+        calls[name] += 1
+        return real(df, name, cfg)
+
+    monkeypatch.setattr(pl, "_apply_module", counted)
+    return calls
+
+
+def _sink_rows(spark, base: str, sinks) -> dict:
+    out = {}
+    for s in sinks:
+        path = f"{base}/{s.name}"
+        df = (spark.read.text(path) if s.format == "text"
+              else spark.read.parquet(path))
+        out[s.name] = sorted(repr(tuple(r)) for r in df.collect())
+    return out
+
+
+def _commits(spark, base: str) -> list:
+    from lumbermill_spark.checkpoint import read_checkpoints
+
+    return sorted(
+        (r["sink"], r["rows"], r["tokens"],
+         sorted((x["partition_id"], x["rows"], x["tokens"]) for x in r["lineage"]))
+        for r in read_checkpoints(spark, base).collect())
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_warm_runs_reuse_the_built_dag(spark, tmp_path, tokens, builds):
+    import os
+    from collections import Counter
+
+    import yaml
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "examples", "flagship.yaml")) as f:
+        spec = yaml.safe_load(f)["pipeline"]
+    spec[0] = {"input.Tokens": {"path": tokens}}
+    # rows another test left cached would hide what a run keeps
+    spark.catalog.clearCache()
+    p = compile_pipeline(spark, spec)
+    assert not builds  # compile builds nothing
+    stages = [n for n, _ in p.stages]
+    got = []
+    for i in range(3):
+        base = str(tmp_path / f"run{i}")
+        p.run(base)
+        assert _cache_empty(spark)  # no rows survive a run
+        got.append((_sink_rows(spark, base, p.sinks), _commits(spark, base)))
+    assert builds == Counter(stages)  # once per stage over three runs
+    fresh = compile_pipeline(spark, spec)
+    base = str(tmp_path / "fresh")
+    fresh.run(base)
+    assert _cache_empty(spark)
+    ref = (_sink_rows(spark, base, fresh.sinks), _commits(spark, base))
+    assert sum(r for _, r, _, _ in ref[1]) == 600
+    assert got[1] == got[2] == ref
+
+
+def test_internal_change_rebuilds(spark, tmp_path, tokens, builds, monkeypatch):
+    import lumbermill_spark.pipeline as pl
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    def tag_from_broadcast(df, key):
+        # a module consuming a store value on executors
+        bc = p.internal.broadcast(key)
+        return df.mapInPandas(
+            lambda it: (pdf.assign(bc_tag=bc.value) for pdf in it),
+            StructType([*df.schema.fields, StructField("bc_tag", StringType())]))
+
+    monkeypatch.setitem(pl.TRANSFORMS, "test.BroadcastTag", tag_from_broadcast)
+    p = compile_pipeline(spark, [
+        {"input.Tokens": {"path": tokens}},
+        {"modifier.Field": {"action": "insert", "target_field": "tag",
+                            "value": "@internal:tag"}},
+        {"test.BroadcastTag": {"key": "tag"}},
+        {"output.Parquet": {"name": "out"}},
+    ])
+
+    def run(i):
+        base = str(tmp_path / f"run{i}")
+        p.run(base)
+        return {tuple(r) for r in spark.read.parquet(f"{base}/out")
+                .select("tag", "bc_tag").distinct().collect()}
+
+    p.internal.set("tag", "v1")
+    assert run(0) == {("v1", "v1")}
+    assert run(1) == {("v1", "v1")}
+    assert builds["test.BroadcastTag"] == 1
+    p.internal.set("tag", "v2")
+    assert run(2) == {("v2", "v2")}
+    assert run(3) == {("v2", "v2")}
+    assert builds["test.BroadcastTag"] == 2
+
+
+def test_set_internal_stage_does_not_force_rebuilds(spark, tokens, builds):
+    # the stage's own set() runs inside the build, before the version
+    # is recorded
+    p = compile_pipeline(spark, [
+        {"input.Tokens": {"path": tokens}},
+        {"misc.SetInternal": {"key": "run_tag", "value": "r42"}},
+        {"modifier.Field": {"action": "insert", "target_field": "tag",
+                            "value": "@internal:run_tag"}},
+    ])
+    assert p.dataframe() is p.dataframe()
+    assert builds["modifier.Field"] == 1
+    assert {r["tag"] for r in p.dataframe().select("tag").collect()} == {"r42"}
+
+
+def test_explicit_df_builds_fresh(spark, tmp_path, tokens, ev, builds):
+    p = compile_pipeline(spark, [
+        {"input.Tokens": {"path": tokens}},
+        {"modifier.Field": {"action": "insert", "target_field": "tag",
+                            "value": "t"}},
+        {"output.Parquet": {"name": "out"}},
+    ])
+    kept = p.dataframe()
+    res = p.run(str(tmp_path / "other"), df=ev)
+    assert res["out"]["rows"] == 3
+    assert sorted(r["event_id"] for r in spark.read.parquet(
+        str(tmp_path / "other" / "out")).collect()) == [1, 2, 3]
+    assert p.dataframe() is kept
+    assert builds["modifier.Field"] == 2  # the kept build, then the df= one
+
+
+def test_failed_build_keeps_nothing(spark, tokens, builds):
+    p = compile_pipeline(spark, [
+        {"input.Tokens": {"path": tokens}},
+        {"misc.Noop": {}},
+        {"modifier.Field": {"action": "insert", "target_field": "tag",
+                            "value": "@internal:nope"}},
+    ])
+    for _ in range(2):
+        with pytest.raises(KeyError, match="nope"):
+            p.dataframe()
+    assert builds["misc.Noop"] == 2
+    p.internal.set("nope", "now set")
+    assert {r["tag"] for r in p.dataframe().select("tag").collect()} == {"now set"}
+
+
+def test_rule_order_sampled_on_first_run_only(spark, tmp_path, tokens,
+                                              monkeypatch):
+    from lumbermill_spark.operators.regex_parser import RegexParser
+    from lumbermill_spark.pipelines_builtin import ACCESS_RULES
+
+    calls, real = [], RegexParser.optimize_rule_order
+
+    def counted(self, *a, **kw):
+        calls.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(RegexParser, "optimize_rule_order", counted)
+    spec = [
+        {"input.Tokens": {"path": tokens}},
+        {"parser.Regex": {"field_extraction_patterns": ACCESS_RULES,
+                          "tokens_col": "tokens", "optimize_rule_order": True,
+                          "filter": "$(source) != 'unknown'"}},
+        {"output.DevNull": {"name": "out"}},
+    ]
+    compile_pipeline(spark, spec).run(str(tmp_path / "one"))
+    one = len(calls)
+    assert one > 0
+    p = compile_pipeline(spark, spec)
+    for i in range(3):
+        p.run(str(tmp_path / f"run{i}"))
+    assert len(calls) - one == one
+
+
+# ------------------------------------------------------------------ #
 # ExecPython escape hatch (modifier/ExecPython.py analog)
 
 def test_exec_python_fn(spark, ev):
